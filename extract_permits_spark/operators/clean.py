@@ -45,16 +45,26 @@ def parse_and_display_date(c: Column | str, in_fmt: str = ISO_TS_FMT) -> Column:
 # ---------------------------------------------------------------------------
 # P4 — PIN normalize, main path: strip '-', 10-digit → +'0000', NA → ''.
 # Reference: format_pin, chicago/permit_cleaning.py:615-630.
+# Split in two so plans/permits.clean_permits can stage the stripped form
+# as a column (it feeds three branches of the final expression).
 # ---------------------------------------------------------------------------
 
 
-def format_pin(c: Column | str) -> Column:
+def strip_pin(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    stripped = F.regexp_replace(c, "-", "")
+    return F.regexp_replace(c, "-", "")
+
+
+def pad_stripped_pin(stripped: Column | str) -> Column:
+    stripped = F.col(stripped) if isinstance(stripped, str) else stripped
     padded = F.when(F.length(stripped) == 10, F.concat(stripped, F.lit("0000"))).otherwise(
         stripped
     )
     return F.coalesce(padded, F.lit(""))
+
+
+def format_pin(c: Column | str) -> Column:
+    return pad_stripped_pin(strip_pin(c))
 
 
 # ---------------------------------------------------------------------------
@@ -73,16 +83,6 @@ def normalize_pin_legacy(c: Column | str) -> Column:
         .when(F.length(d) == 9, F.concat(F.lit("0"), d, F.lit("0000")))
         .otherwise(d)
     )
-
-
-# ---------------------------------------------------------------------------
-# P6 — zero-pad to 14. Reference: chicago/permit_cleaning.py:438,446,1007.
-# ---------------------------------------------------------------------------
-
-
-def zfill_pin(c: Column | str, width: int = 14) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.lpad(c, width, "0")
 
 
 # ---------------------------------------------------------------------------
@@ -159,9 +159,16 @@ def cookviewer_link(addr: Column | str) -> Column:
     return F.when(addr.isNotNull() & (addr != ""), formula).otherwise(F.lit(""))
 
 
-def pin_detail_link(pin: Column | str) -> Column:
+# P11 split in two like P4: clean_permits stages the digits-only form,
+# which feeds both the length test and the formula.
+def pin_digits(pin: Column | str) -> Column:
     pin = F.col(pin) if isinstance(pin, str) else pin
-    digits = F.regexp_replace(pin, r"\D", "")
+    return F.regexp_replace(pin, r"\D", "")
+
+
+def pin_link_from_digits(pin: Column | str, digits: Column | str) -> Column:
+    pin = F.col(pin) if isinstance(pin, str) else pin
+    digits = F.col(digits) if isinstance(digits, str) else digits
     formula = F.format_string(
         '=HYPERLINK("%s%%s", "%%s")' % ASSESSOR_URL, digits, pin
     )
@@ -170,6 +177,10 @@ def pin_detail_link(pin: Column | str) -> Column:
         .when(F.length(digits) == 14, formula)
         .otherwise(pin)
     )
+
+
+def pin_detail_link(pin: Column | str) -> Column:
+    return pin_link_from_digits(pin, pin_digits(pin))
 
 
 # ---------------------------------------------------------------------------

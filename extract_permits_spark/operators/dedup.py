@@ -3,10 +3,10 @@
 
 Reference: deduplicate_permits chicago/permit_cleaning.py:820-883.
 
-Scale: the warehouse side is range-pruned on ``permdt`` *before* the join
-(predicate pushdown to the scan, mirroring the reference's Athena
-``WHERE permdt BETWEEN``), then the anti-join shuffles both sides on the
-7-part composite key. With AQE on, a small pruned range broadcasts instead.
+Scale: the anti-join shuffles both sides on the 7-part composite key; with
+AQE on, a small warehouse side broadcasts instead. The reference's Athena
+``WHERE permdt BETWEEN`` range belongs to whoever reads the warehouse
+table: a filter on ``existing`` pushes down to its scan.
 """
 
 from __future__ import annotations
@@ -22,56 +22,37 @@ from extract_permits_spark.operators.clean import (
 )
 from extract_permits_spark.operators.joins import anti_join_existing
 
-# canonical key column names follow the warehouse (iasworld.permit) side
+# canonical key column names follow the warehouse (iasworld.permit) side;
+# the permit frame already has an ``amount`` column, so that key joins
+# under ``amount_c``
 KEYS = ["parid", "permdt", "amount", "note2", "user21", "user28", "user43"]
+JOIN_KEYS = ["amount_c" if k == "amount" else k for k in KEYS]
 
 
-def canonicalize_for_dedup(
-    df: DataFrame,
-    pin_col: str = "pin",
-    date_col: str = "issue_date",
-    amount_col: str = "amount",
-    addr_col: str = "applicant_street_address",
-    applicant_col: str = "applicant",
-    permit_col: str = "permit_number",
-    desc_col: str = "work_description",
-) -> DataFrame:
+def canonicalize_for_dedup(df: DataFrame) -> DataFrame:
     """P13: add the 7 canonicalized key columns (reference :848-871)."""
     return (
-        df.withColumn("parid", F.col(pin_col))
-        .withColumn("permdt", canonical_permdt(date_col))
-        .withColumn("amount_key", canonical_amount(amount_col))
-        .withColumn("note2", canonical_address_note(addr_col))
-        .withColumn("user21", F.col(applicant_col))
-        .withColumn("user28", F.col(permit_col))
-        .withColumn("user43", canonical_description(desc_col))
+        df.withColumn("parid", F.col("pin"))
+        .withColumn("permdt", canonical_permdt("issue_date"))
+        .withColumn("amount_key", canonical_amount("amount"))
+        .withColumn("note2", canonical_address_note("applicant_street_address"))
+        .withColumn("user21", F.col("applicant"))
+        .withColumn("user28", F.col("permit_number"))
+        .withColumn("user43", canonical_description("work_description"))
     )
 
 
-def deduplicate_permits(
-    permits: DataFrame,
-    existing: DataFrame,
-    start_date: str | None = None,
-    end_date: str | None = None,
-) -> DataFrame:
+def deduplicate_permits(permits: DataFrame, existing: DataFrame) -> DataFrame:
     """J2: drop permits already present in the warehouse table.
 
     ``existing`` carries the warehouse column names (KEYS); ``permits`` is
-    canonicalized first. Date-range pruning of the warehouse side mirrors
-    the reference's S4 scan (chicago/permit_cleaning.py:821-836).
+    canonicalized first.
     """
     keyed = canonicalize_for_dedup(permits).withColumnRenamed("amount_key", "amount_c")
     probe = existing.select(
-        F.col("parid"),
-        F.col("permdt"),
-        F.col("amount").cast("decimal(38,2)").alias("amount_c"),
-        F.col("note2"),
-        F.col("user21"),
-        F.col("user28"),
-        F.col("user43"),
+        *[
+            F.col(k).cast("decimal(38,2)").alias(j) if k != j else F.col(k)
+            for k, j in zip(KEYS, JOIN_KEYS)
+        ]
     )
-    if start_date and end_date:
-        probe = probe.where(F.col("permdt").between(start_date, end_date))
-    keys = ["parid", "permdt", "amount_c", "note2", "user21", "user28", "user43"]
-    deduped = anti_join_existing(keyed, probe, keys)
-    return deduped.drop("amount_c", "parid", "permdt", "note2", "user21", "user28", "user43")
+    return anti_join_existing(keyed, probe, JOIN_KEYS).drop(*JOIN_KEYS)

@@ -1,15 +1,15 @@
-"""Enrichment operators (SURVEY.md §2.2 P9-P11, §2.4 J1).
+"""Enrichment operators (SURVEY.md §2.2 P9).
 
-Keyword tagging uses higher-order array functions (filter + contains) over a
-literal keyword array — fully JVM-side, no UDF, no join: at 100 TB this is
-a narrow map over the fact table.
+Keyword tagging is an unrolled when-chain of ``contains`` over one staged
+lower-cased text column — fully JVM-side, no UDF, no join: at 100 TB this
+is a narrow map over the fact table.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Assessable-keyword list, verbatim from the reference (casing and order
@@ -59,37 +59,23 @@ ASSESSABLE_KEYWORDS: list[str] = [
 ]
 
 
-def matched_keywords(
-    text: Column | str, keywords: Sequence[str] = ASSESSABLE_KEYWORDS
-) -> Column:
-    """P9: comma-join of keywords contained (case-insensitive) in ``text``,
-    in keyword-list order.
-
-    Reference: chicago/permit_cleaning.py:810-816 — per-row Python loop over
-    the keyword list; here a single higher-order ``filter`` over a literal
-    array, evaluated inside codegen.
-    """
-    text = F.col(text) if isinstance(text, str) else text
-    lowered = F.lower(F.coalesce(text, F.lit("")))
-    # unrolled when-chain instead of a higher-order filter over a literal
-    # array: HOF lambdas are interpreted per element and break whole-stage
-    # codegen — measured 2× slower on the full pipeline at sf0.1
-    parts = [
-        F.when(lowered.contains(k.lower()), F.lit(k)) for k in keywords
-    ]
-    return F.concat_ws(", ", *parts)
-
-
 def tag_keywords(
     df: DataFrame,
     text_col: str,
     out_col: str = "matched_keywords",
     keywords: Sequence[str] = ASSESSABLE_KEYWORDS,
 ) -> DataFrame:
-    """DataFrame-level P9: stages ``lower(coalesce(text,''))`` as a real
-    intermediate column so the plan carries ONE lower() instead of
-    len(keywords) inlined copies — measured 3× faster at sf0.1 (Catalyst
-    does not CSE across the 37 when-branches of the projection)."""
+    """P9: ``out_col`` = comma-join of the keywords contained
+    (case-insensitive) in ``text_col``, in keyword-list order.
+
+    Reference: chicago/permit_cleaning.py:810-816 — a per-row Python loop
+    over the keyword list. Here an unrolled when-chain: a higher-order
+    ``filter`` over a literal array interprets its lambda per element and
+    breaks whole-stage codegen (measured 2× slower on the full pipeline at
+    sf0.1). ``lower(coalesce(text,''))`` is staged as a real intermediate
+    column so the plan carries ONE lower() instead of len(keywords)
+    inlined copies — measured 3× faster at sf0.1 (Catalyst does not CSE
+    across the when-branches of the projection)."""
     lowered = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     parts = [
         F.when(F.col("_kw_lowered").contains(k.lower()), F.lit(k)) for k in keywords

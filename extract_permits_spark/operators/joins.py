@@ -1,9 +1,10 @@
 """Join operators (SURVEY.md §2.4, J1-J6).
 
 All reference joins are equi-joins against small dimensions — broadcast
-candidates. Helpers take an explicit ``broadcast_right`` knob: at 100 TB the
-PIN universe (~10^6 rows) still broadcasts, while a warehouse-sized right
-side must shuffle — AQE picks the strategy if we leave it None.
+candidates. The dimension-side helpers (J1, J3, J6) always broadcast their
+right side: at 100 TB the PIN universe (~10^6 rows) still broadcasts. The
+J2 anti-join leaves the strategy to AQE, because a warehouse-sized right
+side must shuffle.
 """
 
 from __future__ import annotations
@@ -14,12 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _maybe_broadcast(df: DataFrame, broadcast_right: bool | None) -> DataFrame:
-    if broadcast_right:
-        return F.broadcast(df)
-    return df
-
-
 def suggested_values_join(
     facts: DataFrame,
     dim: DataFrame,
@@ -27,7 +22,6 @@ def suggested_values_join(
     dim_key: str,
     dim_value: str,
     out_col: str = "suggested",
-    broadcast_right: bool | None = True,
 ) -> DataFrame:
     """J1+A2: pre-aggregate dim values per key into a sorted comma string,
     then left-join onto facts; misses → ''.
@@ -39,7 +33,7 @@ def suggested_values_join(
     (documented divergence, SURVEY §7.4.1).
 
     Scale: the aggregation shuffles on ``dim_key`` once; the join side is a
-    collapsed 1-row-per-key frame, usually broadcastable.
+    collapsed 1-row-per-key frame, broadcast.
     """
     collapsed = (
         dim.groupBy(F.col(dim_key).alias("_k"))
@@ -50,7 +44,7 @@ def suggested_values_join(
         )
     )
     joined = facts.join(
-        _maybe_broadcast(collapsed, broadcast_right),
+        F.broadcast(collapsed),
         facts[fact_key] == F.col("_k"),
         "left",
     ).drop("_k")
@@ -61,7 +55,6 @@ def anti_join_existing(
     df: DataFrame,
     existing: DataFrame,
     keys: Sequence[str],
-    broadcast_right: bool | None = None,
 ) -> DataFrame:
     """J2: multi-key anti-join (dedup vs warehouse).
 
@@ -70,9 +63,7 @@ def anti_join_existing(
     Spark's ``left_anti`` gives those semantics natively and never
     duplicates left rows, so no right-side distinct is needed.
     """
-    return df.join(
-        _maybe_broadcast(existing.select(*keys), broadcast_right), list(keys), "left_anti"
-    )
+    return df.join(existing.select(*keys), list(keys), "left_anti")
 
 
 def semi_join_membership(
@@ -81,7 +72,6 @@ def semi_join_membership(
     left_key: str,
     right_key: str,
     flag_col: str | None = None,
-    broadcast_right: bool | None = True,
 ) -> DataFrame:
     """J6: set-membership check. With ``flag_col`` None → ``left_semi``
     filter; otherwise keep all rows and add a boolean membership flag.
@@ -89,8 +79,7 @@ def semi_join_membership(
     Reference: chicago/permit_cleaning.py:438,444-448 (Python set
     membership), chicago/legacy_permits/helper.py:146-148 (isin).
     """
-    keys = universe.select(F.col(right_key).alias("_k")).distinct()
-    keys = _maybe_broadcast(keys, broadcast_right)
+    keys = F.broadcast(universe.select(F.col(right_key).alias("_k")).distinct())
     if flag_col is None:
         return df.join(keys, df[left_key] == F.col("_k"), "left_semi")
     joined = df.join(
@@ -107,7 +96,6 @@ def crosswalk_override(
     key: str,
     crosswalk_key: str,
     override_col: str,
-    broadcast_right: bool | None = True,
 ) -> DataFrame:
     """J3: left join a remapping dimension and coalesce-override the key.
 
@@ -118,5 +106,5 @@ def crosswalk_override(
     cw = crosswalk.select(
         F.col(crosswalk_key).alias("_ck"), F.col(override_col).alias("_ov")
     )
-    joined = df.join(_maybe_broadcast(cw, broadcast_right), df[key] == F.col("_ck"), "left")
+    joined = df.join(F.broadcast(cw), df[key] == F.col("_ck"), "left")
     return joined.withColumn(key, F.coalesce(F.col("_ov"), F.col(key))).drop("_ck", "_ov")

@@ -22,8 +22,6 @@ def with_validation(
     df: DataFrame,
     specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
     extra_error: Column | None = None,
-    error_col: str = "errors",
-    flag_col: str = "has_error",
 ) -> DataFrame:
     """E1+E2: add ``has_error`` boolean + ``errors`` message columns.
 
@@ -34,28 +32,25 @@ def with_validation(
     _, errors = compile_validation(specs)
     # stage the errors column first, then flag from it — each validator
     # evaluates once per row instead of twice (E4 holds by construction)
-    out = df.withColumn(error_col, errors)
-    has_error = F.col(error_col) != ""
+    out = df.withColumn("errors", errors)
+    has_error = F.col("errors") != ""
     if extra_error is not None:
         has_error = has_error | F.coalesce(extra_error, F.lit(False))
-    return out.withColumn(flag_col, has_error)
+    return out.withColumn("has_error", has_error)
 
 
 def partition_valid(
-    df: DataFrame,
-    specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
-    extra_error: Column | None = None,
-    cache: bool = False,
+    validated: DataFrame, cache: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    """E1: two-way split → (upload_df, review_df).
+    """E1: two-way split of a ``with_validation`` frame →
+    (upload_df, review_df).
 
     Reference: partition_permits chicago/permit_cleaning.py:427-452.
     Both outputs share one parent plan; ``cache=True`` persists the
     validated parent so consuming both halves scans the input once
-    (the write-side alternative is one job partitioned by bucket,
-    sinks/writers.split_write).
+    (the write-side alternative is one job partitioned by ``has_error``,
+    plans/permits.write_pipeline_partitioned).
     """
-    validated = with_validation(df, specs, extra_error)
     if cache:
         validated = validated.persist()
     upload = validated.where(~F.col("has_error")).drop("has_error", "errors")

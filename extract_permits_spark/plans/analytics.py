@@ -133,7 +133,28 @@ _CHECK_FIRST = [
 # asserts rotation_audit(_AUDIT_BASE) minus these modules ⊆ _CHECK_FIRST
 # so the transitive rule can't silently regress (VERDICT r13 #1).
 _AUDIT_BASE = "c7b7cc989caf530d978f3cda8a01a0a2d96e9a22"
-_AUDIT_HYGIENE_MODULES: set[str] = set()
+# Permit-chain consolidation (one definition per rule; dead twins, unset
+# parameters and the second/third upload-review split removed). Every
+# registry entry these edits flag — j1_preagg_join, j2_anti_join,
+# j6_semi_flag, p9_keyword_tag, permit_pipeline_upload/review,
+# xlsx_review_roundtrip — keeps a byte-identical optimized plan
+# (exprIds stripped) and identical rows at sf0.001 against the parent
+# commit, and validated_permits' plan is identical at sf0.01 with and
+# without a warehouse frame. The removed join hints/parameters each equalled the value
+# every caller used. excel_sink's behaviour change (formula cells only
+# for link columns; the universe sheet rendered by hyphenated_pin)
+# reaches no entry: xlsx_review_roundtrip imports only the unchanged
+# read_reviewed_workbook.
+_AUDIT_HYGIENE_MODULES: set[str] = {
+    "extract_permits_spark.operators.clean",
+    "extract_permits_spark.operators.dedup",
+    "extract_permits_spark.operators.enrich",
+    "extract_permits_spark.operators.joins",
+    "extract_permits_spark.operators.validate",
+    "extract_permits_spark.plans.permits",
+    "extract_permits_spark.sinks.excel_sink",
+    "extract_permits_spark.specs",
+}
 
 # r16 rotation NOTE: witness-age arithmetic is computed, not
 # hand-tallied — run `python tools/witness_ledger.py` for the

@@ -24,12 +24,16 @@ from pyspark.sql import functions as F
 from extract_permits_spark.operators.clean import (
     abbreviate,
     assemble_address,
+    cookviewer_link,
+    pad_stripped_pin,
     parse_and_display_date,
+    pin_digits,
+    pin_link_from_digits,
     round_amount,
+    strip_pin,
 )
 from extract_permits_spark.operators.dedup import deduplicate_permits
 from extract_permits_spark.operators.enrich import tag_keywords
-from extract_permits_spark.operators.clean import cookviewer_link
 from extract_permits_spark.operators.joins import (
     semi_join_membership,
     suggested_values_join,
@@ -96,17 +100,11 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
     # P4 staged: the stripped form feeds three branches of format_pin —
     # materialize it once instead of three regexp_replace evaluations per
     # row (Catalyst doesn't CSE across branches; see SCALE.md)
-    formatted = exploded.withColumn(
-        "_stripped", F.regexp_replace("solo_pin", "-", "")
-    ).withColumn(
-        "solo_pin",
-        F.coalesce(
-            F.when(
-                F.length("_stripped") == 10, F.concat("_stripped", F.lit("0000"))
-            ).otherwise(F.col("_stripped")),
-            F.lit(""),
-        ),
-    ).drop("_stripped")
+    formatted = (
+        exploded.withColumn("_stripped", strip_pin("solo_pin"))
+        .withColumn("solo_pin", pad_stripped_pin("_stripped"))
+        .drop("_stripped")
+    )
     organized = specs.organize_columns(  # P1 — registry projection + renames
         formatted,
         keep_extra=[
@@ -116,23 +114,11 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
             "cookviewer_link",
         ],
     )
+    # P11 staged: digits-only form used by both the length test and the
+    # formula — one regexp per row instead of two
     enriched = (
-        # P11 staged: digits-only form used by both the length test and the
-        # formula — one regexp per row instead of two
-        organized.withColumn("_digits", F.regexp_replace("pin", r"\D", ""))
-        .withColumn(
-            "pin_link",
-            F.when(F.col("pin").isNull() | (F.col("pin") == ""), F.lit("NO PIN FOUND"))
-            .when(
-                F.length("_digits") == 14,
-                F.format_string(
-                    '=HYPERLINK("https://www.cookcountyassessor.com/pin/%s", "%s")',
-                    F.col("_digits"),
-                    F.col("pin"),
-                ),
-            )
-            .otherwise(F.col("pin")),
-        )
+        organized.withColumn("_digits", pin_digits("pin"))
+        .withColumn("pin_link", pin_link_from_digits("pin", "_digits"))
         .drop("_digits")
     )
     # P9 is applied LAST in run_pipeline (after validation): any projection
@@ -174,12 +160,7 @@ def run_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """Full §3.1 chain → (upload_df, review_df). ``cache=True`` persists
     the validated parent so consuming both outputs costs one scan."""
-    validated = validated_permits(permits_raw, universe, existing)
-    if cache:
-        validated = validated.persist()
-    upload = validated.where(~F.col("has_error")).drop("has_error", "errors")
-    review = validated.where(F.col("has_error"))
-    return upload, review
+    return partition_valid(validated_permits(permits_raw, universe, existing), cache)
 
 
 def write_pipeline_partitioned(

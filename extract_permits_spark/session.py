@@ -44,12 +44,9 @@ def get_spark(app_name: str = "extract-permits-spark") -> SparkSession:
         # the explode, the hot stage is narrow again and Spark's default
         # (100) wins across the board: headline 31.2s -> 28.9s, pipeline
         # 9.6s -> 7.7s at sf0.1, no query regresses (SCALE.md "Codegen
-        # method size" records both measurements). Env-overridable for
-        # re-testing if the stage shapes change again.
-        .config(
-            "spark.sql.codegen.maxFields",
-            os.environ.get("SPARK_GRAFT_CODEGEN_MAXFIELDS", "100"),
-        )
+        # method size" records both measurements). A runtime SQL conf:
+        # re-test with spark.conf.set if the stage shapes change again.
+        .config("spark.sql.codegen.maxFields", "100")
         # r15 (opt): pyspark-4 DataFrame debugging decorates EVERY
         # Column/DataFrame API call with a Python stack inspection plus
         # ~3 py4j round trips (conf.get + PySparkCurrentOrigin.set/clear
@@ -65,14 +62,10 @@ def get_spark(app_name: str = "extract-permits-spark") -> SparkSession:
         # driver overhead, identical on a laptop or a 1000-executor
         # cluster (guide §5: the driver should do almost no work; §7.3:
         # planning/construction time is driver-side single-process).
-        # Env-overridable (r16, ADVICE r15): an interactive debugging
-        # session can re-enable the call-site enrichment with
-        # SPARK_GRAFT_DF_DEBUGGING=true; the production default stays
+        # An interactive debugging session can re-enable the call-site
+        # enrichment with spark.conf.set; the production default stays
         # off.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # local-mode: ALL task threads share the driver JVM heap, so this

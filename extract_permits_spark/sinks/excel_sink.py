@@ -181,11 +181,18 @@ def hyphenated_pin(c: Column | str) -> Column:
     )
 
 
-def presentation_frame(df: DataFrame, specs) -> DataFrame:
-    """Project engine columns to presentation headers in col_idx order —
-    the data-side half of save_xlsx_file."""
+# Columns that hold engine-built HYPERLINK formulas (P10 cookviewer_link,
+# P11 pin_link, plans/permits.clean_permits). Only these render as formula
+# cells: any other string is text, so source text such as a work
+# description reading "=HYPERLINK(...)" can never become a live formula.
+LINK_COLUMNS = frozenset({"cookviewer_link", "pin_link"})
+
+
+def presentation_frame(df: DataFrame, specs, *extra: Column) -> DataFrame:
+    """Project engine columns to presentation headers in col_idx order,
+    followed by ``extra`` — the data-side half of save_xlsx_file."""
     ordered = sorted(specs, key=lambda s: s.col_idx)
-    return df.select(*[F.col(s.name).alias(s.header) for s in ordered])
+    return df.select(*[F.col(s.name).alias(s.header) for s in ordered], *extra)
 
 
 def save_workbook(
@@ -193,11 +200,7 @@ def save_workbook(
     path: str,
     specs=None,
     pin_universe: DataFrame | None = None,
-    sheet_name: str = "Permits",
-    freeze_cols: int = 3,
-    freeze_rows: int = 1,
     errors_col: str | None = None,
-    ready_col: str | None = None,
     checked: bool = False,
 ) -> None:
     """S8: render a (small, already review-sized) DataFrame to a formatted
@@ -206,60 +209,53 @@ def save_workbook(
     column widths,
     autofilter, protected sheet, plus the 'Universe of Valid PINs' sheet
     with zero-padded + hyphenated PINs (save_xlsx_file,
-    chicago/permit_cleaning.py:911-1135). String cells whose value starts
-    with '=' (the engine-built HYPERLINK links, P10/P11) are written as
-    formula cells, like the reference's write_formula branch (:992-1001).
+    chicago/permit_cleaning.py:911-1135). Cells of the engine-built link
+    columns (LINK_COLUMNS, P10/P11) whose value starts with '=' are
+    written as formula cells, like the reference's write_formula branch
+    (:992-1001); every other string is written as text.
 
     Review-workbook extras (S8 presentation surface): pass ``errors_col``
     (the E2 message column) to append 'Ready' + 'Errors' presentation
     columns and emit the reference's status traffic lights
     (TRAFFIC_LIGHT_RULES, ref :1027-1053) plus per-column data validations
     from ``ColumnSpec.validation`` and the Ready-checkbox gate
-    (ref :149-157, :1055-1084). ``ready_col`` names an existing boolean
-    column for the checkbox state; otherwise every row gets ``checked``
-    (the reference's upload variant pre-checks all rows and then SKIPS the
+    (ref :149-157, :1055-1084). Every row's checkbox gets ``checked`` (the
+    reference's upload variant pre-checks all rows and then SKIPS the
     checkbox validation so Excel won't reset it on open, ref :1061-1065).
     """
     review_mode = errors_col is not None
+    # reference column layout puts Ready at col 1; engine-side the two
+    # status rails ride at the end so spec col_idx stays contiguous
+    status = (
+        [
+            F.lit(bool(checked)).alias("Ready"),
+            F.coalesce(F.col(errors_col).cast("string"), F.lit("")).alias("Errors"),
+        ]
+        if review_mode
+        else []
+    )
+    widths = None
     validation_specs: list[tuple[int, dict]] = []
     if specs is not None:
         ordered = sorted(specs, key=lambda s: s.col_idx)
-        sel = [F.col(s.name).alias(s.header) for s in ordered]
-        widths = [s.width for s in ordered]
+        widths = [s.width for s in ordered] + ([10, 40] if review_mode else [])
         validation_specs = [
             (i, s.validation)
             for i, s in enumerate(ordered)
             if getattr(s, "validation", None)
         ]
-    else:
-        sel = [F.col(c) for c in df.columns if c not in (errors_col, ready_col)]
-        widths = None
-    if review_mode:
-        # reference column layout puts Ready at col 1; engine-side the two
-        # status rails ride at the end so spec col_idx stays contiguous
-        sel.append(
-            (
-                F.coalesce(F.col(ready_col).cast("boolean"), F.lit(False))
-                if ready_col
-                else F.lit(bool(checked))
-            ).alias("Ready")
-        )
-        sel.append(
-            F.coalesce(F.col(errors_col).cast("string"), F.lit("")).alias("Errors")
-        )
-        if widths is not None:
-            widths += [10, 40]
-        df = df.select(*sel)
-    elif specs is not None:
-        df = df.select(*sel)
+        df = presentation_frame(df, specs, *status)
+    elif review_mode:
+        df = df.select(*[c for c in df.columns if c != errors_col], *status)
     header = list(df.columns)
+    links = {i for i, h in enumerate(header) if h in LINK_COLUMNS}
     rows: list[list[object]] = []
     for r in df.toPandas().itertuples(index=False):
         row: list[object] = []
-        for v in r:
+        for i, v in enumerate(r):
             if v is None or (isinstance(v, float) and v != v):
                 row.append(None)
-            elif isinstance(v, str) and v.startswith("=") and "(" in v:
+            elif i in links and isinstance(v, str) and v.startswith("=") and "(" in v:
                 row.append(Formula(v[1:]))
             elif isinstance(v, (datetime, date, bool, int, float, str)):
                 row.append(v)
@@ -299,12 +295,12 @@ def save_workbook(
 
     sheets = [
         SheetSpec(
-            name=sheet_name,
+            name="Permits",
             header=header,
             rows=rows,
             col_widths=widths,
-            freeze_cols=min(freeze_cols, len(header)),
-            freeze_rows=freeze_rows,
+            freeze_cols=min(3, len(header)),
+            freeze_rows=1,
             autofilter=True,
             protect=True,
             cond_formats=cond_formats,
@@ -312,20 +308,17 @@ def save_workbook(
         )
     ]
     if pin_universe is not None:
-        pin_rows = [
-            [str(p).zfill(14), None]
-            for (p,) in pin_universe.select(pin_universe.columns[0]).toPandas().itertuples(
-                index=False
-            )
-        ]
-        for row in pin_rows:
-            p = row[0]
-            row[1] = f"{p[0:2]}-{p[2:4]}-{p[4:7]}-{p[7:10]}-{p[10:14]}"
+        # zero-pad to 14; a longer value is kept whole, never truncated
+        pin = F.col(pin_universe.columns[0]).cast("string")
+        padded = F.when(F.length(pin) < 14, F.lpad(pin, 14, "0")).otherwise(pin)
+        universe = pin_universe.select(padded.alias("pin")).select(
+            "pin", hyphenated_pin("pin").alias("pin_hyphenated")
+        )
         sheets.append(
             SheetSpec(
                 name="Universe of Valid PINs",
                 header=["pin", "pin_hyphenated"],
-                rows=pin_rows,
+                rows=[list(r) for r in universe.toPandas().itertuples(index=False)],
                 col_widths=[16, 20],
                 protect=True,
             )

@@ -9,7 +9,6 @@ driver collection.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from extract_permits_spark.operators.windows import batch_ids
 
@@ -57,25 +56,6 @@ def cached_dimension(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(cache_path)
-
-
-def split_write(
-    df: DataFrame,
-    upload_path: str,
-    review_path: str,
-    flag_col: str = "has_error",
-) -> None:
-    """E1 partition as a single-scan write: persist the validated parent,
-    then two filtered writes (reference writes two workbooks,
-    chicago/permit_cleaning.py:1209-1230)."""
-    df = df.persist()
-    try:
-        df.where(~F.col(flag_col)).drop(flag_col).write.mode("overwrite").parquet(
-            upload_path
-        )
-        df.where(F.col(flag_col)).write.mode("overwrite").parquet(review_path)
-    finally:
-        df.unpersist()
 
 
 def write_csv_dimension(df: DataFrame, path: str) -> None:

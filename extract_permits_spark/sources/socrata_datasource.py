@@ -13,7 +13,10 @@ then
 ``pushFilters`` narrows the date window from Catalyst's filters (the SoQL
 ``$where`` the reference hand-builds, chicago/permit_cleaning.py:539-554),
 ``partitions()`` splits the window into one fetch per task, and each task
-pulls only its slice.
+pulls only its slice. The window is whole days, coarser than a filter such
+as ``issue_date < '2024-01-01'`` or ``= '2023-06-15'`` on a timestamp
+string, so every pushed filter is also handed back and Spark re-applies it
+exactly to the narrowed fetch.
 
 Offline mode (this container has no egress): ``fixture_path`` points at a
 JSON-lines file served through the same SoQL filter semantics, so the
@@ -66,26 +69,22 @@ class SocrataReader(DataSourceReader):
         self.dataset = options.get("dataset", "ydr8-5enu")
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        """Narrow the fetch window from date-column predicates; everything
-        else is returned for Spark to evaluate post-scan."""
+        """Narrow the whole-day fetch window from date-column predicates.
+        Every filter is returned: the window keeps each row a filter could
+        accept, and Spark evaluates the filters exactly post-scan."""
         for f in filters:
             col = f.attribute[0] if hasattr(f, "attribute") else None
             if col == self.date_col and isinstance(
                 f, (GreaterThan, GreaterThanOrEqual)
             ):
-                lo = str(f.value)[:10]
-                if lo > self.start:
-                    self.start = lo
+                self.start = max(self.start, str(f.value)[:10])
             elif col == self.date_col and isinstance(
                 f, (LessThan, LessThanOrEqual)
             ):
-                hi = str(f.value)[:10]
-                if hi < self.end:
-                    self.end = hi
+                self.end = min(self.end, str(f.value)[:10])
             elif col == self.date_col and isinstance(f, EqualTo):
                 self.start = self.end = str(f.value)[:10]
-            else:
-                yield f  # unsupported → Spark re-applies
+            yield f
 
     def partitions(self) -> Sequence[InputPartition]:
         return [

@@ -7,12 +7,12 @@ validation rules (in *two* kept-in-sync rails: an Excel error formula and a
 Python validator, :117-124), and presentation metadata.
 
 Here one ``ColumnSpec`` compiles to everything downstream:
-- ``StructType`` field for readers,
-- rename/projection maps (P1),
-- a Catalyst ``Column`` validation predicate (E1) and
-- a ``Column`` error message (E2) — a *single* rail, so the reference's
-  dual-rail sync contract (E4) becomes a non-issue by construction; a
-  property test still asserts predicate ⇔ message-nullity.
+- the registry projection with renames (P1, ``organize_columns``),
+- a ``Column`` error message (E2) and, derived from it, the validation
+  predicate (E1) — a *single* rail, so the reference's dual-rail sync
+  contract (E4) becomes a non-issue by construction; a property test
+  still asserts predicate ⇔ message-nullity,
+- the presentation headers, widths and cell validations of the xlsx sink.
 
 Everything compiles to pure expressions — validation of a billion rows is a
 codegen'd scan, not a Python loop.
@@ -50,9 +50,6 @@ class ColumnSpec:
     # sinks/excel_sink.save_workbook via the stdlib codec.
     validation: dict | None = None
 
-    def field_(self) -> T.StructField:
-        return T.StructField(self.name, self.dtype)
-
     def error_message(self) -> Column:
         """E2: per-column error string — concat_ws skips NULLs exactly like
         the reference's TEXTJOIN(…, TRUE, …) formula
@@ -61,13 +58,6 @@ class ColumnSpec:
             F.when(pred(F.col(self.name)), F.lit(msg)) for msg, pred in self.rules
         ]
         return F.concat_ws(", ", *parts) if parts else F.lit("")
-
-    def has_error(self) -> Column:
-        """E1: disjunction of this column's predicates."""
-        out = F.lit(False)
-        for _, pred in self.rules:
-            out = out | F.coalesce(pred(F.col(self.name)), F.lit(False))
-        return out
 
 
 # --- rule builders (each mirrors a reference validator; True ⇒ invalid) ----
@@ -297,15 +287,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
 # registry invariant: contiguous 0-based col_idx
 # (reference assert chicago/permit_cleaning.py:411-424)
 assert [s.col_idx for s in PERMIT_COLUMNS] == list(range(len(PERMIT_COLUMNS)))
-
-
-def struct_type(specs: Sequence[ColumnSpec] = PERMIT_COLUMNS) -> T.StructType:
-    return T.StructType([s.field_() for s in specs])
-
-
-def rename_map(specs: Sequence[ColumnSpec] = PERMIT_COLUMNS) -> dict[str, str]:
-    """src → canonical name (P1's city_name→src map inverted)."""
-    return {s.src: s.name for s in specs if s.src}
 
 
 def organize_columns(

@@ -855,3 +855,43 @@ def test_distributed_rank_counts_branch_reuses_range_exchange(spark):
         reused = [ln for ln in plan.splitlines() if "ReusedExchange" in ln]
         assert len(live) == 1, (name, plan)
         assert any("rangepartitioning" in ln for ln in reused), (name, plan)
+
+
+def test_permit_chain_plan_shape(spark):
+    """The §3.1 chain's staging, as ``validated_permits`` builds it over
+    the fixtures, with and without a warehouse frame to dedup against:
+    one explode; P9's lowered text staged once for all keyword branches;
+    P4's stripped PIN and P11's digits each computed by ONE
+    regexp_replace (not once per branch that reads them); both
+    universe-side joins broadcast; and a fixed exchange count. Each
+    staged piece is defined once, in operators/clean.py and
+    operators/enrich.py — this pins that composing them keeps the plan."""
+    import re
+    from decimal import Decimal
+
+    from extract_permits_spark.plans.permits import (
+        permits_from_tpch,
+        validated_permits,
+    )
+    from extract_permits_spark.sources.readers import IASWORLD_PERMIT_SCHEMA
+
+    raw, uni = permits_from_tpch(spark, SF_DIR)
+    existing = spark.createDataFrame(
+        [("00000000000001", "1996-01-02 00:00:00.000", Decimal("1.00"),
+          "1 N,,CHICAGO, IL", "O", "100000001", "x")],
+        IASWORLD_PERMIT_SCHEMA,
+    )
+    exchange = re.compile(r"^[\s:|+-]*(Exchange|BroadcastExchange|ReusedExchange)\b")
+    for ex, n_exchanges in ((None, 7), (existing, 9)):
+        qe = validated_permits(raw, uni, ex)._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        executed = qe.executedPlan().toString()
+        label = "existing" if ex is not None else "no existing"
+        assert len(re.findall(r"\bGenerate ", optimized)) == 1, label
+        assert optimized.count("lower(") == 1, label
+        assert len(re.findall(r"regexp_replace\(solo_pin#\d+, -, ", optimized)) == 1, label
+        assert len(re.findall(r"regexp_replace\(\w+#\d+, \\D, ", optimized)) == 1, label
+        assert optimized.count("rightHint=(strategy=broadcast)") == 2, label
+        assert executed.count("BroadcastHashJoin") >= 2, label
+        got = sum(1 for ln in executed.splitlines() if exchange.match(ln))
+        assert got == n_exchanges, (label, got)

@@ -57,7 +57,8 @@ def test_push_filters_narrow_window(fixture_path):
         )
     )
     assert r.start == "2023-01-01" and r.end == "2023-12-31"
-    assert len(leftover) == 1 and isinstance(leftover[0], IsNotNull)
+    # the window is whole days, so Spark re-applies every filter exactly
+    assert [type(f) for f in leftover] == [GreaterThanOrEqual, LessThan, IsNotNull]
 
 
 def test_partitions_and_read_respect_window(fixture_path):
@@ -83,6 +84,43 @@ def test_end_to_end_through_spark(spark, fixture_path):
     )
     got = sorted(r["permit_"] for r in df.collect())
     assert got == ["A", "B"]
-    # pushdown visible in the plan: no date range left as a post-scan filter
+    # the date range narrows the scan; Spark re-checks it post-scan
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PythonScan" in plan or "BatchScan" in plan
+
+
+BOUNDARY_RECS = [
+    {"permit_": "D", "issue_date": "2023-06-15T05:00:00.000", "pin_list": "1"},
+    {"permit_": "E", "issue_date": "2023-12-31T05:00:00.000", "pin_list": "2"},
+    {"permit_": "F", "issue_date": "2024-01-01T05:00:00.000", "pin_list": "3"},
+]
+
+
+@pytest.mark.parametrize(
+    "predicate",
+    [
+        "issue_date < '2024-01-01'",
+        "issue_date = '2023-06-15'",
+        "issue_date > '2023-12-31T06:00:00'",
+    ],
+)
+def test_pushed_date_filters_match_plain_json_read(spark, tmp_path, predicate):
+    """Pushed date filters narrow the fetch to whole days; the rows that
+    come back must still be exactly the rows Spark's own string
+    comparison keeps over the same file."""
+    path = str(tmp_path / "boundary.jsonl")
+    with open(path, "w") as fh:
+        for r in BOUNDARY_RECS:
+            fh.write(json.dumps(r) + "\n")
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(SocrataDataSource)
+    pushed = (
+        spark.read.format("socrata")
+        .option("fixture_path", path)
+        .option("schema_ddl", "permit_ string, issue_date string, pin_list string")
+        .load()
+        .where(predicate)
+    )
+    plain = spark.read.json(path).where(predicate)
+    want = sorted(r["permit_"] for r in plain.collect())
+    assert sorted(r["permit_"] for r in pushed.collect()) == want

@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from extract_permits_spark.operators.validate import partition_valid
 from extract_permits_spark.sinks import excel_sink, writers
 from extract_permits_spark.sources import socrata
 from extract_permits_spark.sources.readers import PERMITS_RAW_SCHEMA
@@ -64,7 +65,9 @@ def test_split_write_and_batches(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         up, rev = os.path.join(d, "up"), os.path.join(d, "rev")
-        writers.split_write(df, up, rev)
+        upload, review = partition_valid(df)
+        writers.write_canonical(upload, up)
+        writers.write_canonical(review, rev)
         assert spark.read.parquet(up).count() == 13
         assert spark.read.parquet(rev).count() == 7
         assert "has_error" not in spark.read.parquet(up).columns

@@ -56,7 +56,7 @@ def test_good_row_passes_bad_rows_partition(spark):
     bad_amount = GOOD[:3] + ("0",) + GOOD[4:]  # below lower bound
     bad_pin = ("123",) + GOOD[1:]
     df = _permits(spark, [GOOD, bad_amount, bad_pin])
-    upload, review = validate.partition_valid(df)
+    upload, review = validate.partition_valid(validate.with_validation(df))
     assert upload.count() == 1
     rev = {r["pin"]: r["errors"] for r in review.collect()}
     assert "Amount must be at least 1" in rev["12081000060000"]
@@ -65,7 +65,9 @@ def test_good_row_passes_bad_rows_partition(spark):
 
 def test_extra_error_folds_in(spark):
     df = _permits(spark, [GOOD])
-    upload, review = validate.partition_valid(df, extra_error=F.lit(True))
+    upload, review = validate.partition_valid(
+        validate.with_validation(df, extra_error=F.lit(True))
+    )
     assert upload.count() == 0 and review.count() == 1
 
 

@@ -433,6 +433,41 @@ def test_save_workbook_upload_variant_skips_ready_gate(spark):
     assert not any(v["error_title"] == "Errors not resolved" for v in got.validations)
 
 
+def test_save_workbook_source_text_never_becomes_formula(spark):
+    """Source text that looks like a formula (a work description reading
+    =HYPERLINK(...)) is written as a text cell and round-trips as that
+    string: only the engine-built link columns render as formulas."""
+    from extract_permits_spark.specs import PERMIT_COLUMNS
+
+    text = '=HYPERLINK("http://evil.example","fix permit")'
+    df = spark.createDataFrame(
+        [("12081000060000", "P12345678", "1/2/2024", "1500", "1 MAIN ST",
+          "CHICAGO, IL 60601", "A PERSON", text, "")],
+        ", ".join(f"{s.name} string" for s in PERMIT_COLUMNS) + ", errors string",
+    )
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "review.xlsx")
+        save_workbook(df, p, specs=PERMIT_COLUMNS, errors_col="errors")
+        got = read_xlsx(p, "Permits")
+        with zipfile.ZipFile(p) as zf:
+            xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    assert got.rows[0][got.header.index("Notes [NOTE1]")] == text
+    assert "<f>" not in xml
+
+
+def test_save_workbook_link_column_writes_formula(spark):
+    """The engine-built P11 ``pin_link`` value still renders as a live
+    HYPERLINK formula cell."""
+    link = '=HYPERLINK("https://www.cookcountyassessor.com/pin/12081000060000", "12081000060000")'
+    df = spark.createDataFrame([("12081000060000", link)], "pin string, pin_link string")
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "links.xlsx")
+        save_workbook(df, p)
+        with zipfile.ZipFile(p) as zf:
+            xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    assert '<f>HYPERLINK("https://www.cookcountyassessor.com/pin/' in xml
+
+
 def test_compile_data_validation_dialect_mapping():
     """Unit-level pins for the xlsxwriter-dialect -> ECMA-376 mapping:
     operator table, {COL}/{ERRORS_COL} substitution, allowBlank default,
