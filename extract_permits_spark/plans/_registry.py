@@ -156,6 +156,48 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _JACCARD_PAIRS_CACHE[key]
 
 
+def _shingle_pairs(docs: DataFrame) -> DataFrame:
+    """THE shared-shingle self-join: ``(id_a, id_b, jaccard)`` for each
+    pair id_a < id_b of ``docs(doc_id, text)`` whose distinct word
+    3-gram sets have Jaccard >= 0.2 (``jaccard`` rounded to 6 places).
+
+    Each row is shingled exactly once, into an eager scratch checkpoint
+    that the self-join, shared count and filter all read; left lazy, the
+    interpreted shingle lambda ran up to 8x per document (SCALE.md,
+    curation pair stage). The pinned partition count keeps the ~50x
+    explode and the join's map side off AQE's 1-2 coalesced partitions
+    (r13: sf0.1 edges 6-10 s starved vs 2.7-3.4 s); the checkpoint
+    keeps it."""
+    from extract_permits_spark.session import register_scratch_checkpoint
+
+    sh = (
+        docs.select("doc_id", "text")
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
+        .select("doc_id", simfn.word_shingles("text", 3).alias("shingles"))
+        .localCheckpoint(eager=True)
+    )
+    register_scratch_checkpoint(sh)
+    exploded = sh.select(
+        "doc_id", F.size("shingles").alias("sz"), F.explode("shingles").alias("sh")
+    )
+    shared = (
+        exploded.alias("a")
+        .join(exploded.alias("b"), ["sh"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("a.sz").alias("_sza"),
+            F.col("b.sz").alias("_szb"),
+        )
+        .agg(F.count(F.lit(1)).alias("_shared"))
+    )
+    jac = F.col("_shared") / (F.col("_sza") + F.col("_szb") - F.col("_shared"))
+    return shared.where(jac >= 0.2).select(
+        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
+    )
+
+
 def _collapsed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup graph edges with exact-duplicate collapse — the
     dup-heavy-crawl scale path (CCNet/Dolma-style: exact dedup BEFORE
@@ -164,22 +206,25 @@ def _collapsed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     The shared-shingle pair join is quadratic in the per-shingle posting
     length, so a corpus where each page has k exact copies pays k² on
     every bucket. Collapsing identical texts first (min doc_id per
-    md5(text) = the representative) runs the pair join on DISTINCT texts
-    only and re-attaches twins as star edges rep→twin — linear in twin
-    count. Connected components over (rep pairs ∪ twin stars) equal
-    components over the full pair graph exactly: exact twins share ALL
-    shingles (Jaccard 1.0 ≥ 0.2), so within a twin group every pair edge
-    existed, and any twin↔other edge is implied via its rep's path.
-    Twin stars are restricted to shingle-ELIGIBLE docs (≥ 1 shingle),
-    matching the old graph's node set — identical-text docs too short to
-    shingle were never nodes and must not become one.
+    md5(text) = the representative) runs the pair join (_shingle_pairs)
+    on DISTINCT texts only and re-attaches twins as star edges
+    rep→twin — linear in twin count. Connected components over (rep
+    pairs ∪ twin stars) equal components over the full pair graph
+    exactly: exact twins share ALL shingles (Jaccard 1.0 ≥ 0.2), so
+    within a twin group every pair edge existed, and any twin↔other
+    edge is implied via its rep's path.
+
+    Twin stars are restricted to shingle-ELIGIBLE docs, matching the
+    full graph's node set. Eligibility is ``size(tokens) >= 3``: equal
+    to "≥ 1 shingle" by construction (zip_ngrams is empty exactly below
+    n tokens), without building shingles outside _shingle_pairs.
 
     Measured at the 10×-amplified sf0.1 bench shape (50k docs, 9 exact
     twins each): curation composite 72 s → see BENCH; at 1× the extra
     md5 window costs ~0.1 s."""
     d = load_table(spark, sf_dir, "documents")
     eligible = d.select("doc_id", "text").where(
-        F.size(simfn.word_shingles("text", 3)) > 0
+        F.size(simfn.tokens("text")) >= 3
     )
     # groupBy, NOT Window.partitionBy(_h) (r12): the aggregate's map-side
     # partial combine collapses a k-copy flood to ~one row per mapper
@@ -198,36 +243,7 @@ def _collapsed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = reps_min.select(
         F.col("_rep").alias("doc_id"), F.col("_text").alias("text")
     )
-    # Coalesce-proof fan-out (r13, the r6 AQE finding recurring): the
-    # collapse groupBy's exchange carries COMPACT rows (distinct texts),
-    # so AQE byte-coalescing merges it to 1-2 partitions — and the ~50x
-    # shingle explode + pair-join map side below then runs on 1-2 cores
-    # (measured at sf0.1: edges 6-10 s starved vs 2.7-3.4 s with the
-    # explicit spread; identical edge set). A user-specified partition
-    # count is exempt from coalescing.
-    reps = reps.repartition(
-        reps.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    sh = reps.select(
-        "doc_id", simfn.word_shingles("text", 3).alias("shingles")
-    )
-    exploded = sh.select(
-        "doc_id", F.size("shingles").alias("sz"), F.explode("shingles").alias("sh")
-    )
-    shared = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["sh"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.sz").alias("_sza"),
-            F.col("b.sz").alias("_szb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_shared"))
-    )
-    jac = F.col("_shared") / (F.col("_sza") + F.col("_szb") - F.col("_shared"))
-    rep_pairs = shared.where(jac >= 0.2).select("id_a", "id_b")
+    rep_pairs = _shingle_pairs(reps).select("id_a", "id_b")
     twin_stars = (
         hashed.join(reps_min.select("_h", "_rep"), "_h")
         .where(F.col("doc_id") != F.col("_rep"))
@@ -320,27 +336,4 @@ def _ivf_centroids_cached(
 
 
 def _jaccard_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    sh = d.select(
-        "doc_id", simfn.word_shingles("text", 3).alias("shingles")
-    ).where(F.size("shingles") > 0)
-    exploded = sh.select(
-        "doc_id", F.size("shingles").alias("sz"), F.explode("shingles").alias("sh")
-    )
-    shared = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["sh"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.sz").alias("_sza"),
-            F.col("b.sz").alias("_szb"),
-        )
-        .agg(F.count(F.lit(1)).alias("_shared"))
-    )
-    jac = F.col("_shared") / (F.col("_sza") + F.col("_szb") - F.col("_shared"))
-    return (
-        shared.where(jac >= 0.2)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _shingle_pairs(load_table(spark, sf_dir, "documents"))

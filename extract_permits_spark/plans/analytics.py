@@ -40,90 +40,83 @@ from extract_permits_spark.sources.readers import load_table  # noqa: F401
 # round; _CHECK_FIRST controls that window and is rotated each round so
 # every entry earns a driver row (see the r9 NOTE below the list).
 _CHECK_FIRST = [
-    # r16 window: (a) the ENTIRE 28-entry r10-witness cohort leads —
+    # r17 window: (a) the ENTIRE 32-entry r11-witness cohort leads —
     # at age 5 the bound (tests/test_witness_age.py) forces every one
-    # of them in, exactly as the r15 NOTE predicted; (b) the entries
-    # this round's edits changed (rotation_audit output against
-    # _AUDIT_BASE, pinned by tests/test_rotation.py); (c) the oldest
-    # r11-witnessed entries (ledger order), filling the window to
-    # exactly 50. Witness ages are computed, not hand-tallied:
-    # python tools/witness_ledger.py.
-    # (a) the r10 cohort — oldest witnesses in the registry, all 28
-    "docs_url_dedup",
-    "emb_pq_adc_topk",
-    "emb_pq_codes",
-    "emb_quantize",
-    "ev_hopping_agg",
-    "ev_rollup",
-    "ev_session_window",
-    "j11_salted_skew_join",
-    "j7_asof_join",
-    "j8_range_join",
-    "jsonl_corrupt_quarantine",
-    "pack_sequences",
-    "sample_hash_split",
-    "sample_interleave",
-    "sample_mixture_weights",
-    "sample_stratified",
-    "sketch_approx_quantiles",
-    "sketch_hll_region_distinct",
-    "sketch_topk_tokens",
-    "stream_ann_index_ingest",
-    "stream_session_agg",
-    "stream_stateful_totals",
-    "text_clean_mask",
-    "text_repetition",
-    "u3_intersect",
-    "vocab_bpe_pairs",
-    "w5_rolling",
-    "x4_pivot",
-    # (b) changed this round (r16 optimization edits), per the
-    # transitive body-granular audit (tools/rotation_audit.py vs
-    # _AUDIT_BASE, pinned by tests/test_rotation.py):
-    # functions/similarity.py — the minhash dup-mass gate now shares
-    # its md5-groupBy pass with the collapsed branch (_dup_groups /
-    # _dup_gate_from_groups), the single-reference pre-aggregation
-    # shingle-stream checkpoints were dropped (the verifier reads
-    # explode(_shingles) from the checkpointed sh), and
-    # lsh_bands/_hamming_ball_explode backtick-quote interpolated
-    # names (ADVICE r15 — tree-identical for every internal caller);
-    # session.py — dataFrameDebugging became env-overridable
-    # (ADVICE r15; default unchanged); simhash_table's vote aggregate
-    # became the bit-packed two-lane form (same integer votes —
-    # 2·ones_i > n ⟺ Σ±1 > 0 — pinned by tests + oracle).
-    # Consumers flagged:
-    "dedup_simhash",
-    "dedup_simhash_recall",
-    "dedup_minhash_lsh",
-    "dedup_minhash_md5",
+    # of them in, as the r16 NOTE predicted; (b) the entries changed
+    # since the r16 boundary (rotation_audit output against
+    # _AUDIT_BASE minus _AUDIT_HYGIENE_MODULES, pinned by
+    # tests/test_rotation.py); (c) the oldest r12-witnessed entries
+    # (ledger order), filling the window to exactly 50. Witness ages
+    # are computed, not hand-tallied: python tools/witness_ledger.py.
+    # (a) the r11 cohort — oldest witnesses in the registry, all 32
+    "ev_cube",
+    "ev_dau_wau",
+    "ev_retention",
+    "ev_time_weighted_avg",
+    "ev_transitions",
+    "ev_variant_agg",
+    "graph_triangles",
+    "j10_null_safe_join",
+    "j7b_asof_forward",
+    "j9_fuzzy_symspell",
+    "profile_documents",
+    "q10_returned_items",
+    "q14_promo_revenue",
+    "q15_top_supplier",
+    "q17_small_quantity",
+    "q19_disjunctive",
+    "q1_incremental_maintenance",
+    "q22_idle_customers",
+    "q2_min_balance_supplier",
+    "q4_priority_exists",
+    "q6_forecast_revenue",
+    "q7_nation_trade",
+    "q8_market_share",
+    "q9_profit_by_nation",
+    "sample_weighted_per_source",
+    "sketch_cms_topk",
+    "stream_cdc_apply",
+    "stream_stream_join",
+    "w6_rank_family",
+    "x5_scd2_intervals",
+    "x6_merge_upsert",
+    "x7_date_spine",
+    # (b) changed since the r16 boundary, per the transitive
+    # body-granular audit (tools/rotation_audit.py vs _AUDIT_BASE):
+    # plans/_registry.py — the shared-shingle self-join is one helper
+    # (_shingle_pairs) that shingles each doc once into a scratch
+    # checkpoint, and _collapsed_edges' eligibility is
+    # size(tokens) >= 3 (equal to "≥ 1 shingle" by construction).
+    # Consumers flagged (graph_triangles is already in (a)):
+    "dedup_cluster_canonical",
+    "dedup_cluster_components",
     "dedup_minhash_recall",
-    "stream_neardup_ingest",
-    "docs_source_overlap_matrix",
-    "emb_cross_decontaminate",
-    "emb_neardup_components",
-    "emb_neardup_lsh",
+    "dedup_ngram_jaccard",
+    "docs_corpus_report",
+    "graph_lpa_communities",
+    "graph_pagerank",
+    "llm_corpus_curation",
+    "sample_leakage_safe_split",
+    # session.py — the SPARK_GRAFT_CODEGEN_MAXFIELDS and
+    # SPARK_GRAFT_DF_DEBUGGING env overrides became their defaults
+    # (the permit-chain consolidation)
     "stream_decontaminate_ingest",
-    "stream_semantic_decon_ingest",
-    # plans/analytics_rag.py — rag_context_assembly dropped its stale
-    # single-consumer shortlist checkpoint (r16; values oracle-matched
-    # at sf0.001+sf0.01)
-    "rag_context_assembly",
-    # (c) the oldest r11-witnessed entries (ledger order), filling to
-    # exactly 50; the rest of the r11 cohort defers to r17 where the
-    # age bound will force it.
-    "a10_regression",
-    "a11_histogram",
-    "a9_mode",
-    "dedup_winnowing",
-    "docs_dup_rate_by_source",
-    "docs_pii_redact",
-    "emb_prototypicality",
-    "ev_anomaly_zscore",
-    "ev_attribution",
+    # (c) the oldest r12-witnessed entries (ledger order) not already
+    # queued above, filling to exactly 50; the rest of the r12 cohort
+    # defers to r18 where the age bound will force it.
+    "a12_winsorize",
+    "dedup_containment",
+    "dedup_exact_keep_first",
+    "diag_skew_report",
+    "docs_bigram_xent",
+    "docs_pretrain_filter",
+    "docs_quality_bins_approx",
+    "docs_snapshot_diff",
 ]
 
-# Base ref for this round's rotation audit (r13 final commit) and the
-# modules whose r14 edits are exempt from the changed-entry rule. BUMP
+# Base ref for this round's rotation audit (the r16 boundary commit,
+# "round 16: verdict/...") and the modules whose edits since then are
+# exempt from the changed-entry rule. BUMP
 # _AUDIT_BASE to the new round-boundary sha (the driver's "round N:
 # verdict/..." commit) at the START of each builder session and clear
 # the exemptions — otherwise the audit re-flags the previous round's
@@ -132,7 +125,7 @@ _CHECK_FIRST = [
 # each needs the reason an auditor would check. tests/test_rotation.py
 # asserts rotation_audit(_AUDIT_BASE) minus these modules ⊆ _CHECK_FIRST
 # so the transitive rule can't silently regress (VERDICT r13 #1).
-_AUDIT_BASE = "c7b7cc989caf530d978f3cda8a01a0a2d96e9a22"
+_AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # Permit-chain consolidation (one definition per rule; dead twins, unset
 # parameters and the second/third upload-review split removed). Every
 # registry entry these edits flag — j1_preagg_join, j2_anti_join,
@@ -156,14 +149,14 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.specs",
 }
 
-# r16 rotation NOTE: witness-age arithmetic is computed, not
+# r17 rotation NOTE: witness-age arithmetic is computed, not
 # hand-tallied — run `python tools/witness_ledger.py` for the
 # per-entry last-green-round table, and see tests/test_witness_age.py
 # for the enforced bound: every entry whose witness would age past 5
 # rounds at the upcoming driver round must sit in this window.
-# Deferred to r17: the r11 cohort past the 22 (c) slots above (ledger
-# order from q15_top_supplier) — at age 5 next round the bound will
-# force them into the r17 window.
+# Deferred to r18: the 19 r12-witnessed entries past the (c) slots
+# above (ledger order from emb_pca_project) — at age 5 the bound will
+# force them into the r18 window.
 # The rotation rule is TRANSITIVE over helper imports and BODY-GRANULAR
 # within chunk modules: tools/rotation_audit.py <git-ref> lists every
 # registry entry whose own function body, same-chunk helper, or

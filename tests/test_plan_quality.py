@@ -816,16 +816,46 @@ def test_fanout_exchanges_pin_partition_count(spark):
     ):
         assert "REPARTITION_BY_NUM" in _plan(spark, name), name
     # the components path memoizes a checkpointed closure, so its final
-    # plan is an RDD scan — assert on the edge construction directly
+    # plan is an RDD scan — assert on the edge construction directly.
+    # The pinned exchange runs inside the shingle table's checkpoint job
+    # (_registry._shingle_pairs), so the edge plan reads its partitions:
+    # the table must keep the pinned 2 x defaultParallelism, not a
+    # coalesced 1-2
     from extract_permits_spark.plans._registry import _collapsed_edges
 
-    edges_plan = (
-        _collapsed_edges(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    parts = _checkpoint_partitions(_collapsed_edges(spark, SF_DIR))
+    assert parts == {spark.sparkContext.defaultParallelism * 2}, "_collapsed_edges"
+
+
+def _checkpoint_partitions(df) -> set[int]:
+    """Partition counts of the checkpointed (LogicalRDD) leaves df reads."""
+    out, stack = set(), [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            out.add(node.rdd().getNumPartitions())
+            continue
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def test_pair_stage_builds_shingles_only_in_its_checkpoint(spark):
+    """The shared-shingle pair stage shingles each document once, into
+    a checkpoint: the consumers' executed plans must not contain the
+    interpreted shingle builder at all. Left lazy, _collapsed_edges'
+    plan evaluated it 8 times per document (eligibility filter, the
+    inferred size > 0 filter pushed below the project, both sides of
+    the self-join, the twin-star branch) and _jaccard_pairs_uncached's
+    4 times."""
+    from extract_permits_spark.plans._registry import (
+        _collapsed_edges,
+        _jaccard_pairs_uncached,
     )
-    assert "REPARTITION_BY_NUM" in edges_plan, "_collapsed_edges"
+
+    for fn in (_collapsed_edges, _jaccard_pairs_uncached):
+        plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("lambdafunction(concat_ws") == 0, fn.__name__
 
 
 def test_distributed_rank_counts_branch_reuses_range_exchange(spark):

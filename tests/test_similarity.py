@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from extract_permits_spark.functions import similarity as sim
@@ -785,3 +786,164 @@ def test_md5_band_rows_single_pass_and_values(spark):
         (r["doc_id"], r["band_idx"], r["band_hash"]) for r in bands.collect()
     }
     assert got == expected
+
+
+# --- the shared-shingle pair helper behind _collapsed_edges and
+# _jaccard_pairs_uncached, replayed in pure Python ---------------------
+
+
+def _py_shingles(text):
+    """Python model of word_shingles(text, 3): Spark's trim strips only
+    ASCII spaces, and split(\\s+) keeps a leading/trailing empty token
+    (Java's \\s is [ \\t\\n\\x0B\\f\\r], not \\xa0)."""
+    import re
+
+    t = (text or "").lower().strip(" ")
+    toks = [] if t == "" else re.split(r"[ \t\n\x0b\f\r]+", t)
+    return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+
+def _py_jaccard_pairs(docs):
+    import itertools
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sh = {i: s for i, t in docs if (s := _py_shingles(t))}
+    out = {}
+    for a, b in itertools.combinations(sorted(sh), 2):
+        n = len(sh[a] & sh[b])
+        jac = n / (len(sh[a]) + len(sh[b]) - n)
+        if jac >= 0.2:
+            out[(a, b)] = float(
+                Decimal(repr(jac)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+            )
+    return out
+
+
+def _py_components(pairs):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(v, find(v)) for v in parent}
+
+
+def _edge_case_corpus():
+    import random
+
+    rng = random.Random(5)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    docs = [
+        (1, "p q r s t u v w"),  # 6 shingles
+        (2, "p q r s x1 x2 x3 x4"),  # shares 2 of 6 with doc 1: J = 0.2
+        (3, "p q r s y1 y2 y3 y4 y5"),  # shares 2 of 6+7: J = 2/11 < 0.2
+        (4, "\tfoo bar baz qux"),  # first shingle " foo bar" (empty token)
+        (5, "foo bar baz qux"),
+        (6, "\tfoo bar baz qux"),  # exact twin of 4
+        (7, "one two three four five"),
+        (8, "one two three four five"),  # exact twins 7, 8, 9
+        (9, "one two three four five"),
+        (10, "a b"),  # under 3 tokens, twinned: never a node
+        (11, "a b"),
+        (12, None),
+        (13, None),
+        (14, "   "),
+        (15, "ONE two  three four five "),  # case + inner/trailing blanks
+        (16, "x y z\n"),  # trailing newline: 4 tokens, last empty
+    ]
+    for i in range(17, 57):
+        n = rng.randint(0, 9)
+        sep = rng.choice([" ", "  ", "\t", " \n"])
+        docs.append((i, sep.join(rng.choice(vocab) for _ in range(n))))
+    return docs
+
+
+def test_shingle_pairs_match_python_replay(spark, tmp_path):
+    """_jaccard_pairs_uncached (ids and rounded jaccard) and the
+    components over _collapsed_edges equal a pure-Python replay on a
+    corpus of exact twins, sub-3-token texts (twinned too), null and
+    blank text, a tab-leading text and a pair exactly at J = 0.2."""
+    from extract_permits_spark.operators.graph import connected_components
+    from extract_permits_spark.plans import analytics
+
+    docs = _edge_case_corpus()
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    sf_dir = str(tmp_path)
+
+    want = _py_jaccard_pairs(docs)
+    assert want[(1, 2)] == 0.2 and (1, 3) not in want
+    assert want[(4, 6)] == 1.0 and want[(4, 5)] == round(2 / 3, 6)
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in analytics._jaccard_pairs_uncached(spark, sf_dir).collect()
+    }
+    assert got == want
+
+    comps = {
+        (r["id"], r["component"])
+        for r in connected_components(
+            analytics._collapsed_edges(spark, sf_dir)
+        ).collect()
+    }
+    assert comps == _py_components(want)
+    assert not {10, 11, 12, 13, 14} & {v for v, _ in comps}
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.text(alphabet=" \t\n\r\xa0\x0bab", min_size=0, max_size=12),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_token_count_eligibility_equals_nonempty_shingles(spark, texts):
+    """_collapsed_edges' eligibility size(tokens) >= 3 selects exactly
+    the docs with at least one 3-shingle, on whitespace-heavy text
+    (tabs, newlines, \\xa0, leading/trailing blanks)."""
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    rows = df.select(
+        (F.size(sim.tokens("t")) >= 3).alias("by_tokens"),
+        (F.size(sim.word_shingles("t", 3)) > 0).alias("by_shingles"),
+    ).collect()
+    for t, r in zip(texts, rows):
+        assert r["by_tokens"] == r["by_shingles"], repr(t)
+        assert r["by_shingles"] == bool(_py_shingles(t)), repr(t)
+
+
+def test_scratch_free_keeps_curation_memos(spark):
+    """The shingle table is a SCRATCH checkpoint: freeing scratch
+    blocks between evaluations must leave the components and Jaccard
+    pair memos collectable (neither may reference it), and must really
+    free the shingle tables."""
+    from extract_permits_spark import session
+    from extract_permits_spark.plans import _registry
+
+    sf_dir = "/root/testdata/sf0.001"
+    _registry.clear_frame_caches()
+    session.free_scratch_checkpoints()
+    comp = _registry._components_cached(spark, sf_dir)
+    pairs = _registry._jaccard_pairs_cached(spark, sf_dir)
+    shingle_ids = set()
+    for s in session._SCRATCH_CKPTS:
+        shingle_ids |= session._logical_rdd_ids(s)
+    assert len(shingle_ids) == 2  # one shingle table per memo
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    assert all(persisted.containsKey(i) for i in shingle_ids)
+    want_comp, want_pairs = sorted(comp.collect()), sorted(pairs.collect())
+
+    session.free_scratch_checkpoints()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    assert not any(persisted.containsKey(i) for i in shingle_ids)
+    assert sorted(_registry._components_cached(spark, sf_dir).collect()) == want_comp
+    assert sorted(_registry._jaccard_pairs_cached(spark, sf_dir).collect()) == want_pairs
