@@ -65,16 +65,81 @@ def test_audit_base_is_full_sha():
     assert all(c in "0123456789abcdef" for c in analytics._AUDIT_BASE)
 
 
-def test_chunk_granularity_drops_untouched_entries():
+_DEMO_CHUNK = """\
+from extract_permits_spark.plans._registry import register
+
+
+def _shared(x):
+    return x
+
+
+@register("demo_a", "SELECT 1")
+def demo_a(spark, sf_dir):
+    return _shared(1)
+
+
+@register("demo_b", "SELECT 2")
+def demo_b(spark, sf_dir):
+    return _shared(2)
+
+
+@register("demo_c", "SELECT 3")
+def demo_c(spark, sf_dir):
+    return 3
+"""
+
+
+def _git(cwd, *args) -> str:
+    return subprocess.run(
+        ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+        cwd=cwd, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+
+
+def _demo_flags(tmp_path, monkeypatch, edit) -> dict:
+    """affected_entries over a throwaway repo holding one chunk module
+    with three entries, after `edit` rewrites the chunk's source."""
+    import rotation_audit
+
+    plans = tmp_path / "extract_permits_spark" / "plans"
+    plans.mkdir(parents=True)
+    (plans / "_registry.py").write_text(
+        "def register(name, sql):\n    return lambda fn: fn\n"
+    )
+    chunk = plans / "analytics_demo.py"
+    chunk.write_text(_DEMO_CHUNK)
+    _git(tmp_path, "init", "-q")
+    _git(tmp_path, "add", ".")
+    _git(tmp_path, "commit", "-q", "-m", "base")
+    base = _git(tmp_path, "rev-parse", "HEAD")
+    chunk.write_text(edit(_DEMO_CHUNK))
+    monkeypatch.setattr(rotation_audit, "REPO", str(tmp_path))
+    return rotation_audit.affected_entries(base)
+
+
+def test_chunk_granularity_drops_untouched_entries(tmp_path, monkeypatch):
     """The r14 body-granular rule: an edit inside one chunk entry must
     not flag the chunk's unrelated entries (the pre-r14 behavior flagged
-    all ~70). Uses the round's real diff when present; vacuous (skipped)
-    on a clean tree at the base ref."""
+    all ~70). Pinned on a three-entry demo chunk, and on the round's real
+    diff whenever that diff touches a chunk module."""
     import rotation_audit
     from extract_permits_spark.plans import analytics
 
+    demo = "extract_permits_spark.plans.analytics_demo"
+    own_body = _demo_flags(
+        tmp_path / "own", monkeypatch,
+        lambda src: src.replace("return 3", "return 4"),
+    )
+    assert own_body == {"demo_c": [demo]}
+    shared_helper = _demo_flags(
+        tmp_path / "helper", monkeypatch,
+        lambda src: src.replace("return x", "return x + 0"),
+    )
+    assert shared_helper == {"demo_a": [demo], "demo_b": [demo]}
+    monkeypatch.undo()
+
     if not _ref_resolves(analytics._AUDIT_BASE):
-        pytest.skip("audit base commit not present in this clone")
+        return
     flagged = rotation_audit.affected_entries(
         analytics._AUDIT_BASE, analytics._AUDIT_HYGIENE_MODULES
     )
@@ -82,8 +147,6 @@ def test_chunk_granularity_drops_untouched_entries():
         e for e, mods in flagged.items()
         if any(m.rsplit(".", 1)[-1].startswith("analytics") for m in mods)
     ]
-    if not chunk_flagged:
-        pytest.skip("no chunk modules changed since the audit base")
     # strictly fewer than a whole chunk's membership (~55+ entries each)
     assert len(chunk_flagged) < 40, (
         "chunk edits are flagging near-whole-chunk memberships again: "
