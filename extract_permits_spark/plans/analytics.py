@@ -101,6 +101,11 @@ _CHECK_FIRST = [
     # SPARK_GRAFT_DF_DEBUGGING env overrides became their defaults
     # (the permit-chain consolidation)
     "stream_decontaminate_ingest",
+    # sources/socrata.py — partition_date_range sizes windows to at
+    # least a month (this entry's two-year pull keeps its 8 windows)
+    "s1_socrata_pull",
+    # sinks/xlsx_io.py — column-wise sheet render and atomic writes
+    "xlsx_review_roundtrip",
     # (c) the oldest r12-witnessed entries (ledger order) not already
     # queued above, filling to exactly 50; the rest of the r12 cohort
     # defers to r18 where the age bound will force it.
@@ -110,8 +115,6 @@ _CHECK_FIRST = [
     "diag_skew_report",
     "docs_bigram_xent",
     "docs_pretrain_filter",
-    "docs_quality_bins_approx",
-    "docs_snapshot_diff",
 ]
 
 # Base ref for this round's rotation audit (the r16 boundary commit,
@@ -154,9 +157,9 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
 # per-entry last-green-round table, and see tests/test_witness_age.py
 # for the enforced bound: every entry whose witness would age past 5
 # rounds at the upcoming driver round must sit in this window.
-# Deferred to r18: the 19 r12-witnessed entries past the (c) slots
-# above (ledger order from emb_pca_project) — at age 5 the bound will
-# force them into the r18 window.
+# Deferred to r18: the 21 r12-witnessed entries past the (c) slots
+# above (ledger order from docs_quality_bins_approx) — at age 5 the
+# bound will force them into the r18 window.
 # The rotation rule is TRANSITIVE over helper imports and BODY-GRANULAR
 # within chunk modules: tools/rotation_audit.py <git-ref> lists every
 # registry entry whose own function body, same-chunk helper, or

@@ -19,15 +19,15 @@ review-file cardinality (250 rows/file batch cap, S9).
 
 from __future__ import annotations
 
-from datetime import date, datetime
+from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from extract_permits_spark.sinks.xlsx_io import (
     CondFormat,
     DataValidation,
-    Formula,
     SheetSpec,
     _col_letter,
     read_xlsx,
@@ -195,6 +195,18 @@ def presentation_frame(df: DataFrame, specs, *extra: Column) -> DataFrame:
     return df.select(*[F.col(s.name).alias(s.header) for s in ordered], *extra)
 
 
+def _collect(df: DataFrame) -> pa.Table:
+    """Collect through Arrow. ``toArrow`` tags timestamps UTC; re-tag them
+    with the session time zone so cells hold session wall-clock time."""
+    table = df.toArrow()
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    for i, f in enumerate(table.schema):
+        if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+            zoned = table.column(i).cast(pa.timestamp(f.type.unit, tz))
+            table = table.set_column(i, f.name, zoned)
+    return table
+
+
 def save_workbook(
     df: DataFrame,
     path: str,
@@ -209,10 +221,12 @@ def save_workbook(
     column widths,
     autofilter, protected sheet, plus the 'Universe of Valid PINs' sheet
     with zero-padded + hyphenated PINs (save_xlsx_file,
-    chicago/permit_cleaning.py:911-1135). Cells of the engine-built link
-    columns (LINK_COLUMNS, P10/P11) whose value starts with '=' are
-    written as formula cells, like the reference's write_formula branch
-    (:992-1001); every other string is written as text.
+    chicago/permit_cleaning.py:911-1135). Both sheets are collected with
+    one Arrow pass each and rendered column by column (``xlsx_io``).
+    Cells of the engine-built link columns (LINK_COLUMNS, P10/P11) whose
+    value starts with '=' are written as formula cells, like the
+    reference's write_formula branch (:992-1001); every other string is
+    written as text.
 
     Review-workbook extras (S8 presentation surface): pass ``errors_col``
     (the E2 message column) to append 'Ready' + 'Errors' presentation
@@ -248,27 +262,15 @@ def save_workbook(
     elif review_mode:
         df = df.select(*[c for c in df.columns if c != errors_col], *status)
     header = list(df.columns)
-    links = {i for i, h in enumerate(header) if h in LINK_COLUMNS}
-    rows: list[list[object]] = []
-    for r in df.toPandas().itertuples(index=False):
-        row: list[object] = []
-        for i, v in enumerate(r):
-            if v is None or (isinstance(v, float) and v != v):
-                row.append(None)
-            elif i in links and isinstance(v, str) and v.startswith("=") and "(" in v:
-                row.append(Formula(v[1:]))
-            elif isinstance(v, (datetime, date, bool, int, float, str)):
-                row.append(v)
-            else:
-                row.append(str(v))
-        rows.append(row)
+    table = _collect(df)
+    n_rows = table.num_rows
 
     cond_formats: list[CondFormat] = []
     validations: list[DataValidation] = []
-    if review_mode and rows:  # reference gates on n_data_rows > 0 (:1028)
+    if review_mode and n_rows:  # reference gates on n_data_rows > 0 (:1028)
         errors_letter = _col_letter(header.index("Errors"))
         ready_letter = _col_letter(header.index("Ready"))
-        data_range = f"A2:{_col_letter(len(header) - 1)}{len(rows) + 1}"
+        data_range = f"A2:{_col_letter(len(header) - 1)}{n_rows + 1}"
         cond_formats = [
             CondFormat(
                 data_range,
@@ -284,12 +286,12 @@ def save_workbook(
                 v.get("value", "")
             ):
                 continue
-            validations.append(compile_data_validation(v, ci, len(rows), errors_letter))
+            validations.append(compile_data_validation(v, ci, n_rows, errors_letter))
         if not checked:
             # upload variant skips the checkbox gate (ref :1061-1065)
             validations.append(
                 compile_data_validation(
-                    READY_VALIDATION, header.index("Ready"), len(rows), errors_letter
+                    READY_VALIDATION, header.index("Ready"), n_rows, errors_letter
                 )
             )
 
@@ -297,7 +299,7 @@ def save_workbook(
         SheetSpec(
             name="Permits",
             header=header,
-            rows=rows,
+            rows=table,
             col_widths=widths,
             freeze_cols=min(3, len(header)),
             freeze_rows=1,
@@ -305,6 +307,7 @@ def save_workbook(
             protect=True,
             cond_formats=cond_formats,
             validations=validations,
+            formula_cols=frozenset(i for i, h in enumerate(header) if h in LINK_COLUMNS),
         )
     ]
     if pin_universe is not None:
@@ -318,7 +321,7 @@ def save_workbook(
             SheetSpec(
                 name="Universe of Valid PINs",
                 header=["pin", "pin_hyphenated"],
-                rows=[list(r) for r in universe.toPandas().itertuples(index=False)],
+                rows=_collect(universe),
                 col_widths=[16, 20],
                 protect=True,
             )

@@ -14,7 +14,13 @@ Writer: multiple sheets, inline strings, numbers, bools, date serials
 (numFmtId 14), formula cells, per-cell solid fills (ARGB), bold header,
 column widths, freeze panes, autofilter, sheet protection, expression
 conditional-format rules (dxf highlights; permit_cleaning.py:1027-1053),
-and dataValidation blocks (custom/textLength/date; :1055-1084).
+and dataValidation blocks (custom/textLength/date; :1055-1084). Sheet data
+renders column by column: each column is a pyarrow array (a ``pa.Table``
+sheet as collected, or a row-list sheet transposed once) whose Arrow type
+picks one cell template, and escaping, ``xml:space``, cell refs and row
+wrappers are ``pyarrow.compute`` string kernels over the whole column. The
+workbook is written to a temp file beside ``path`` and renamed into place,
+so a failed write leaves no partial file and keeps an existing one.
 
 Reader: shared strings + inline strings, numbers, bools, date serials
 (built-in date numFmtIds), formula cells, per-cell solid-fill
@@ -29,12 +35,18 @@ rows/file batches, S9) — this is presentation I/O, not a data path.
 
 from __future__ import annotations
 
+import os
 import re
+import uuid
 import zipfile
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape, quoteattr
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _NS_R = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
@@ -44,6 +56,12 @@ _NS_CT = "http://schemas.openxmlformats.org/package/2006/content-types"
 _EPOCH = datetime(1899, 12, 30)  # Excel serial epoch (1900 system)
 # built-in date/time number formats (ECMA-376 §18.8.30)
 _DATE_NUMFMT_IDS = set(range(14, 23)) | {45, 46, 47}
+_UNIX_EPOCH_SERIAL = 25569  # serial of 1970-01-01, Arrow's day zero
+# the characters str.isspace() accepts, i.e. what str.strip() removes
+_PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
 
 
 class Formula(str):
@@ -85,10 +103,15 @@ class DataValidation:
 class SheetSpec:
     name: str
     header: list[str]
-    rows: list[list[object]]  # str | int | float | bool | datetime | date | Formula | None
+    # row lists (str | int | float | bool | datetime | date | Formula |
+    # None) or a pyarrow Table with one column per header entry
+    rows: list[list[object]] | pa.Table
     col_widths: list[int | None] | None = None
     # (data_row_idx, col_idx) -> ARGB fill, 0-based over ``rows``
     fills: dict[tuple[int, int], str] = field(default_factory=dict)
+    # columns whose text cells starting with "=" and holding "(" are
+    # formula cells, written without the "=" (engine-built HYPERLINKs)
+    formula_cols: frozenset[int] = frozenset()
     freeze_cols: int = 0
     freeze_rows: int = 0
     autofilter: bool = False
@@ -210,21 +233,199 @@ class _Styles:
         )
 
 
-def _cell_xml(ref: str, value: object, style: int) -> str:
-    s = f' s="{style}"' if style else ""
-    if value is None:
-        return f'<c r="{ref}"{s}/>'
-    if isinstance(value, Formula):
-        return f'<c r="{ref}"{s}><f>{escape(str(value))}</f></c>'
-    if isinstance(value, bool):
-        return f'<c r="{ref}"{s} t="b"><v>{1 if value else 0}</v></c>'
-    if isinstance(value, (datetime, date)):
-        return f'<c r="{ref}"{s}><v>{to_serial(value)}</v></c>'
-    if isinstance(value, (int, float)):
-        return f'<c r="{ref}"{s}><v>{value}</v></c>'
-    text = escape(str(value))
-    space = ' xml:space="preserve"' if text != text.strip() else ""
-    return f'<c r="{ref}"{s} t="inlineStr"><is><t{space}>{text}</t></is></c>'
+# One column's cells as (template, values, is_date) parts: ``values`` is
+# the template-ready text of the cells the part holds and null elsewhere;
+# the parts of a column never overlap. Templates: "t" inline text, "f"
+# formula, "b" bool, "n" number (dates and timestamps as serials).
+_Part = tuple[str, pa.Array, bool]
+
+
+def _strings(values: list) -> pa.Array:
+    return pa.array(values, pa.string())
+
+
+def _arrow_parts(a: pa.Array, formula: bool = False) -> list[_Part]:
+    """Parts of one typed column; its Arrow type picks the template. NaN
+    and null cells are empty; a zoned timestamp renders its wall time in
+    its zone; types without a template render as text of their value."""
+    t = a.type
+    if pa.types.is_null(t):
+        return []
+    if pa.types.is_boolean(t):
+        return [("b", pc.if_else(a, "1", "0"), False)]
+    if pa.types.is_integer(t):
+        return [("n", a.cast(pa.string()), False)]
+    if pa.types.is_floating(t):
+        # Python's float repr, which Arrow's cast does not reproduce
+        text = [None if v is None or v != v else repr(v) for v in a.to_pylist()]
+        return [("n", _strings(text), False)]
+    if pa.types.is_date(t):
+        days = a.cast(pa.date32()).cast(pa.int32()).cast(pa.int64())
+        serial = pc.add(days, _UNIX_EPOCH_SERIAL).cast(pa.string())
+        return [("n", pc.binary_join_element_wise(serial, ".0", ""), True)]
+    if pa.types.is_timestamp(t):
+        if t.tz is not None:
+            a = pc.local_timestamp(a)
+        a = a.cast(pa.timestamp("us"), safe=False)
+        text = [None if v is None else repr(to_serial(v)) for v in a.to_pylist()]
+        return [("n", _strings(text), True)]
+    if not (pa.types.is_string(t) or pa.types.is_large_string(t)):
+        a = _strings([None if v is None else str(v) for v in a.to_pylist()])
+    if not formula:
+        return [("t", a, False)]
+    is_formula = pc.and_(pc.starts_with(a, "="), pc.match_substring(a, "("))
+    return [
+        ("f", pc.if_else(is_formula, pc.utf8_slice_codeunits(a, 1), None), False),
+        ("t", pc.if_else(is_formula, None, a), False),
+    ]
+
+
+# Python type of a row-list cell -> the Arrow type it transposes into;
+# order matters (bool is an int, datetime is a date, Formula is a str)
+_ROW_TYPES = [
+    (Formula, pa.string()),
+    (bool, pa.bool_()),
+    (datetime, pa.timestamp("us")),
+    (date, pa.date32()),
+    (int, pa.int64()),
+    (float, pa.float64()),
+    (str, pa.string()),
+]
+
+
+def _row_parts(values: list, formula: bool = False) -> list[_Part]:
+    """Transpose one row-list column into typed arrays, one per Python type
+    it holds (nulls elsewhere), and take their parts. Formula values are
+    formula cells; any other object is text of its ``str``."""
+    groups: dict[int, list] = {}
+    for ri, v in enumerate(values):
+        if v is None:
+            continue
+        k = next((k for k, (cls, _) in enumerate(_ROW_TYPES) if isinstance(v, cls)), None)
+        groups.setdefault(k, [None] * len(values))[ri] = v if k is not None else str(v)
+    parts: list[_Part] = []
+    for k, col in groups.items():
+        if k == 0:
+            parts.append(("f", _strings(col), False))
+            continue
+        typ = pa.string() if k is None else _ROW_TYPES[k][1]
+        try:
+            arr = pa.array(col, typ)
+        except OverflowError:  # an int beyond int64 is still a number
+            parts.append(("n", _strings([None if v is None else str(v) for v in col]), False))
+            continue
+        parts.extend(_arrow_parts(arr, formula and typ == pa.string()))
+    return parts
+
+
+def _escape(a: pa.Array) -> pa.Array:
+    for ch, ent in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
+        a = pc.replace_substring(a, ch, ent)
+    return a
+
+
+_TEXT_OPEN = ' t="inlineStr"><is><t>'
+_TEXT_OPEN_SPACE = ' t="inlineStr"><is><t xml:space="preserve">'
+_TEMPLATES = {
+    "f": ("><f>", "</f></c>"),
+    "b": (' t="b"><v>', "</v></c>"),
+    "n": ("><v>", "</v></c>"),
+    "t": (None, "</t></is></c>"),
+}
+
+
+def _cells(parts: list[_Part], letter: str, row_nums: pa.Array, style: pa.Array) -> pa.Array:
+    """One column's ``<c>`` elements, null for a cell with neither a value
+    nor a style (skipped). ``style`` holds each cell's ` s="N"` or ""."""
+    null = pa.scalar(None, pa.string())
+    bodies = []
+    for kind, values, _ in parts:
+        opening, closing = _TEMPLATES[kind]
+        if kind == "t":
+            padded = pc.not_equal(pc.utf8_trim(values, characters=_PY_WHITESPACE), values)
+            opening = pc.if_else(padded, _TEXT_OPEN_SPACE, _TEXT_OPEN)
+        if kind in ("t", "f"):
+            values = _escape(values)
+        bodies.append(pc.binary_join_element_wise(opening, values, closing, ""))
+    styled_empty = pc.if_else(pc.not_equal(style, ""), "/>", null)
+    body = pc.coalesce(*bodies, styled_empty)
+    return pc.binary_join_element_wise('<c r="', letter, row_nums, '"', style, body, "")
+
+
+def _style_attr(xf: int) -> str:
+    return f' s="{xf}"' if xf else ""
+
+
+def _rows_xml(columns: list[list[_Part]], first_row: int, n: int, styles: list[pa.Array]) -> str:
+    """``n`` rows from ``first_row`` on, one ``<row>`` each, empty ones too."""
+    row_nums = pa.array(np.arange(first_row, first_row + n)).cast(pa.string())
+    cells = [
+        _cells(parts, _col_letter(ci), row_nums, style)
+        for ci, (parts, style) in enumerate(zip(columns, styles))
+    ]
+    opening = pc.binary_join_element_wise('<row r="', row_nums, '">', "")
+    rows = pc.binary_join_element_wise(
+        opening, *cells, "</row>", "", null_handling="replace", null_replacement=""
+    )
+    return pc.binary_join(pa.ListArray.from_arrays([0, n], rows), "")[0].as_py()
+
+
+def _n_rows(sheet: SheetSpec) -> int:
+    return sheet.rows.num_rows if isinstance(sheet.rows, pa.Table) else len(sheet.rows)
+
+
+def _data_xml(sheet: SheetSpec, styles: _Styles) -> str:
+    """The data rows of ``sheet``, rendered column by column. Styles are
+    registered in row-major order of first use, as a cell-by-cell writer
+    would, so the style table does not depend on the render order."""
+    n_cols, n_rows = len(sheet.header), _n_rows(sheet)
+    if isinstance(sheet.rows, pa.Table):
+        columns = [
+            _arrow_parts(sheet.rows.column(ci).combine_chunks(), ci in sheet.formula_cols)
+            if ci < sheet.rows.num_columns
+            else []
+            for ci in range(n_cols)
+        ]
+    else:
+        columns = [
+            _row_parts(
+                [r[ci] if ci < len(r) else None for r in sheet.rows], ci in sheet.formula_cols
+            )
+            for ci in range(n_cols)
+        ]
+    fills = {
+        (ri, ci): f
+        for (ri, ci), f in sheet.fills.items()
+        if 0 <= ri < n_rows and 0 <= ci < n_cols
+    }
+    dated = [np.zeros(n_rows, bool) for _ in columns]  # cells holding a date
+    for mask, parts in zip(dated, columns):
+        for _, values, is_date in parts:
+            if is_date:
+                mask |= values.is_valid().to_numpy(zero_copy_only=False)
+    first_use = [(ri, ci, bool(dated[ci][ri]), f) for (ri, ci), f in fills.items()]
+    for ci, mask in enumerate(dated):
+        first = next((ri for ri in np.flatnonzero(mask) if (ri, ci) not in fills), None)
+        if first is not None:
+            first_use.append((int(first), ci, True, None))
+    for _, _, is_date, f in sorted(first_use, key=lambda u: u[:2]):
+        styles.xf(is_date=is_date, fill=f)
+    col_styles = []
+    for ci, mask in enumerate(dated):
+        filled = sorted(ri for ri, c in fills if c == ci)
+        hit = np.zeros(n_rows, bool)
+        hit[filled] = True
+        plain_dates = mask & ~hit
+        date_style = _style_attr(styles.xf(is_date=True)) if plain_dates.any() else ""
+        style = pc.if_else(pa.array(plain_dates), date_style, "")
+        if filled:
+            attrs = [
+                _style_attr(styles.xf(is_date=bool(mask[ri]), fill=fills[ri, ci]))
+                for ri in filled
+            ]
+            style = pc.replace_with_mask(style, pa.array(hit), _strings(attrs))
+        col_styles.append(style)
+    return _rows_xml(columns, 2, n_rows, col_styles)
 
 
 def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
@@ -258,25 +459,9 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
         if cols:
             parts.append(f"<cols>{cols}</cols>")
     parts.append("<sheetData>")
-    bold = styles.xf(bold=True)
-    header_cells = "".join(
-        _cell_xml(f"{_col_letter(ci)}1", h, bold) for ci, h in enumerate(sheet.header)
-    )
-    parts.append(f'<row r="1">{header_cells}</row>')
-    for ri, row in enumerate(sheet.rows):
-        xl_row = ri + 2
-        cells = []
-        for ci in range(n_cols):
-            value = row[ci] if ci < len(row) else None
-            fill = sheet.fills.get((ri, ci))
-            style = styles.xf(
-                is_date=isinstance(value, (datetime, date)),
-                fill=fill,
-            )
-            if value is None and not style:
-                continue
-            cells.append(_cell_xml(f"{_col_letter(ci)}{xl_row}", value, style))
-        parts.append(f'<row r="{xl_row}">{"".join(cells)}</row>')
+    bold = pa.array([_style_attr(styles.xf(bold=True))])
+    parts.append(_rows_xml([_row_parts([h]) for h in sheet.header], 1, 1, [bold] * n_cols))
+    parts.append(_data_xml(sheet, styles))
     parts.append("</sheetData>")
     if sheet.protect:
         parts.append(
@@ -285,7 +470,7 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
         )
     if sheet.autofilter:
         parts.append(
-            f'<autoFilter ref="A1:{_col_letter(n_cols - 1)}{len(sheet.rows) + 1}"/>'
+            f'<autoFilter ref="A1:{_col_letter(n_cols - 1)}{_n_rows(sheet) + 1}"/>'
         )
     # CT_Worksheet sequence: ... autoFilter, ..., conditionalFormatting*,
     # dataValidations — order matters for strict consumers.
@@ -329,7 +514,8 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
 
 
 def write_xlsx(path: str, sheets: list[SheetSpec]) -> None:
-    """Write a workbook. Single pass; styles deduped across sheets."""
+    """Write a workbook. Single pass; styles deduped across sheets. The
+    file appears at ``path`` whole or not at all."""
     styles = _Styles()
     sheet_xmls = [_sheet_xml(s, styles) for s in sheets]
 
@@ -383,14 +569,22 @@ def write_xlsx(path: str, sheets: list[SheetSpec]) -> None:
         "</Relationships>"
     )
 
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", root_rels)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        zf.writestr("xl/styles.xml", styles.to_xml())
-        for i, xml in enumerate(sheet_xmls):
-            zf.writestr(f"xl/worksheets/sheet{i + 1}.xml", xml)
+    directory, name = os.path.split(os.path.abspath(path))
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with zipfile.ZipFile(tmp, "x", zipfile.ZIP_DEFLATED) as zf:
+            zf.writestr("[Content_Types].xml", content_types)
+            zf.writestr("_rels/.rels", root_rels)
+            zf.writestr("xl/workbook.xml", workbook)
+            zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
+            zf.writestr("xl/styles.xml", styles.to_xml())
+            for i, xml in enumerate(sheet_xmls):
+                zf.writestr(f"xl/worksheets/sheet{i + 1}.xml", xml)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 # --------------------------------------------------------------------- #

@@ -59,10 +59,12 @@ def partition_date_range(
     start_date: str, end_date: str, num_partitions: int
 ) -> list[tuple[str, str]]:
     """Split [start, end] into ~equal disjoint windows — one HTTP pull per
-    Spark partition. The scale answer to the reference's single GET."""
+    Spark partition, the scale answer to the reference's single GET. A
+    window is at least a month long (31 days), so a one-month pull is one
+    fetch; ``num_partitions`` caps the count for long ranges."""
     s, e = date.fromisoformat(start_date), date.fromisoformat(end_date)
     days = (e - s).days + 1
-    n = max(1, min(num_partitions, days))
+    n = max(1, min(num_partitions, -(-days // 31)))
     step = days // n
     extra = days % n
     out: list[tuple[str, str]] = []

@@ -13,10 +13,21 @@ then
 ``pushFilters`` narrows the date window from Catalyst's filters (the SoQL
 ``$where`` the reference hand-builds, chicago/permit_cleaning.py:539-554),
 ``partitions()`` splits the window into one fetch per task, and each task
-pulls only its slice. The window is whole days, coarser than a filter such
-as ``issue_date < '2024-01-01'`` or ``= '2023-06-15'`` on a timestamp
-string, so every pushed filter is also handed back and Spark re-applies it
-exactly to the narrowed fetch.
+pulls only its slice. Partitions are window-sized
+(``socrata.partition_date_range``): a window of up to 31 days — the
+reference's monthly pull — is one partition and one fetch, and longer
+ranges split into month-or-longer windows, at most ``num_partitions``. The
+window is whole days, coarser than a filter such as
+``issue_date < '2024-01-01'`` or ``= '2023-06-15'`` on a timestamp string,
+so every pushed filter is also handed back and Spark re-applies it exactly
+to the narrowed fetch.
+
+Every column is a string. A JSON string value arrives decoded; any other
+JSON value (number, bool, object, array) arrives as its JSON text exactly
+as the response spells it, as ``spark.read.json`` gives for a string-typed
+field. A missing field or a JSON null is null; fields outside the schema
+are ignored. A record whose date field is not a JSON string falls outside
+every window, as an unparseable date does.
 
 Offline mode (this container has no egress): ``fixture_path`` points at a
 JSON-lines file served through the same SoQL filter semantics, so the
@@ -26,6 +37,7 @@ pushdown path is fully testable; in deployment, drop in an HTTP fetch.
 from __future__ import annotations
 
 import json
+import re
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -50,6 +62,25 @@ DEFAULT_SCHEMA = (
     "suffix string, contact_1_name string, work_description string, "
     "pin_list string"
 )
+
+
+_DECODER = json.JSONDecoder()
+_WS = re.compile(r"[ \t\n\r]*")
+
+
+def _raw_fields(text: str) -> dict[str, str]:
+    """Top-level field -> the JSON text of its value, exactly as written."""
+    out: dict[str, str] = {}
+    i = _WS.match(text, text.index("{") + 1).end()
+    while text[i] != "}":
+        key, i = json.decoder.scanstring(text, i + 1)
+        i = _WS.match(text, text.index(":", i) + 1).end()
+        _, end = _DECODER.raw_decode(text, i)
+        out[key] = text[i:end]
+        i = _WS.match(text, end).end()
+        if text[i] == ",":
+            i = _WS.match(text, i + 1).end()
+    return out
 
 
 @dataclass
@@ -94,21 +125,26 @@ class SocrataReader(DataSourceReader):
 
     def read(self, partition: DateWindow) -> Iterator[tuple]:
         names = [f.name for f in self.schema_.fields]
-        for rec in self._fetch(partition.start, partition.end):
+        for line in self._fetch(partition.start, partition.end):
+            rec = json.loads(line)
             d = rec.get(self.date_col)
             # same SoQL date-prefix semantics as the window split
-            if d is None or not (partition.start <= d[:10] <= partition.end):
+            if not isinstance(d, str) or not (partition.start <= d[:10] <= partition.end):
                 continue
-            yield tuple(
-                None if rec.get(n) is None else str(rec.get(n)) for n in names
-            )
+            values = [rec.get(n) for n in names]
+            if not all(v is None or isinstance(v, str) for v in values):
+                raw = _raw_fields(line)
+                values = [
+                    v if v is None or isinstance(v, str) else raw[n]
+                    for n, v in zip(names, values)
+                ]
+            yield tuple(values)
 
-    def _fetch(self, start: str, end: str) -> Iterator[dict]:
+    def _fetch(self, start: str, end: str) -> Iterator[str]:
+        """The response's records, one JSON object text each."""
         if self.fixture_path:
             with open(self.fixture_path) as fh:
-                for line in fh:
-                    if line.strip():
-                        yield json.loads(line)
+                yield from (line for line in fh if line.strip())
             return
         raise NotImplementedError(
             "no network egress in this environment; set fixture_path, or swap "

@@ -124,3 +124,89 @@ def test_pushed_date_filters_match_plain_json_read(spark, tmp_path, predicate):
     plain = spark.read.json(path).where(predicate)
     want = sorted(r["permit_"] for r in plain.collect())
     assert sorted(r["permit_"] for r in pushed.collect()) == want
+
+
+def _month_records(n: int = 62) -> list[dict]:
+    """Two records per day of January 2023, each with a distinct permit."""
+    return [
+        {"permit_": f"P{i:03d}", "issue_date": f"2023-01-{i // 2 + 1:02d}T05:00:00.000",
+         "pin_list": str(i)}
+        for i in range(n)
+    ] + [{"permit_": "FEB", "issue_date": "2023-02-01T05:00:00.000", "pin_list": "x"}]
+
+
+def test_month_load_is_one_partition_one_fetch(spark, tmp_path):
+    """A one-month window is one input partition; it returns the rows the
+    reader keeps when the same month is split into 8 windows."""
+    path = str(tmp_path / "month.jsonl")
+    with open(path, "w") as fh:
+        for r in _month_records():
+            fh.write(json.dumps(r) + "\n")
+    spark.dataSource.register(SocrataDataSource)
+    df = (
+        spark.read.format("socrata")
+        .option("fixture_path", path)
+        .option("schema_ddl", "permit_ string, issue_date string, pin_list string")
+        .option("start_date", "2023-01-01")
+        .option("end_date", "2023-01-31")
+        .load()
+    )
+    assert df.rdd.getNumPartitions() == 1
+    r = _reader(path, start_date="2023-01-01", end_date="2023-01-31", num_partitions="8")
+    assert len(r.partitions()) == 1
+    # the same month as eight windows of 3-4 days
+    bounds = [1, 5, 9, 13, 17, 21, 25, 29, 32]
+    windows = [
+        DateWindow(f"2023-01-{lo:02d}", f"2023-01-{hi - 1:02d}")
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+    split = sorted(row for w in windows for row in r.read(w))
+    got = sorted(tuple(row) for row in df.collect())
+    assert len(got) == 62
+    assert got == split
+
+
+DRIFT_DDL = "permit_ string, issue_date string, flag string, n string, cost string, " \
+    "meta string, pins string, note string, absent string"
+DRIFT_RECS = [
+    '{"permit_": "A", "issue_date": "2023-03-01T05:00:00.000", "flag": true, '
+    '"n": 42, "cost": 1500.50, "meta": {"k": [1, 2.50], "s": "caf\\u00e9"}, '
+    '"pins": ["1", 2], "note": null, "extra": {"x": 1}}',
+    '{"permit_": "B", "issue_date": "2023-03-02T05:00:00.000", "flag": false, '
+    '"n": -7, "cost": 1e-7, "meta": {}, "pins": [], "note": "plain text"}',
+    '{"permit_": "C", "issue_date": "2023-03-03T05:00:00.000", "flag": "yes", '
+    '"n": 12345678901234567890, "cost": "12.00", "pins": [true, null]}',
+]
+
+
+def test_non_string_json_values_match_spark_json_read(spark, tmp_path):
+    """Non-string JSON values arrive as their JSON text, missing fields as
+    null and extra fields are dropped, as spark.read.json gives them for
+    string-typed fields."""
+    path = str(tmp_path / "drift.jsonl")
+    with open(path, "w") as fh:
+        fh.write("\n".join(DRIFT_RECS) + "\n")
+    spark.dataSource.register(SocrataDataSource)
+    got = (
+        spark.read.format("socrata")
+        .option("fixture_path", path)
+        .option("schema_ddl", DRIFT_DDL)
+        .load()
+    )
+    want = spark.read.schema(DRIFT_DDL).json(path)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+    flags = {r["permit_"]: r["flag"] for r in got.collect()}
+    assert flags == {"A": "true", "B": "false", "C": "yes"}
+
+
+def test_non_string_issue_date_is_outside_every_window(tmp_path):
+    """A date that is not a JSON string is dropped like an unparseable
+    one, instead of failing the task."""
+    path = str(tmp_path / "dates.jsonl")
+    with open(path, "w") as fh:
+        for d in (20230115, True, None, {"d": "2023-01-15"}, "2023-01-15T00:00:00"):
+            fh.write(json.dumps({"permit_": repr(d), "issue_date": d}) + "\n")
+    r = _reader(path, start_date="2023-01-01", end_date="2023-01-31")
+    rows = [row for p in r.partitions() for row in r.read(p)]
+    assert [row[0] for row in rows] == ["'2023-01-15T00:00:00'"]

@@ -34,6 +34,32 @@ def test_partition_date_range_disjoint_cover():
     assert total == 90
 
 
+@pytest.mark.parametrize(
+    "start, end, n",
+    [
+        ("2018-02-01", "2018-02-28", 1),  # 28-day month
+        ("2018-04-01", "2018-04-30", 1),  # 30-day month
+        ("2018-01-01", "2018-01-31", 1),  # 31-day month
+        ("2018-01-15", "2018-02-14", 1),  # 31 days across a month boundary
+        ("2018-01-15", "2018-02-15", 2),  # 32 days
+        ("2018-01-01", "2018-12-31", 8),  # a year, capped at 8
+        ("1900-01-01", "3000-01-01", 8),  # the reader's unbounded default
+        ("2018-01-01", "2018-01-01", 1),  # one day
+        ("1995-01-01", "1996-12-31", 8),  # s1_socrata_pull's window
+    ],
+)
+def test_partition_date_range_window_sized(start, end, n):
+    parts = socrata.partition_date_range(start, end, 8)
+    assert len(parts) == n
+    assert parts[0][0] == start and parts[-1][1] == end
+    days = [socrata.date.fromisoformat(d) for w in parts for d in w]
+    for hi, lo in zip(days[1::2], days[2::2]):
+        assert (lo - hi).days == 1  # disjoint and gap-free
+    assert all(lo <= hi for lo, hi in zip(days[::2], days[1::2]))
+    spans = [(hi - lo).days + 1 for lo, hi in zip(days[::2], days[1::2])]
+    assert max(spans) - min(spans) <= 1  # ~equal windows
+
+
 def test_read_socrata_distributed_pull(spark):
     recs = [
         {"permit_": "A", "issue_date": "2023-02-01T00:00:00.000", "pin_list": "1 | 2"},

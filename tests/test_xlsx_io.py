@@ -506,3 +506,41 @@ def test_compile_data_validation_dialect_mapping():
 
     with pytest.raises(ValueError, match="unsupported validation dialect"):
         compile_data_validation({"validate": "list", "value": "a,b"}, 0, 1)
+
+
+def test_save_workbook_timestamps_keep_session_wall_time(spark):
+    """Arrow collects timestamps as UTC instants; the sink writes the
+    session's wall-clock time, the serial of the value the session shows."""
+    from pyspark.sql import functions as F
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
+    try:
+        df = spark.createDataFrame([("2024-03-10 01:30:00",), (None,)], "t string").select(
+            F.to_timestamp("t").alias("ts"), F.to_date("t").alias("d")
+        )
+        shown = df.toPandas()
+        with tempfile.TemporaryDirectory() as d:
+            p = os.path.join(d, "ts.xlsx")
+            save_workbook(df, p)
+            with zipfile.ZipFile(p) as zf:
+                xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert shown["ts"][0] == datetime(2024, 3, 10, 1, 30)
+    want_ts = to_serial(datetime(2024, 3, 10, 1, 30))
+    want_d = to_serial(date(2024, 3, 10))
+    assert f"<v>{want_ts}</v>" in xml and f"<v>{want_d}</v>" in xml
+    assert '<row r="3"></row>' in xml  # the null row stays empty
+
+
+def test_save_workbook_nullable_int_stays_integer(spark):
+    """A nullable integer column is written as integers (1500), not
+    upcast to float (1500.0)."""
+    df = spark.createDataFrame([(1500,), (None,)], "amount int")
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "ints.xlsx")
+        save_workbook(df, p)
+        with zipfile.ZipFile(p) as zf:
+            xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    assert '<c r="A2"><v>1500</v></c>' in xml
