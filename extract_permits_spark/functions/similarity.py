@@ -158,20 +158,6 @@ def winnow_pairs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """Array of ``num_hashes`` min-hashes; empty shingle set → NULL entries.
-
-    One xxhash64 per (shingle, seed) — k independent permutations
-    approximated by seeded hashes, the standard MinHash construction.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed))))
-            for seed in range(num_hashes)
-        ]
-    )
-
-
 def _quote_ident(name: str) -> str:
     """Backtick-quote a (possibly dot-qualified) column name for SQL-text
     interpolation, one segment at a time — ``_b.sig`` → `` `_b`.`sig` ``

@@ -40,7 +40,7 @@ def bpe_token_estimate(text: Column | str, chars_per_token: float = 4.0) -> Colu
 
 
 # ---------------------------------------------------------------------------
-# Quality scoring: length / punctuation / stopword / alpha ratios.
+# Quality signals: stopword / alpha ratios and mean word length.
 # ---------------------------------------------------------------------------
 
 EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "that", "it", "for"]
@@ -53,15 +53,6 @@ def alpha_ratio(text: Column | str) -> Column:
     letters = F.length(F.regexp_replace(t, "[^A-Za-z]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(
         F.round(letters.cast("double") / n.cast("double"), 6)
-    )
-
-
-def punct_ratio(text: Column | str) -> Column:
-    t = F.coalesce(_c(text), F.lit(""))
-    n = F.length(t)
-    punct = F.length(t) - F.length(F.regexp_replace(t, r"[\.,;:!\?'\"()\[\]{}-]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.round(punct.cast("double") / n.cast("double"), 6)
     )
 
 
@@ -85,16 +76,6 @@ def mean_word_length(text: Column | str) -> Column:
     total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(n == 0, F.lit(0.0)).otherwise(
         F.round(total.cast("double") / n.cast("double"), 6)
-    )
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length window + stopword presence
-    + alpha density. Deterministic, tunable; 6-dp double."""
-    n = char_count(text)
-    length_ok = F.when((n >= 50) & (n <= 20000), F.lit(1.0)).otherwise(F.lit(0.0))
-    return F.round(
-        0.4 * length_ok + 0.3 * stopword_ratio(text) + 0.3 * alpha_ratio(text), 6
     )
 
 
@@ -197,20 +178,6 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     return zip_ngrams(toks, n)
 
 
-def dup_token_fraction(text: Column | str) -> Column:
-    """Fraction of whitespace tokens that are repeats of an earlier token
-    (1 − distinct/total); 0.0 for empty. Normalization (trim/lower/``\\s+``)
-    matches the similarity family so the DuckDB twin reproduces it."""
-    from extract_permits_spark.functions.similarity import tokens
-
-    toks = tokens(_c(text))
-    n = F.size(toks)
-    d = F.size(F.array_distinct(toks))
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.round((n - d).cast("double") / n.cast("double"), 6)
-    )
-
-
 def dup_line_fraction(text: Column | str) -> Column:
     """Gopher duplicate-line filter: fraction of non-empty lines that are
     exact repeats of an earlier line."""
@@ -242,25 +209,6 @@ def _max_equal_run(sorted_arr: Column) -> Column:
         )
 
     return F.aggregate(sorted_arr, init, step, lambda acc: acc["best"])
-
-
-def top_ngram_fraction(text: Column | str, n: int = 2) -> Column:
-    """Share of a document's word n-grams taken by its single most frequent
-    n-gram — the Gopher "top n-gram fraction" repetition signal. Sort the
-    gram array once, then one linear max-run pass: O(len·log len) per
-    document, still a narrow codegen'd scan with no shuffle.
-
-    NOTE: as a standalone Column this re-derives the token array inside
-    each lambda reference; for multi-metric scans use
-    ``repetition_metrics`` (staged projections, measured 16× faster)."""
-    from extract_permits_spark.functions.similarity import tokens
-
-    toks = tokens(_c(text))
-    grams = _word_ngrams(toks, n)
-    frac = _max_equal_run(F.array_sort(grams)).cast("double") / F.size(
-        grams
-    ).cast("double")
-    return F.when(F.size(grams) == 0, F.lit(0.0)).otherwise(F.round(frac, 6))
 
 
 def repetition_metrics(df, id_col: str = "doc_id", text_col: str = "text"):

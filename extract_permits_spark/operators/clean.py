@@ -251,18 +251,6 @@ def drop_blocklisted_pins(df: DataFrame, pin_col: str = "pin") -> DataFrame:
     return df.where(F.col(pin_col) != ZERO_PIN)
 
 
-# ---------------------------------------------------------------------------
-# P14 — conditional column override via coalesce.
-# Reference: chicago/legacy_permits/2023/format_legacy_2023.R:69-73,41-42.
-# ---------------------------------------------------------------------------
-
-
-def override_with(primary: Column | str, fallback: Column | str) -> Column:
-    primary = F.col(primary) if isinstance(primary, str) else primary
-    fallback = F.col(fallback) if isinstance(fallback, str) else fallback
-    return F.coalesce(primary, fallback)
-
-
 # Excel serial date decode (origin 1899-12-30).
 # Reference: chicago/legacy_permits/2023/format_legacy_2023.R:35-39.
 def excel_serial_to_date(c: Column | str) -> Column:

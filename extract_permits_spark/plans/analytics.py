@@ -101,8 +101,10 @@ _CHECK_FIRST = [
     # SPARK_GRAFT_DF_DEBUGGING env overrides became their defaults
     # (the permit-chain consolidation)
     "stream_decontaminate_ingest",
-    # sources/socrata.py — partition_date_range sizes windows to at
-    # least a month (this entry's two-year pull keeps its 8 windows)
+    # plans/analytics_core.py — reads through a function-local
+    # SocrataReader subclass instead of an RDD of fetches;
+    # partition_date_range sizes windows to at least a month (this
+    # entry's two-year pull keeps its 8 windows)
     "s1_socrata_pull",
     # sinks/xlsx_io.py — column-wise sheet render and atomic writes
     "xlsx_review_roundtrip",

@@ -1,7 +1,7 @@
 """Socrata as a Spark 4 Python DataSource with real filter pushdown (S1).
 
-The idiomatic DSv2-style packaging of sources/socrata.py: register once,
-then
+The one Socrata reader (the SoQL shape and the window split live in
+sources/socrata.py): register once, then
 
     spark.dataSource.register(SocrataDataSource)
     spark.read.format("socrata")
@@ -29,9 +29,11 @@ field. A missing field or a JSON null is null; fields outside the schema
 are ignored. A record whose date field is not a JSON string falls outside
 every window, as an unparseable date does.
 
-Offline mode (this container has no egress): ``fixture_path`` points at a
-JSON-lines file served through the same SoQL filter semantics, so the
-pushdown path is fully testable; in deployment, drop in an HTTP fetch.
+Offline mode (no network egress): ``fixture_path`` points at a JSON-lines
+file served through the same SoQL filter semantics, so the pushdown path
+is fully testable. ``SocrataReader._fetch(start, end)`` is the seam for
+the HTTP GET: a subclass overrides it (``s1_socrata_pull`` serves each
+window from a parquet file this way).
 """
 
 from __future__ import annotations
@@ -97,7 +99,6 @@ class SocrataReader(DataSourceReader):
         self.end = options.get("end_date", "3000-01-01")
         self.num_partitions = int(options.get("num_partitions", "8"))
         self.fixture_path = options.get("fixture_path")
-        self.dataset = options.get("dataset", "ydr8-5enu")
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         """Narrow the whole-day fetch window from date-column predicates.

@@ -104,9 +104,11 @@ def test_registry_chunks_import_standalone():
     driver-side test stays green (s1_socrata_pull's Python datasource
     found this the hard way). Subprocesses, not importlib: the point is
     a COLD sys.modules."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     for mod in (
         "extract_permits_spark.plans._registry",
         "extract_permits_spark.plans.analytics_core",
@@ -120,6 +122,6 @@ def test_registry_chunks_import_standalone():
             [sys.executable, "-c", f"import {mod}"],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=repo,
         )
         assert r.returncode == 0, f"{mod} failed standalone import:\n{r.stderr[-2000:]}"

@@ -210,3 +210,26 @@ def test_non_string_issue_date_is_outside_every_window(tmp_path):
     r = _reader(path, start_date="2023-01-01", end_date="2023-01-31")
     rows = [row for p in r.partitions() for row in r.read(p)]
     assert [row[0] for row in rows] == ["'2023-01-15T00:00:00'"]
+
+
+def test_s1_socrata_pull_reads_through_data_source(spark):
+    """The registry's S1 entry loads through a SocrataReader subclass: the
+    two-year window is 8 partitions, and its rows are the orders in that
+    window, formatted as the Socrata records the fetch serves."""
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR
+    from extract_permits_spark.plans.analytics_core import s1_socrata_pull
+
+    df = s1_socrata_pull(spark, SF_DIR)
+    assert df.rdd.getNumPartitions() == 8
+    orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
+    want = orders.where(
+        F.date_format("o_orderdate", "yyyy-MM-dd").between("1995-01-01", "1996-12-31")
+    ).select(
+        F.col("o_orderkey").cast("string").alias("permit_"),
+        F.date_format("o_orderdate", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("issue_date"),
+        F.col("o_totalprice").cast("string").alias("reported_cost"),
+    )
+    got = sorted(tuple(r) for r in df.collect())
+    assert got and got == sorted(tuple(r) for r in want.collect())

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
@@ -12,6 +13,10 @@ from extract_permits_spark.operators.validate import partition_valid
 from extract_permits_spark.sinks import excel_sink, writers
 from extract_permits_spark.sources import socrata
 from extract_permits_spark.sources.readers import PERMITS_RAW_SCHEMA
+from extract_permits_spark.sources.socrata_datasource import (
+    SocrataDataSource,
+    SocrataReader,
+)
 
 
 def test_build_soql_matches_reference_shape():
@@ -66,23 +71,28 @@ def test_read_socrata_distributed_pull(spark):
         {"permit_": "B", "issue_date": "2023-05-01T00:00:00.000", "pin_list": None},
         {"permit_": "C", "issue_date": "2024-01-01T00:00:00.000", "pin_list": "3"},
     ]
-    df = socrata.read_socrata(
-        spark,
-        "ydr8-5enu",
-        "issue_date",
-        "2023-01-01",
-        "2023-12-31",
-        PERMITS_RAW_SCHEMA,
-        fetch=socrata.fake_fetch_from_records(recs),
-        num_partitions=3,
-    )
-    got = sorted(r["permit_"] for r in df.collect())
-    assert got == ["A", "B"]  # C filtered out by pushed-down date range
+    spark.dataSource.register(SocrataDataSource)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "recs.jsonl")
+        with open(path, "w") as fh:
+            fh.writelines(json.dumps(r) + "\n" for r in recs)
+        df = (
+            spark.read.format("socrata")
+            .option("fixture_path", path)
+            .option("start_date", "2023-01-01")
+            .option("end_date", "2023-12-31")
+            .option("num_partitions", "3")
+            .load()
+        )
+        assert df.rdd.getNumPartitions() == 3
+        got = sorted(r["permit_"] for r in df.collect())
+    assert got == ["A", "B"]  # C is outside every date window
 
 
 def test_default_fetch_is_stubbed():
+    reader = SocrataReader(PERMITS_RAW_SCHEMA, {})
     with pytest.raises(NotImplementedError):
-        socrata.default_fetch("http://x", {})
+        list(reader.read(reader.partitions()[0]))
 
 
 def test_split_write_and_batches(spark):
