@@ -68,7 +68,6 @@ def legacy_flag_columns(
     name_col: str = "applicant",
     in_universe_col: str | None = "in_universe",
     dup_col: str | None = "is_duplicate",
-    filled_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """E3: legacy path's boolean flag columns + conjunction → valid_row.
 
@@ -103,11 +102,6 @@ def legacy_flag_columns(
         # pandas' notnull() fails it — both engines mark it invalid
         "valid_amount": amount.isNotNull() & (amount < 2147483647),
     }
-    if filled_cols:
-        filled = F.lit(True)
-        for fc in filled_cols:
-            filled = filled & c(fc).isNotNull()
-        flags["valid_filled"] = filled
     if in_universe_col is not None:
         flags["valid_universe"] = F.coalesce(c(in_universe_col), F.lit(False))
     if dup_col is not None:

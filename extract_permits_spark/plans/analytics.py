@@ -143,6 +143,16 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # for link columns; the universe sheet rendered by hyphenated_pin)
 # reaches no entry: xlsx_review_roundtrip imports only the unchanged
 # read_reviewed_workbook.
+# The single-shape xlsx sink edits are value-neutral as well: specs'
+# ColumnSpec.fmt and .warehouse_name were read nowhere, validate's
+# legacy_flag_columns(filled_cols=) was passed by no caller, and the
+# validation dicts (specs, excel_sink.READY_VALIDATION) now hold the
+# <dataValidation> fields the deleted dialect compiler produced from
+# them. The entries these edits flag — e3_legacy_flags,
+# permit_pipeline_upload/review, xlsx_review_roundtrip — keep an
+# identical optimized plan (exprIds stripped, sf0.001) and match their
+# oracles at sf0.01, and the upload and review workbooks of four
+# perfbench months (seed 7) are cmp-equal to the parent commit's.
 _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.clean",
     "extract_permits_spark.operators.dedup",

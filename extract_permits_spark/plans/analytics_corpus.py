@@ -141,11 +141,10 @@ def xlsx_review_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reviewer-selected" rows with the reference's yellow flag fill (S7),
     re-ingest values + fills (S6), and emit the flag partition. The file is
     driver-side by contract — review workbooks are 250-row-batched (S9) —
-    so the bounded ``limit(200).toPandas()`` is the operator's semantics,
+    so the bounded ``limit(200).toArrow()`` is the operator's semantics,
     not a scale shortcut; everything before/after the file hop is
     distributed."""
     import os
-    import tempfile
 
     from extract_permits_spark.sinks.excel_sink import read_reviewed_workbook
     from extract_permits_spark.sinks.xlsx_io import (
@@ -167,21 +166,21 @@ def xlsx_review_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .isin("0", "1", "2")
             .alias("flag"),
         )
-        .toPandas()
+        .toArrow()
     )
-    rows = [[int(r.doc_id), str(r.source)] for r in review.itertuples(index=False)]
+    n = review.num_rows
     fills = {
         (i, 0): "FFFFFF00"  # reviewer's yellow on the id cell
-        for i, r in enumerate(review.itertuples(index=False))
-        if r.flag
+        for i, flag in enumerate(review.column("flag").to_pylist())
+        if flag
     }
     path = os.path.join(scratch_dir("xlsx_rt_"), "review.xlsx")
     # S8 presentation extras ride the same gate: a traffic-light cfRule and
     # a data-validation block (reference permit_cleaning.py:1027-1084) are
     # written and must survive the round trip bit-for-bit.
-    cf = CondFormat(f"A2:B{len(rows) + 1}", '$B2<>""', "FFB3B3")
+    cf = CondFormat(f"A2:B{n + 1}", '$B2<>""', "FFB3B3")
     dv = DataValidation(
-        f"A2:A{len(rows) + 1}",
+        f"A2:A{n + 1}",
         "custom",
         formula1='$B2=""',
         error_title="Errors not resolved",
@@ -193,7 +192,7 @@ def xlsx_review_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             SheetSpec(
                 name="Permits",
                 header=["doc_id", "source"],
-                rows=rows,
+                rows=review.select(["doc_id", "source"]),
                 fills=fills,
                 cond_formats=[cf],
                 validations=[dv],

@@ -31,17 +31,9 @@ from extract_permits_spark.operators.windows import (
     duplicate_pair_flag,
     first_row_per_group,
 )
+from extract_permits_spark.specs import PERMIT_COLUMNS
 
-CANONICAL_COLUMNS = [
-    "pin",
-    "permit_number",
-    "issue_date",
-    "amount",
-    "applicant_street_address",
-    "city_state",
-    "applicant",
-    "work_description",
-]
+CANONICAL_COLUMNS = [s.name for s in PERMIT_COLUMNS]  # col_idx order
 
 
 def expand_pins(df: DataFrame, pin_cols: list[str]) -> DataFrame:

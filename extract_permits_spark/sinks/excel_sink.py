@@ -31,7 +31,6 @@ from extract_permits_spark.sinks.xlsx_io import (
     SheetSpec,
     _col_letter,
     read_xlsx,
-    to_serial,
     write_xlsx,
 )
 
@@ -48,91 +47,13 @@ TRAFFIC_LIGHT_RULES = [
 ]
 
 # Ready-checkbox gate (reference :149-157): checking the box is blocked
-# while the row still has errors.
+# while the row still has errors. Same fields as ColumnSpec.validation.
 READY_VALIDATION = {
-    "validate": "custom",
-    "value": '=${ERRORS_COL}2=""',
-    "show_error": True,
-    "error_type": "stop",
+    "type": "custom",
+    "formula1": '${ERRORS_COL}2=""',
     "error_title": "Errors not resolved",
     "error_message": "This row still has errors. Fix them before marking ready.",
 }
-
-# xlsxwriter criteria dialect -> ECMA-376 dataValidation operator
-_DV_OPERATORS = {
-    "between": "between",
-    "not between": "notBetween",
-    "equal to": "equal",
-    "not equal to": "notEqual",
-    "greater than": "greaterThan",
-    "less than": "lessThan",
-    "greater than or equal to": "greaterThanOrEqual",
-    "less than or equal to": "lessThanOrEqual",
-}
-
-
-def compile_data_validation(
-    v: dict, ci: int, n_rows: int, errors_letter: str | None = None
-) -> DataValidation:
-    """xlsxwriter-dialect validation dict (ColumnSpec.validation /
-    READY_VALIDATION) -> codec ``DataValidation`` over the column's data
-    range — the engine half of the reference's emission loop
-    (permit_cleaning.py:1055-1084, incl. the {COL}/{ERRORS_COL} letter
-    substitution at :1070-1077)."""
-    col_letter = _col_letter(ci)
-    sqref = f"{col_letter}2:{col_letter}{n_rows + 1}"
-    common = dict(
-        allow_blank=v.get("ignore_blank", True),
-        show_error=v.get("show_error", True),
-        error_style=v.get("error_type", "stop"),
-        error_title=v.get("error_title"),
-        error_message=v.get("error_message"),
-    )
-    validate = v["validate"]
-    if validate == "custom":
-        formula = str(v["value"]).lstrip("=").format(
-            COL=col_letter, ERRORS_COL=errors_letter or ""
-        )
-        return DataValidation(sqref, "custom", formula1=formula, **common)
-    if validate == "text length":
-        return DataValidation(
-            sqref,
-            "textLength",
-            operator=_DV_OPERATORS[v["criteria"]],
-            formula1=str(v["minimum"]),
-            formula2=str(v["maximum"]) if "maximum" in v else None,
-            **common,
-        )
-    if validate == "date":
-        # Excel compares date serials, not ISO strings
-        def serial(iso: str) -> str:
-            return str(int(to_serial(datetime.strptime(iso, "%Y-%m-%d").date())))
-
-        operator = _DV_OPERATORS[v["criteria"]]
-        if operator in ("between", "notBetween"):
-            # ECMA-376 requires formula2 for (not)between — dropping the
-            # upper bound silently would unenforce it; fail loudly like
-            # the unsupported-dialect path instead
-            if "maximum" not in v:
-                raise ValueError(
-                    "date validation with criteria 'between' needs 'maximum'"
-                )
-            return DataValidation(
-                sqref,
-                "date",
-                operator=operator,
-                formula1=serial(str(v["value"] if "value" in v else v["minimum"])),
-                formula2=serial(str(v["maximum"])),
-                **common,
-            )
-        return DataValidation(
-            sqref,
-            "date",
-            operator=operator,
-            formula1=serial(str(v["value"])),
-            **common,
-        )
-    raise ValueError(f"unsupported validation dialect: {validate!r}")
 
 # Reviewer flag fills on the PIN cell
 # (format_reviewed_permits_for_upload.py:31-37): yellow, orange, and one
@@ -233,9 +154,11 @@ def save_workbook(
     columns and emit the reference's status traffic lights
     (TRAFFIC_LIGHT_RULES, ref :1027-1053) plus per-column data validations
     from ``ColumnSpec.validation`` and the Ready-checkbox gate
-    (ref :149-157, :1055-1084). Every row's checkbox gets ``checked`` (the
-    reference's upload variant pre-checks all rows and then SKIPS the
-    checkbox validation so Excel won't reset it on open, ref :1061-1065).
+    (ref :149-157, :1055-1084), each over its column's data range with
+    {COL}/{ERRORS_COL} filled with column letters (ref :1070-1077). Every
+    row's checkbox gets ``checked`` (the reference's upload variant
+    pre-checks all rows and then SKIPS the checkbox validation so Excel
+    won't reset it on open, ref :1061-1065).
     """
     review_mode = errors_col is not None
     # reference column layout puts Ready at col 1; engine-side the two
@@ -253,11 +176,7 @@ def save_workbook(
     if specs is not None:
         ordered = sorted(specs, key=lambda s: s.col_idx)
         widths = [s.width for s in ordered] + ([10, 40] if review_mode else [])
-        validation_specs = [
-            (i, s.validation)
-            for i, s in enumerate(ordered)
-            if getattr(s, "validation", None)
-        ]
+        validation_specs = [(i, s.validation) for i, s in enumerate(ordered) if s.validation]
         df = presentation_frame(df, specs, *status)
     elif review_mode:
         df = df.select(*[c for c in df.columns if c != errors_col], *status)
@@ -279,21 +198,21 @@ def save_workbook(
             )
             for formula, color in TRAFFIC_LIGHT_RULES
         ]
+        if not checked:
+            # upload variant skips the checkbox gate (ref :1061-1065)
+            validation_specs.append((header.index("Ready"), READY_VALIDATION))
         for ci, v in validation_specs:
             # the PIN universe COUNTIF references the universe sheet; only
             # emit it when that sheet is being written
-            if pin_universe is None and "Universe of Valid PINs" in str(
-                v.get("value", "")
-            ):
+            if pin_universe is None and "Universe of Valid PINs" in v.get("formula1", ""):
                 continue
-            validations.append(compile_data_validation(v, ci, n_rows, errors_letter))
-        if not checked:
-            # upload variant skips the checkbox gate (ref :1061-1065)
-            validations.append(
-                compile_data_validation(
-                    READY_VALIDATION, header.index("Ready"), n_rows, errors_letter
-                )
-            )
+            col = _col_letter(ci)
+            formulas = {
+                k: v[k].format(COL=col, ERRORS_COL=errors_letter)
+                for k in ("formula1", "formula2")
+                if k in v
+            }
+            validations.append(DataValidation(f"{col}2:{col}{n_rows + 1}", **(v | formulas)))
 
     sheets = [
         SheetSpec(

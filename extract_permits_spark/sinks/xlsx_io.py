@@ -15,8 +15,7 @@ Writer: multiple sheets, inline strings, numbers, bools, date serials
 column widths, freeze panes, autofilter, sheet protection, expression
 conditional-format rules (dxf highlights; permit_cleaning.py:1027-1053),
 and dataValidation blocks (custom/textLength/date; :1055-1084). Sheet data
-renders column by column: each column is a pyarrow array (a ``pa.Table``
-sheet as collected, or a row-list sheet transposed once) whose Arrow type
+is a ``pa.Table`` and renders column by column: each column's Arrow type
 picks one cell template, and escaping, ``xml:space``, cell refs and row
 wrappers are ``pyarrow.compute`` string kernels over the whole column. The
 workbook is written to a temp file beside ``path`` and renamed into place,
@@ -64,10 +63,6 @@ _PY_WHITESPACE = (
 )
 
 
-class Formula(str):
-    """Marker type: a cell whose content is a formula, not a literal."""
-
-
 @dataclass
 class CondFormat:
     """One formula-typed conditional-format rule (ECMA-376 §18.3.1.18):
@@ -103,9 +98,7 @@ class DataValidation:
 class SheetSpec:
     name: str
     header: list[str]
-    # row lists (str | int | float | bool | datetime | date | Formula |
-    # None) or a pyarrow Table with one column per header entry
-    rows: list[list[object]] | pa.Table
+    rows: pa.Table  # one column per header entry
     col_widths: list[int | None] | None = None
     # (data_row_idx, col_idx) -> ARGB fill, 0-based over ``rows``
     fills: dict[tuple[int, int], str] = field(default_factory=dict)
@@ -280,44 +273,6 @@ def _arrow_parts(a: pa.Array, formula: bool = False) -> list[_Part]:
     ]
 
 
-# Python type of a row-list cell -> the Arrow type it transposes into;
-# order matters (bool is an int, datetime is a date, Formula is a str)
-_ROW_TYPES = [
-    (Formula, pa.string()),
-    (bool, pa.bool_()),
-    (datetime, pa.timestamp("us")),
-    (date, pa.date32()),
-    (int, pa.int64()),
-    (float, pa.float64()),
-    (str, pa.string()),
-]
-
-
-def _row_parts(values: list, formula: bool = False) -> list[_Part]:
-    """Transpose one row-list column into typed arrays, one per Python type
-    it holds (nulls elsewhere), and take their parts. Formula values are
-    formula cells; any other object is text of its ``str``."""
-    groups: dict[int, list] = {}
-    for ri, v in enumerate(values):
-        if v is None:
-            continue
-        k = next((k for k, (cls, _) in enumerate(_ROW_TYPES) if isinstance(v, cls)), None)
-        groups.setdefault(k, [None] * len(values))[ri] = v if k is not None else str(v)
-    parts: list[_Part] = []
-    for k, col in groups.items():
-        if k == 0:
-            parts.append(("f", _strings(col), False))
-            continue
-        typ = pa.string() if k is None else _ROW_TYPES[k][1]
-        try:
-            arr = pa.array(col, typ)
-        except OverflowError:  # an int beyond int64 is still a number
-            parts.append(("n", _strings([None if v is None else str(v) for v in col]), False))
-            continue
-        parts.extend(_arrow_parts(arr, formula and typ == pa.string()))
-    return parts
-
-
 def _escape(a: pa.Array) -> pa.Array:
     for ch, ent in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
         a = pc.replace_substring(a, ch, ent)
@@ -370,29 +325,17 @@ def _rows_xml(columns: list[list[_Part]], first_row: int, n: int, styles: list[p
     return pc.binary_join(pa.ListArray.from_arrays([0, n], rows), "")[0].as_py()
 
 
-def _n_rows(sheet: SheetSpec) -> int:
-    return sheet.rows.num_rows if isinstance(sheet.rows, pa.Table) else len(sheet.rows)
-
-
 def _data_xml(sheet: SheetSpec, styles: _Styles) -> str:
     """The data rows of ``sheet``, rendered column by column. Styles are
     registered in row-major order of first use, as a cell-by-cell writer
     would, so the style table does not depend on the render order."""
-    n_cols, n_rows = len(sheet.header), _n_rows(sheet)
-    if isinstance(sheet.rows, pa.Table):
-        columns = [
-            _arrow_parts(sheet.rows.column(ci).combine_chunks(), ci in sheet.formula_cols)
-            if ci < sheet.rows.num_columns
-            else []
-            for ci in range(n_cols)
-        ]
-    else:
-        columns = [
-            _row_parts(
-                [r[ci] if ci < len(r) else None for r in sheet.rows], ci in sheet.formula_cols
-            )
-            for ci in range(n_cols)
-        ]
+    n_cols, n_rows = len(sheet.header), sheet.rows.num_rows
+    columns = [
+        _arrow_parts(sheet.rows.column(ci).combine_chunks(), ci in sheet.formula_cols)
+        if ci < sheet.rows.num_columns
+        else []
+        for ci in range(n_cols)
+    ]
     fills = {
         (ri, ci): f
         for (ri, ci), f in sheet.fills.items()
@@ -460,7 +403,8 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
             parts.append(f"<cols>{cols}</cols>")
     parts.append("<sheetData>")
     bold = pa.array([_style_attr(styles.xf(bold=True))])
-    parts.append(_rows_xml([_row_parts([h]) for h in sheet.header], 1, 1, [bold] * n_cols))
+    header = [_arrow_parts(_strings([h])) for h in sheet.header]
+    parts.append(_rows_xml(header, 1, 1, [bold] * n_cols))
     parts.append(_data_xml(sheet, styles))
     parts.append("</sheetData>")
     if sheet.protect:
@@ -469,9 +413,7 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
             'selectUnlockedCells="0" autoFilter="0" sort="0"/>'
         )
     if sheet.autofilter:
-        parts.append(
-            f'<autoFilter ref="A1:{_col_letter(n_cols - 1)}{_n_rows(sheet) + 1}"/>'
-        )
+        parts.append(f'<autoFilter ref="A1:{_col_letter(n_cols - 1)}{sheet.rows.num_rows + 1}"/>')
     # CT_Worksheet sequence: ... autoFilter, ..., conditionalFormatting*,
     # dataValidations — order matters for strict consumers.
     for pri, cf in enumerate(sheet.cond_formats, start=1):

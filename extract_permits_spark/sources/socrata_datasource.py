@@ -22,12 +22,14 @@ window is whole days, coarser than a filter such as
 so every pushed filter is also handed back and Spark re-applies it exactly
 to the narrowed fetch.
 
-Every column is a string. A JSON string value arrives decoded; any other
-JSON value (number, bool, object, array) arrives as its JSON text exactly
-as the response spells it, as ``spark.read.json`` gives for a string-typed
-field. A missing field or a JSON null is null; fields outside the schema
-are ignored. A record whose date field is not a JSON string falls outside
-every window, as an unparseable date does.
+The schema is ``readers.PERMITS_RAW_SCHEMA`` unless the ``schema_ddl``
+option names another; every column is a string. A JSON string value
+arrives decoded; any other JSON value (number, bool, object, array)
+arrives as its JSON text exactly as the response spells it, as
+``spark.read.json`` gives for a string-typed field. A missing field or a
+JSON null is null; fields outside the schema are ignored. A record whose
+date field is not a JSON string falls outside every window, as an
+unparseable date does.
 
 Offline mode (no network egress): ``fixture_path`` points at a JSON-lines
 file served through the same SoQL filter semantics, so the pushdown path
@@ -56,15 +58,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from extract_permits_spark.sources.readers import PERMITS_RAW_SCHEMA
 from extract_permits_spark.sources.socrata import partition_date_range
-
-DEFAULT_SCHEMA = (
-    "permit_ string, issue_date string, reported_cost string, "
-    "street_number string, street_direction string, street_name string, "
-    "suffix string, contact_1_name string, work_description string, "
-    "pin_list string"
-)
-
 
 _DECODER = json.JSONDecoder()
 _WS = re.compile(r"[ \t\n\r]*")
@@ -158,8 +153,8 @@ class SocrataDataSource(DataSource):
     def name(cls) -> str:
         return "socrata"
 
-    def schema(self) -> str:
-        return self.options.get("schema_ddl", DEFAULT_SCHEMA)
+    def schema(self) -> T.StructType | str:
+        return self.options.get("schema_ddl", PERMITS_RAW_SCHEMA)
 
     def reader(self, schema: T.StructType) -> SocrataReader:
         return SocrataReader(schema, dict(self.options))

@@ -14,6 +14,9 @@ Here one ``ColumnSpec`` compiles to everything downstream:
   still asserts predicate ⇔ message-nullity,
 - the presentation headers, widths and cell validations of the xlsx sink.
 
+The warehouse names are not restated here: the warehouse mapping is
+``operators/dedup.canonicalize_for_dedup`` / ``KEYS``.
+
 Everything compiles to pure expressions — validation of a billion rows is a
 codegen'd scan, not a Python loop.
 """
@@ -37,17 +40,17 @@ class ColumnSpec:
     name: str  # canonical engine name
     header: str  # presentation header (xlsx sink)
     src: str | None = None  # ingest column (city_name analog)
-    warehouse_name: str | None = None  # iasworld_name analog
     dtype: T.DataType = field(default_factory=T.StringType)
     rules: Sequence[Rule] = ()
     width: int | None = None  # sink metadata
-    fmt: str | None = None
-    # S8 cell-edit guard for the review workbook (xlsxwriter-dialect dict,
-    # mirroring the reference's per-column "validation" blocks,
-    # chicago/permit_cleaning.py:149-157,182-196,241-256,279-289,308-316,
-    # 351-361,379-389). {COL}/{ERRORS_COL} are filled with Excel column
-    # letters at emission time (:1070-1077). Rendered by
-    # sinks/excel_sink.save_workbook via the stdlib codec.
+    # S8 cell-edit guard for the review workbook, mirroring the reference's
+    # per-column "validation" blocks (chicago/permit_cleaning.py:149-157,
+    # 182-196,241-256,279-289,308-316,351-361,379-389): the ECMA-376
+    # <dataValidation> fields of sinks/xlsx_io.DataValidation (type,
+    # operator, formula1, formula2, allow_blank, error_title,
+    # error_message), those equal to its defaults left out. Formulas have
+    # no leading "="; sinks/excel_sink.save_workbook fills {COL}/
+    # {ERRORS_COL} with column letters (:1070-1077) and the sqref.
     validation: dict | None = None
 
     def error_message(self) -> Column:
@@ -118,7 +121,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "pin",
         "PIN* [PARID]",
         src="solo_pin",
-        warehouse_name="parid",
         rules=[
             ("Missing PIN", required),
             ("PIN is not 14 digits", not_exact_digits(14)),
@@ -128,17 +130,15 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         # stripped on the 14-digit column, hyphenated form on the display
         # column
         validation={
-            "validate": "custom",
-            "value": (
-                "=OR("
+            "type": "custom",
+            "formula1": (
+                "OR("
                 "COUNTIF('Universe of Valid PINs'!$A:$A,"
                 'SUBSTITUTE({COL}2,"-",""))>0,'
                 "COUNTIF('Universe of Valid PINs'!$B:$B,{COL}2)>0"
                 ")"
             ),
-            "ignore_blank": False,
-            "show_error": True,
-            "error_type": "stop",
+            "allow_blank": False,
             "error_title": "Invalid PIN",
             "error_message": (
                 "PIN must be 14 digits (hyphens excluded) and exist in "
@@ -151,7 +151,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "permit_number",
         "Local Permit No.* [USER28]",
         src="permit_",
-        warehouse_name="user28",
         rules=[
             ("Missing permit number", required),
             ("Permit number must be 9-10 characters", length_not_in((9, 10))),
@@ -163,7 +162,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "issue_date",
         "Issue Date* [PERMDT]",
         src="issue_date",
-        warehouse_name="permdt",
         rules=[
             ("Missing issue date", required),
             # display format m/d/Y — the reference validates the displayed
@@ -173,11 +171,12 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=12,
         # reference :279-289 — Excel-side date floor
         validation={
-            "validate": "date",
-            "criteria": "greater than or equal to",
-            "value": "1900-01-01",
-            "show_error": True,
-            "error_type": "stop",
+            "type": "date",
+            "operator": "greaterThanOrEqual",
+            # 1900-01-01 as the serial xlsx_io.to_serial gives it (epoch
+            # 1899-12-30; Excel's pre-1900-03-01 leap-year bug makes it
+            # serial 1 in Excel itself — harmless for a floor)
+            "formula1": "2",
             "error_title": "Invalid Date",
             "error_message": "Issue Date must be a valid date.",
         },
@@ -187,7 +186,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "amount",
         "Amount* [AMOUNT]",
         src="reported_cost",
-        warehouse_name="amount",
         rules=[
             ("Missing amount", required),
             ("Amount must be at least 1", not_numeric_in_bounds(1, INT32_MAX)),
@@ -195,10 +193,8 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=12,
         # reference :308-316 — numeric whole-dollar bounds
         validation={
-            "validate": "custom",
-            "value": "=AND(ISNUMBER({COL}2),{COL}2>=1,{COL}2<=2147483647)",
-            "show_error": True,
-            "error_type": "stop",
+            "type": "custom",
+            "formula1": "AND(ISNUMBER({COL}2),{COL}2>=1,{COL}2<=2147483647)",
             "error_title": "Invalid Amount",
             "error_message": (
                 "Amount must be a whole number between 1 and 2,147,483,647."
@@ -210,7 +206,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "applicant_street_address",
         "Applicant Street Address* [ADDR1]",
         src="address",
-        warehouse_name="note2",
         rules=[
             ("Missing address", required),
             ("Address > 40 characters", longer_than(40)),
@@ -218,12 +213,10 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=30,
         # reference :241-256 — iasWorld ADDR1 field cap
         validation={
-            "validate": "text length",
-            "criteria": "between",
-            "minimum": 1,
-            "maximum": 40,
-            "show_error": True,
-            "error_type": "stop",
+            "type": "textLength",
+            "operator": "between",
+            "formula1": "1",
+            "formula2": "40",
             "error_title": "Invalid Address",
             "error_message": "Address must be between 1 and 40 characters.",
         },
@@ -233,7 +226,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "city_state",
         "Applicant City, State, Zip* [ADDR3]",
         src="city_state",
-        warehouse_name=None,
         rules=[("Missing city/state", required)],
         width=18,
     ),
@@ -242,7 +234,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "applicant",
         "Applicant* [USER21]",
         src="contact_1_name",
-        warehouse_name="user21",
         rules=[
             ("Missing applicant", required),
             ("Applicant > 50 characters", longer_than(50)),
@@ -250,12 +241,10 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=24,
         # reference :379-389 — USER21 field cap
         validation={
-            "validate": "text length",
-            "criteria": "between",
-            "minimum": 1,
-            "maximum": 50,
-            "show_error": True,
-            "error_type": "stop",
+            "type": "textLength",
+            "operator": "between",
+            "formula1": "1",
+            "formula2": "50",
             "error_title": "Invalid Applicant",
             "error_message": "Applicant must be between 1 and 50 characters.",
         },
@@ -265,17 +254,14 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         "work_description",
         "Notes [NOTE1]",
         src="work_description",
-        warehouse_name="user43",
         rules=[("Description > 2000 characters", longer_than(2000))],
         width=60,
         # reference :351-361 — NOTE1 field cap
         validation={
-            "validate": "text length",
-            "criteria": "between",
-            "minimum": 1,
-            "maximum": 2000,
-            "show_error": True,
-            "error_type": "stop",
+            "type": "textLength",
+            "operator": "between",
+            "formula1": "1",
+            "formula2": "2000",
             "error_title": "Invalid Work Description",
             "error_message": (
                 "Work Description must be between 1 and 2000 characters."

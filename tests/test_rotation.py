@@ -96,25 +96,74 @@ def _git(cwd, *args) -> str:
     ).stdout.strip()
 
 
-def _demo_flags(tmp_path, monkeypatch, edit) -> dict:
-    """affected_entries over a throwaway repo holding one chunk module
-    with three entries, after `edit` rewrites the chunk's source."""
+_DEMO_HELPER = '''\
+"""Demo helpers: one constant, one function."""
+
+LIMIT = 3
+
+
+def clip(x):
+    return min(x, LIMIT)
+'''
+
+_DEMO_CONSUMER = """\
+from extract_permits_spark.functions.demo import clip
+from extract_permits_spark.plans._registry import register
+
+
+@register("demo_clip", "SELECT 1")
+def demo_clip(spark, sf_dir):
+    return clip(5)
+
+
+@register("demo_plain", "SELECT 2")
+def demo_plain(spark, sf_dir):
+    return 2
+"""
+
+
+def _demo_flags(
+    tmp_path, monkeypatch, edit, files=None, edited="plans/analytics_demo.py"
+) -> dict:
+    """affected_entries over a throwaway repo holding `files` (package-
+    relative path -> source; by default one chunk module with three
+    entries), after `edit` rewrites the source of `edited`."""
     import rotation_audit
 
-    plans = tmp_path / "extract_permits_spark" / "plans"
-    plans.mkdir(parents=True)
-    (plans / "_registry.py").write_text(
-        "def register(name, sql):\n    return lambda fn: fn\n"
-    )
-    chunk = plans / "analytics_demo.py"
-    chunk.write_text(_DEMO_CHUNK)
+    pkg = tmp_path / "extract_permits_spark"
+    files = {
+        "plans/_registry.py": "def register(name, sql):\n    return lambda fn: fn\n",
+        **(files or {"plans/analytics_demo.py": _DEMO_CHUNK}),
+    }
+    for rel, src in files.items():
+        (pkg / rel).parent.mkdir(parents=True, exist_ok=True)
+        (pkg / rel).write_text(src)
     _git(tmp_path, "init", "-q")
     _git(tmp_path, "add", ".")
     _git(tmp_path, "commit", "-q", "-m", "base")
     base = _git(tmp_path, "rev-parse", "HEAD")
-    chunk.write_text(edit(_DEMO_CHUNK))
+    (pkg / edited).write_text(edit(files[edited]))
     monkeypatch.setattr(rotation_audit, "REPO", str(tmp_path))
     return rotation_audit.affected_entries(base)
+
+
+def test_module_docstring_edit_flags_no_entry(tmp_path, monkeypatch):
+    """A module docstring moves no entry's values or plan: rewording one
+    flags nothing, while a constant edit in the same module still flags
+    the entry that uses the module (and only that one)."""
+    files = {"functions/demo.py": _DEMO_HELPER, "plans/analytics_demo.py": _DEMO_CONSUMER}
+    docstring = _demo_flags(
+        tmp_path / "doc", monkeypatch,
+        lambda src: src.replace("Demo helpers:", "Helpers for the demo:"),
+        files, "functions/demo.py",
+    )
+    assert docstring == {}
+    constant = _demo_flags(
+        tmp_path / "const", monkeypatch,
+        lambda src: src.replace("LIMIT = 3", "LIMIT = 4"),
+        files, "functions/demo.py",
+    )
+    assert constant == {"demo_clip": ["extract_permits_spark.functions.demo"]}
 
 
 def test_chunk_granularity_drops_untouched_entries(tmp_path, monkeypatch):

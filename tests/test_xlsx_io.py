@@ -9,6 +9,7 @@ import tempfile
 import zipfile
 from datetime import date, datetime
 
+import pyarrow as pa
 import pytest
 
 from extract_permits_spark.sinks.excel_sink import (
@@ -21,7 +22,6 @@ from extract_permits_spark.sinks.excel_sink import (
     without_flagged_rows,
 )
 from extract_permits_spark.sinks.xlsx_io import (
-    Formula,
     SheetSpec,
     from_serial,
     read_xlsx,
@@ -37,22 +37,25 @@ def tmp_xlsx():
 
 
 def test_value_round_trip(tmp_xlsx):
-    rows = [
-        ["plain", 42, 3.5, True, datetime(2024, 3, 1, 12, 30), None],
-        ["  padded  ", -1, 0.0, False, date(1999, 12, 31), "last"],
-        ["<&> escaped \"quotes\"", 2**33, 1e-6, None, None, "x"],
-    ]
-    write_xlsx(
-        tmp_xlsx,
-        [SheetSpec(name="S", header=["a", "b", "c", "d", "e", "f"], rows=rows)],
+    rows = pa.table(
+        {
+            "a": ["plain", "  padded  ", '<&> escaped "quotes"'],
+            "b": [42, -1, 2**33],
+            "c": [3.5, 0.0, 1e-6],
+            "d": [True, False, None],
+            "e": [datetime(2024, 3, 1, 12, 30), None, None],
+            "f": [None, "last", "x"],
+            "g": [None, date(1999, 12, 31), None],
+        }
     )
+    write_xlsx(tmp_xlsx, [SheetSpec(name="S", header=rows.column_names, rows=rows)])
     got = read_xlsx(tmp_xlsx, "S")
-    assert got.header == ["a", "b", "c", "d", "e", "f"]
+    assert got.header == ["a", "b", "c", "d", "e", "f", "g"]
     assert got.rows[0][:4] == ["plain", 42, 3.5, True]
     assert got.rows[0][4] == datetime(2024, 3, 1, 12, 30)
     assert got.rows[0][5] is None
     assert got.rows[1][0] == "  padded  "  # xml:space preserved
-    assert got.rows[1][4] == datetime(1999, 12, 31)  # date -> midnight
+    assert got.rows[1][6] == datetime(1999, 12, 31)  # date -> midnight
     assert got.rows[2][0] == '<&> escaped "quotes"'
     assert got.rows[2][1] == 2**33
 
@@ -66,7 +69,7 @@ def test_serial_conversion():
 
 
 def test_fill_round_trip_and_flag_semantics(tmp_xlsx):
-    rows = [["p1"], ["p2"], ["p3"], ["p4"]]
+    rows = pa.table({"pin": ["p1", "p2", "p3", "p4"]})
     fills = {(0, 0): "FFFFFF00", (1, 0): "FFFFC000", (2, 0): "FF00FF00"}
     write_xlsx(
         tmp_xlsx, [SheetSpec(name="S", header=["pin"], rows=rows, fills=fills)]
@@ -97,8 +100,10 @@ def test_flag_color_equivalences():
 
 
 def test_formula_cells_round_trip(tmp_xlsx):
-    link = Formula('HYPERLINK("https://x/1","1")')
-    write_xlsx(tmp_xlsx, [SheetSpec(name="S", header=["f"], rows=[[link]])])
+    links = pa.table({"f": ['=HYPERLINK("https://x/1","1")']})
+    write_xlsx(
+        tmp_xlsx, [SheetSpec(name="S", header=["f"], rows=links, formula_cols=frozenset({0}))]
+    )
     with zipfile.ZipFile(tmp_xlsx) as zf:
         xml = zf.read("xl/worksheets/sheet1.xml").decode()
     assert '<f>HYPERLINK("https://x/1","1")</f>' in xml
@@ -108,9 +113,10 @@ def test_multi_sheet_and_structure(tmp_xlsx):
     write_xlsx(
         tmp_xlsx,
         [
-            SheetSpec(name="Permits", header=["a"], rows=[[1]], autofilter=True,
-                      protect=True, freeze_cols=1, col_widths=[18]),
-            SheetSpec(name="Universe of Valid PINs", header=["pin"], rows=[["x"]]),
+            SheetSpec(name="Permits", header=["a"], rows=pa.table({"a": [1]}),
+                      autofilter=True, protect=True, freeze_cols=1, col_widths=[18]),
+            SheetSpec(name="Universe of Valid PINs", header=["pin"],
+                      rows=pa.table({"pin": ["x"]})),
         ],
     )
     with zipfile.ZipFile(tmp_xlsx) as zf:
@@ -171,19 +177,20 @@ def test_save_workbook_with_specs(spark):
 def test_reviewed_workbook_ingest(spark):
     """S7 end-to-end: write a review file with flagged PIN cells, ingest it,
     and partition on the flag — the reference's upload/QC split."""
-    rows = [
-        ["12081000060000", "OK", datetime(2024, 2, 1)],
-        ["99999999999999", "BAD", datetime(2024, 2, 2)],
-        ["11111111111111", "MEH", None],
-    ]
+    rows = pa.table(
+        {
+            "PIN* [PARID]": ["12081000060000", "99999999999999", "11111111111111"],
+            "note": ["OK", "BAD", "MEH"],
+            "Issue Date* [PERMDT]": [datetime(2024, 2, 1), datetime(2024, 2, 2), None],
+        }
+    )
     fills = {(0, 0): "FFFFFF00", (2, 0): "FF00B0F0"}  # row0 flagged, row2 not
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "reviewed.xlsx")
         write_xlsx(
             p,
             [SheetSpec(name="Permits",
-                       header=["PIN* [PARID]", "note", "Issue Date* [PERMDT]"],
-                       rows=rows, fills=fills)],
+                       header=rows.column_names, rows=rows, fills=fills)],
         )
         df = read_reviewed_workbook(spark, p, "Permits")
         assert df.columns == ["PIN* [PARID]", "note", "Issue Date* [PERMDT]", "is_flagged"]
@@ -220,7 +227,7 @@ def test_freeze_rows_and_cols_pane(tmp_xlsx):
             SheetSpec(
                 name="S",
                 header=["a", "b", "c", "d"],
-                rows=[["w", "x", "y", "z"]],
+                rows=pa.table({"a": ["w"], "b": ["x"], "c": ["y"], "d": ["z"]}),
                 freeze_cols=3,
                 freeze_rows=1,
             )
@@ -243,7 +250,13 @@ def test_reader_error_cells_and_missing_r(tmp_xlsx):
 
     write_xlsx(
         tmp_xlsx,
-        [SheetSpec(name="S", header=["a", "b", "c"], rows=[["x", 1, "y"]])],
+        [
+            SheetSpec(
+                name="S",
+                header=["a", "b", "c"],
+                rows=pa.table({"a": ["x"], "b": [1], "c": ["y"]}),
+            )
+        ],
     )
     # rewrite sheet1 with a hand-built row exercising both shapes
     hacked = tmp_xlsx + ".hacked.xlsx"
@@ -281,7 +294,7 @@ def test_cond_format_and_validation_codec_round_trip(tmp_xlsx):
             SheetSpec(
                 name="S",
                 header=["a", "b"],
-                rows=[["x", 1], ["y", 2]],
+                rows=pa.table({"a": ["x", "y"], "b": [1, 2]}),
                 cond_formats=[
                     CondFormat("A2:B3", 'AND($B2="",$A2=FALSE)', "FFD5A8"),
                     CondFormat("A2:B3", '$B2<>""', "#FFB3B3"),  # hash form
@@ -466,46 +479,6 @@ def test_save_workbook_link_column_writes_formula(spark):
         with zipfile.ZipFile(p) as zf:
             xml = zf.read("xl/worksheets/sheet1.xml").decode()
     assert '<f>HYPERLINK("https://www.cookcountyassessor.com/pin/' in xml
-
-
-def test_compile_data_validation_dialect_mapping():
-    """Unit-level pins for the xlsxwriter-dialect -> ECMA-376 mapping:
-    operator table, {COL}/{ERRORS_COL} substitution, allowBlank default,
-    and the loud failure for unknown dialects."""
-    import pytest
-
-    from extract_permits_spark.sinks.excel_sink import compile_data_validation
-
-    dv = compile_data_validation(
-        {"validate": "text length", "criteria": "between", "minimum": 1,
-         "maximum": 40},
-        ci=4, n_rows=3, errors_letter="J",
-    )
-    assert (dv.sqref, dv.type, dv.operator) == ("E2:E4", "textLength", "between")
-    assert (dv.formula1, dv.formula2, dv.allow_blank) == ("1", "40", True)
-
-    dv = compile_data_validation(
-        {"validate": "custom", "value": '=AND({COL}2>0,${ERRORS_COL}2="")',
-         "ignore_blank": False, "error_type": "warning"},
-        ci=0, n_rows=2, errors_letter="J",
-    )
-    assert dv.formula1 == 'AND(A2>0,$J2="")'
-    assert not dv.allow_blank and dv.error_style == "warning"
-
-    dv = compile_data_validation(
-        {"validate": "date", "criteria": "greater than or equal to",
-         "value": "2024-03-01"},
-        ci=2, n_rows=1, errors_letter=None,
-    )
-    from datetime import date
-
-    from extract_permits_spark.sinks.xlsx_io import to_serial
-
-    assert dv.operator == "greaterThanOrEqual"
-    assert dv.formula1 == str(int(to_serial(date(2024, 3, 1))))
-
-    with pytest.raises(ValueError, match="unsupported validation dialect"):
-        compile_data_validation({"validate": "list", "value": "a,b"}, 0, 1)
 
 
 def test_save_workbook_timestamps_keep_session_wall_time(spark):

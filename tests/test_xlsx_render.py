@@ -4,8 +4,7 @@
 kernels. The oracle below is the cell-by-cell writer those kernels
 replace: one ``<c>`` per cell, its template picked from the Python type of
 the value. Both must produce the same bytes for the sheet data and the
-same style table, for Arrow-table sheets (what ``save_workbook`` collects)
-and for row-list sheets.
+same style table.
 """
 
 from __future__ import annotations
@@ -22,7 +21,6 @@ from hypothesis import given, settings, strategies as st
 
 from extract_permits_spark.sinks import xlsx_io
 from extract_permits_spark.sinks.xlsx_io import (
-    Formula,
     SheetSpec,
     _col_letter,
     _sheet_xml,
@@ -33,11 +31,15 @@ from extract_permits_spark.sinks.xlsx_io import (
 )
 
 
+class _Formula(str):
+    """Oracle-side marker: a link-column cell the sink writes as a formula."""
+
+
 def _oracle_cell(ref: str, value: object, style: int) -> str:
     s = f' s="{style}"' if style else ""
     if value is None:
         return f'<c r="{ref}"{s}/>'
-    if isinstance(value, Formula):
+    if isinstance(value, _Formula):
         return f'<c r="{ref}"{s}><f>{escape(str(value))}</f></c>'
     if isinstance(value, bool):
         return f'<c r="{ref}"{s} t="b"><v>{1 if value else 0}</v></c>'
@@ -85,7 +87,7 @@ def _oracle(header, rows, fills) -> tuple[str, str]:
 def _link_cell(v):
     """save_workbook's rule for LINK_COLUMNS text."""
     if isinstance(v, str) and v.startswith("=") and "(" in v:
-        return Formula(v[1:])
+        return _Formula(v[1:])
     return v
 
 
@@ -142,11 +144,11 @@ def sheets(draw):
 @settings(max_examples=80, deadline=None)
 @given(sheets())
 def test_column_render_matches_cell_oracle(sheet):
-    """Arrow-table and row-list sheets both render byte for byte like the
-    cell-by-cell oracle: None/NaN empty, formulas only in link columns,
-    t="b" bools, Python-formatted numbers, date and timestamp serials with
-    the date style, decimals and everything else as text, per-cell fills,
-    styles registered in row-major order of first use."""
+    """Arrow-table sheets render byte for byte like the cell-by-cell
+    oracle: None/NaN empty, formulas only in link columns, t="b" bools,
+    Python-formatted numbers, date and timestamp serials with the date
+    style, decimals and everything else as text, per-cell fills, styles
+    registered in row-major order of first use."""
     kinds, table, fills = sheet
     header = list(table.column_names)
     links = frozenset(ci for ci, k in enumerate(kinds) if k == "link")
@@ -155,39 +157,8 @@ def test_column_render_matches_cell_oracle(sheet):
         for r in table.to_pylist()
     ]
     want = _oracle(header, rows, fills)
-    as_table = SheetSpec(name="S", header=header, rows=table, fills=fills, formula_cols=links)
-    assert _rendered(as_table) == want
-    as_rows = SheetSpec(name="S", header=header, rows=rows, fills=fills)
-    assert _rendered(as_rows) == want
-
-
-MIXED = st.one_of(
-    st.none(),
-    TEXT,
-    st.booleans(),
-    st.integers(-(2**70), 2**70),
-    FLOATS,
-    st.dates(),
-    st.datetimes(),
-    DECIMALS_2,
-    st.builds(Formula, TEXT),
-)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(st.lists(MIXED, max_size=4), max_size=6),
-    st.dictionaries(
-        st.tuples(st.integers(0, 6), st.integers(0, 3)), st.just("FFFFC000"), max_size=4
-    ),
-)
-def test_mixed_row_list_columns_match_cell_oracle(rows, fills):
-    """A row-list column may mix Python types and rows may be short; each
-    cell still gets its own type's template."""
-    header = ["a", "b", "c"]
-    assert _rendered(SheetSpec(name="S", header=header, rows=rows, fills=fills)) == _oracle(
-        header, rows, fills
-    )
+    spec = SheetSpec(name="S", header=header, rows=table, fills=fills, formula_cols=links)
+    assert _rendered(spec) == want
 
 
 def test_whitespace_set_is_str_isspace():
@@ -202,8 +173,8 @@ def test_failed_write_leaves_no_partial_file(tmp_path, monkeypatch):
     sheet part fails half-way, nothing appears at a new path, an existing
     workbook stays intact and no temp file is left."""
     sheets = [
-        SheetSpec(name="Permits", header=["a"], rows=[["x"]]),
-        SheetSpec(name="Universe of Valid PINs", header=["pin"], rows=[["1"]]),
+        SheetSpec(name="Permits", header=["a"], rows=pa.table({"a": ["x"]})),
+        SheetSpec(name="Universe of Valid PINs", header=["pin"], rows=pa.table({"pin": ["1"]})),
     ]
     real = zipfile.ZipFile.writestr
 
@@ -213,7 +184,8 @@ def test_failed_write_leaves_no_partial_file(tmp_path, monkeypatch):
         return real(self, name, data, *args, **kwargs)
 
     existing = tmp_path / "existing.xlsx"
-    write_xlsx(str(existing), [SheetSpec(name="Old", header=["old"], rows=[["kept"]])])
+    old = pa.table({"old": ["kept"]})
+    write_xlsx(str(existing), [SheetSpec(name="Old", header=["old"], rows=old)])
     before = existing.read_bytes()
     monkeypatch.setattr(zipfile.ZipFile, "writestr", writestr)
     fresh = tmp_path / "fresh.xlsx"

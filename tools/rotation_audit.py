@@ -119,7 +119,8 @@ class ModInfo:
 
 def _changed_symbols(mod: str, path: str, ref: str) -> tuple[set[str], bool]:
     """(top-level defs whose AST dump differs vs `ref`, module-scope
-    changed?). A def present on only one side counts changed; an
+    changed?). The module docstring counts as neither. A def present on
+    only one side counts changed; an
     unreadable ref version (new file) counts everything changed. The
     dump includes decorator_list, so an entry whose register() oracle
     SQL literal changed is flagged even with an identical body."""
@@ -135,8 +136,10 @@ def _changed_symbols(mod: str, path: str, ref: str) -> tuple[set[str], bool]:
     old_tree = ast.parse(proc.stdout)
 
     def digest(tree):
+        # the module docstring is not module scope: it moves no entry
+        body = tree.body[1:] if ast.get_docstring(tree, clean=False) is not None else tree.body
         defs, scope = {}, []
-        for node in tree.body:
+        for node in body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defs[node.name] = ast.dump(node)
             else:
