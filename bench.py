@@ -209,7 +209,7 @@ def main() -> None:
         # oracle's full greedy replay.
         from extract_permits_spark.plans import _registry as _reg
 
-        _reg._KCENTER_CACHE.clear()
+        _reg._MEMO.pop(("kcenter", id(spark), sf_dir), None)
         force(qs["emb_kcenter_coreset"](spark, sf_dir))
 
     def run_kcenter_batch_fresh() -> None:
@@ -217,7 +217,7 @@ def main() -> None:
         # ceil((k-1)/b) top-b passes instead of k-1 argmax passes
         from extract_permits_spark.plans import _registry as _reg
 
-        _reg._KCENTER_CACHE.clear()
+        _reg._MEMO.pop(("kcenter_batched", id(spark), sf_dir), None)
         force(qs["emb_kcenter_batch"](spark, sf_dir))
 
     def run_curation_fresh() -> None:
@@ -357,7 +357,7 @@ def main() -> None:
         import tempfile
 
         from extract_permits_spark.plans.permits import (
-            amplified_permits_from_tpch,
+            permits_from_tpch,
             write_pipeline_partitioned,
         )
 
@@ -407,7 +407,7 @@ def main() -> None:
             times_scale_min[name] = round(samples[0], 3)
             row_load[name].append(_loadavg())
 
-        permits_raw, universe = amplified_permits_from_tpch(spark, sf_dir, copies=10)
+        permits_raw, universe = permits_from_tpch(spark, sf_dir, copies=10)
         out = tempfile.mkdtemp(prefix="bench_pipeline_sf1eq_")
         try:
             # mode("overwrite") makes the same out dir reusable across

@@ -29,10 +29,9 @@ def with_validation(
     membership (J6), which the reference checks inside partition_permits
     (chicago/permit_cleaning.py:427-452).
     """
-    _, errors = compile_validation(specs)
     # stage the errors column first, then flag from it — each validator
     # evaluates once per row instead of twice (E4 holds by construction)
-    out = df.withColumn("errors", errors)
+    out = df.withColumn("errors", compile_validation(specs))
     has_error = F.col("errors") != ""
     if extra_error is not None:
         has_error = has_error | F.coalesce(extra_error, F.lit(False))

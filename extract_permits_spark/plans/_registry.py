@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from extract_permits_spark.functions import similarity as simfn
@@ -48,112 +48,87 @@ def _dec(c, scale: int = 2):
     return c.cast(f"decimal(18,{scale})")
 
 
-# Deterministic driver-coordinated computations (the CC label fixpoint and
-# the IVF Lloyd fit) run actions while BUILDING their result, so a caller
-# that constructs the same query twice — the correctness harness does, once
-# for values and once for the schema — pays the whole loop twice. Both are
-# pure functions of (session, fixture dir); memoize per process. The cached
-# components frame is localCheckpoint'ed (safe to reuse); the cached
-# centroids are plain floats.
-_COMPONENTS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_JACCARD_PAIRS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_IVF_CENTROID_CACHE: dict[tuple[int, str], list[list[float]]] = {}
-_KCENTER_CACHE: dict[tuple[int, str], tuple] = {}
-_PCA_CACHE: dict[tuple[int, str], tuple] = {}
-_PCA2_CACHE: dict[tuple[int, str], tuple] = {}
+def _hash_split(key: str):
+    """Deterministic 80/10/10 train/valid/test ``split`` column: the first
+    four md5 hex digits of ``key``'s string form, mod 100 — reproducible
+    across runs, engines and repartitioning, unlike rand()."""
+    md5 = F.md5(F.col(key).cast("string").cast("binary"))
+    bucket = F.conv(F.substring(md5, 1, 4), 16, 10).cast("int") % 100
+    split = F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
+    return split.alias("split")
+
+
+# Deterministic driver-coordinated computations (the CC label fixpoint,
+# the Lloyd, PCA and k-center fits) run actions while BUILDING their
+# result, so a caller that constructs the same query twice — the
+# correctness harness does, once for values and once for the schema —
+# pays the whole loop twice. Each is a pure function of (session,
+# fixture dir), memoized per process under (name, id(spark), sf_dir).
+_MEMO: dict[tuple[str, int, str], object] = {}
+
+
+def _memo(name: str, spark: SparkSession, sf_dir: str, build: Callable[[], object]):
+    """``build()``, once per (name, session, fixture). A DataFrame must be
+    self-contained: scratch checkpoints are freed between evaluations
+    (free_scratch_checkpoints' invariant), so a frame reading one raises
+    here, where it is made, and is not memoized."""
+    key = (name, id(spark), sf_dir)
+    if key not in _MEMO:
+        value = build()
+        if isinstance(value, DataFrame):
+            from extract_permits_spark.session import assert_no_scratch_refs
+
+            assert_no_scratch_refs(value)
+        _MEMO[key] = value
+    return _MEMO[key]
 
 
 def clear_frame_caches() -> None:
-    """Drop the memoized DATAFRAME caches and FREE their checkpoint
-    blocks (r13 GC-tail fix). ``dict.clear()`` alone left every cleared
+    """Drop the memoized DATAFRAMES and FREE their checkpoint blocks
+    (r13 GC-tail fix). Dropping the reference alone left every cleared
     generation's corpus-scale LogicalRDD blocks on the heap for the
     life of the session — clearCache() doesn't touch them — so bench
     fresh-runs accumulated dead blocks until full-GC tails (probed:
     settled 8 s curation runs spiking to 26 s by the third batch).
-    Callers that want a fresh end-to-end run (bench, probes) use THIS,
-    not the raw dicts. Driver-value caches (centroids, PCA, k-center)
-    hold no executor storage and are cleared by their owners as needed.
-    """
+    Callers that want a fresh end-to-end run (bench, probes) use THIS.
+    Driver values (centroids, PCA, k-center) hold no executor storage
+    and are kept."""
     from extract_permits_spark.session import free_local_checkpoint
 
-    for cache in (_COMPONENTS_CACHE, _JACCARD_PAIRS_CACHE, _EMB_COMPONENTS_CACHE):
-        for df in cache.values():
-            free_local_checkpoint(df)
-        cache.clear()
+    for key, value in list(_MEMO.items()):
+        if isinstance(value, DataFrame):
+            free_local_checkpoint(value)
+            del _MEMO[key]
 
 
-def _pca2_cached(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
-) -> tuple:
-    """Memoized top-2 PCA fit (one scatter pass + two bounded driver
-    recurrences). Cached value is (v1, c1, v2, c2, n)."""
-    key = (id(spark), sf_dir)
-    if key not in _PCA2_CACHE:
-        _PCA2_CACHE[key] = simfn.pca_power_fit2(emb, "vec_id", "embedding")
-    return _PCA2_CACHE[key]
+def _pca2_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> tuple:
+    """Top-2 PCA fit: (v1, c1, v2, c2, n)."""
+    return _memo("pca2", spark, sf_dir, lambda: simfn.pca_power_fit2(emb, "vec_id", "embedding"))
 
 
-
-def _pca_cached(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
-) -> tuple:
-    """Memoized power-iteration PCA fit (same rationale as the IVF and
-    k-center caches). Cached value is (v, proj_const, n) — d floats +
-    two scalars, bounded."""
-    key = (id(spark), sf_dir)
-    if key not in _PCA_CACHE:
-        _PCA_CACHE[key] = simfn.pca_power_fit(emb, "vec_id", "embedding")
-    return _PCA_CACHE[key]
+def _pca_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> tuple:
+    """Power-iteration PCA fit: (v, proj_const, n)."""
+    return _memo("pca", spark, sf_dir, lambda: simfn.pca_power_fit(emb, "vec_id", "embedding"))
 
 
-
-def _kcenter_cached(
-    spark: SparkSession, emb: DataFrame, sf_dir: str, k: int = 8
-) -> tuple:
-    """Memoized greedy k-center selection (same rationale as the IVF
-    centroid cache: the correctness harness constructs each query twice,
-    and the driver-coordinated k-pass loop runs actions while building
-    its result). Cached value is (selection, centers) — k ids + k·dim
-    floats, bounded."""
-    key = (id(spark), sf_dir)
-    if key not in _KCENTER_CACHE:
-        _KCENTER_CACHE[key] = simfn.kcenter_select(
-            emb, "vec_id", "embedding", k=k
-        )
-    return _KCENTER_CACHE[key]
+def _kcenter_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> tuple:
+    """Greedy 8-center selection: (selection, centers)."""
+    build = lambda: simfn.kcenter_select(emb, "vec_id", "embedding", k=8)  # noqa: E731
+    return _memo("kcenter", spark, sf_dir, build)
 
 
-def _kcenter_batched_cached(
-    spark: SparkSession, emb: DataFrame, sf_dir: str, k: int = 8, batch: int = 4
-) -> tuple:
-    """Memoized BATCHED k-center selection (emb_kcenter_batch's fit) —
-    same rationale and cache as the exact greedy, keyed separately."""
-    key = (id(spark), sf_dir, "batched", k, batch)
-    if key not in _KCENTER_CACHE:
-        _KCENTER_CACHE[key] = simfn.kcenter_select_batched(
-            emb, "vec_id", "embedding", k=k, batch=batch
-        )
-    return _KCENTER_CACHE[key]
-
+def _kcenter_batched_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> tuple:
+    """Batched 8-center selection, 4 picks per pass: (selection, centers)."""
+    build = lambda: simfn.kcenter_select_batched(emb, "vec_id", "embedding", k=8, batch=4)  # noqa: E731
+    return _memo("kcenter_batched", spark, sf_dir, build)
 
 
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared shingle scan (r5-VERDICT ask #3): the n-gram pair list feeds
     three registry entries (the pair detector itself plus both cluster
-    resolutions). Materialize it once per (session, fixture) and reuse —
-    at scale this is the standard pattern of persisting the candidate
-    pair list before closure rather than re-deriving it per consumer."""
-    key = (id(spark), sf_dir)
-    if key not in _JACCARD_PAIRS_CACHE:
-        from extract_permits_spark.session import assert_no_scratch_refs
-
-        df = _jaccard_pairs_uncached(spark, sf_dir).localCheckpoint(eager=True)
-        # memoized frames must be self-contained: scratch checkpoints
-        # are freed BETWEEN evaluations (see free_scratch_checkpoints'
-        # invariant) and a memo referencing one fails at a distance
-        assert_no_scratch_refs(df)
-        _JACCARD_PAIRS_CACHE[key] = df
-    return _JACCARD_PAIRS_CACHE[key]
+    resolutions), so it is checkpointed once per (session, fixture)."""
+    build = lambda: _jaccard_pairs_uncached(spark, sf_dir).localCheckpoint(eager=True)  # noqa: E731
+    return _memo("jaccard_pairs", spark, sf_dir, build)
 
 
 def _shingle_pairs(docs: DataFrame) -> DataFrame:
@@ -253,22 +228,13 @@ def _collapsed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup components of the n-gram pair graph; self-contained by
+    construction (a projection over connected_components' own final
+    checkpoint), which _memo's insert guard pins."""
     from extract_permits_spark.operators.graph import connected_components
 
-    key = (id(spark), sf_dir)
-    if key not in _COMPONENTS_CACHE:
-        from extract_permits_spark.session import assert_no_scratch_refs
-
-        df = connected_components(_collapsed_edges(spark, sf_dir))
-        # self-contained by construction (connected_components returns a
-        # projection over its OWN final-round checkpoint) — the guard
-        # pins that property against future refactors
-        assert_no_scratch_refs(df)
-        _COMPONENTS_CACHE[key] = df
-    return _COMPONENTS_CACHE[key]
-
-
-_EMB_COMPONENTS_CACHE: dict[tuple[int, str], DataFrame] = {}
+    build = lambda: connected_components(_collapsed_edges(spark, sf_dir))  # noqa: E731
+    return _memo("components", spark, sf_dir, build)
 
 
 def _emb_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -288,8 +254,7 @@ def _emb_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the gate is consistent either way."""
     from extract_permits_spark.operators.graph import connected_components
 
-    key = (id(spark), sf_dir)
-    if key not in _EMB_COMPONENTS_CACHE:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         # groupBy, NOT Window.partitionBy(embedding): the aggregate's
         # map-side partial combine collapses a flood to ~one row per
@@ -316,23 +281,15 @@ def _emb_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("vec_id") != F.col("_rep"))
             .select(F.col("_rep").alias("id_a"), F.col("vec_id").alias("id_b"))
         )
-        from extract_permits_spark.session import assert_no_scratch_refs
+        return connected_components(rep_pairs.unionByName(stars))
 
-        df = connected_components(rep_pairs.unionByName(stars))
-        assert_no_scratch_refs(df)
-        _EMB_COMPONENTS_CACHE[key] = df
-    return _EMB_COMPONENTS_CACHE[key]
+    return _memo("emb_components", spark, sf_dir, build)
 
 
-def _ivf_centroids_cached(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
-) -> list[list[float]]:
-    key = (id(spark), sf_dir)
-    if key not in _IVF_CENTROID_CACHE:
-        _IVF_CENTROID_CACHE[key] = simfn.kmeans_fit(
-            emb, "vec_id", "embedding", k=16, rounds=3
-        )
-    return _IVF_CENTROID_CACHE[key]
+def _ivf_centroids_cached(spark: SparkSession, emb: DataFrame, sf_dir: str) -> list:
+    """16-centroid, 3-round Lloyd fit."""
+    build = lambda: simfn.kmeans_fit(emb, "vec_id", "embedding", k=16, rounds=3)  # noqa: E731
+    return _memo("ivf_centroids", spark, sf_dir, build)
 
 
 def _jaccard_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,14 +15,10 @@ order-insensitive value hash stable across engines:
 
 from __future__ import annotations
 
-# Registry machinery and the cross-chunk memo caches live in _registry
+# Registry machinery and the cross-chunk memo getters live in _registry
 # (cycle-free; see its docstring). Re-exported here so every existing
-# importer keeps addressing them as analytics.<name> — the cache DICTS
-# are the same objects (bench.py clears them through this module).
+# importer keeps addressing them as analytics.<name>.
 from extract_permits_spark.plans._registry import (  # noqa: F401
-    _COMPONENTS_CACHE,
-    _IVF_CENTROID_CACHE,
-    _JACCARD_PAIRS_CACHE,
     _ORACLES,
     _QUERIES,
     QueryFn,
@@ -108,15 +104,18 @@ _CHECK_FIRST = [
     "s1_socrata_pull",
     # sinks/xlsx_io.py — column-wise sheet render and atomic writes
     "xlsx_review_roundtrip",
+    # plans/analytics_core.py, analytics_rag.py — the bodies now call the
+    # shared split rule (_registry._hash_split) and the k-center memo
+    # getters with their one k/batch folded in; plans unchanged
+    "emb_kcenter_batch",
+    "emb_kcenter_coreset",
+    "sample_hash_split",
     # (c) the oldest r12-witnessed entries (ledger order) not already
     # queued above, filling to exactly 50; the rest of the r12 cohort
     # defers to r18 where the age bound will force it.
     "a12_winsorize",
     "dedup_containment",
     "dedup_exact_keep_first",
-    "diag_skew_report",
-    "docs_bigram_xent",
-    "docs_pretrain_filter",
 ]
 
 # Base ref for this round's rotation audit (the r16 boundary commit,
@@ -153,12 +152,22 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # identical optimized plan (exprIds stripped, sf0.001) and match their
 # oracles at sf0.01, and the upload and review workbooks of four
 # perfbench months (seed 7) are cmp-equal to the parent commit's.
+# plans/_registry's one memo (_memo over one _MEMO dict, replacing seven
+# per-getter dicts) and its one split rule (_hash_split) are value-neutral
+# too: every registry entry's optimized plan at sf0.001 (exprIds, lambda
+# variable ids, RDD ids and per-tree table suffixes normalized) equals the
+# parent commit's, except llm_corpus_curation, whose body changed and
+# which is queued in (b); all 223 entries match their oracles at sf0.01.
+# The k-center memo getters' k and batch equalled their one caller's
+# values. The entries flagged by the earlier shared-shingle _registry
+# edit stay queued in (b).
 _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.clean",
     "extract_permits_spark.operators.dedup",
     "extract_permits_spark.operators.enrich",
     "extract_permits_spark.operators.joins",
     "extract_permits_spark.operators.validate",
+    "extract_permits_spark.plans._registry",
     "extract_permits_spark.plans.permits",
     "extract_permits_spark.sinks.excel_sink",
     "extract_permits_spark.specs",

@@ -2443,19 +2443,10 @@ def j8_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from extract_permits_spark.plans._registry import _hash_split
+
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
-    return d.select(
-        "doc_id",
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "valid")
-        .otherwise("test")
-        .alias("split"),
-    )
+    return d.select("doc_id", _hash_split("doc_id"))
 
 
 @register(

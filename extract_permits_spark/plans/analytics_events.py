@@ -1315,6 +1315,8 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     train AND test). Isolated docs fall back to their own id; the cluster
     labels reuse the memoized component computation, and the split is the
     same deterministic md5 bucketing as sample_hash_split."""
+    from extract_permits_spark.plans._registry import _hash_split
+
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     comp = _components_cached(spark, sf_dir).select(
         F.col("id").alias("doc_id"), "component"
@@ -1322,22 +1324,7 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = d.join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("split_key")
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("split_key").cast("string").cast("binary")), 1, 4),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
-    return keyed.select(
-        "doc_id",
-        "split_key",
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "valid")
-        .otherwise("test")
-        .alias("split"),
-    )
+    return keyed.select("doc_id", "split_key", _hash_split("split_key"))
 
 
 @register(
@@ -1870,26 +1857,23 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical survivor: longest text, ties to lowest id) → leakage-safe
     train/valid/test split (hash of the cluster root, so surviving docs
     and any future cluster re-expansion stay split-stable). Every stage
-    reuses the independently-oracled machinery (docs_pretrain_filter,
-    the memoized closure, sample_leakage_safe_split), and the whole
-    chain is replayed end-to-end in DuckDB — composition is where silent
-    semantic drift hides, so the composition itself is hash-checked."""
+    reuses independently-oracled machinery: docs_pretrain_filter, the
+    memoized components, dedup_cluster_canonical's survivor rule
+    (canonical_per_cluster) and sample_leakage_safe_split's split rule
+    (_hash_split). The whole chain is replayed end-to-end in DuckDB —
+    composition is where silent semantic drift hides, so the composition
+    itself is hash-checked."""
+    from extract_permits_spark.operators.graph import canonical_per_cluster
+    from extract_permits_spark.plans._registry import _hash_split
+
     d = load_table(spark, sf_dir, "documents")
     filt = docs_pretrain_filter(spark, sf_dir).select("doc_id", "source", "n_toks")
     comp = _components_cached(spark, sf_dir).select("id", "component")
-    wc = Window.partitionBy("component").orderBy(
-        F.length(F.coalesce("text", F.lit(""))).desc(), F.col("id")
+    quality = d.select(
+        "doc_id", F.length(F.coalesce("text", F.lit(""))).alias("_quality")
     )
-    wrn = Window.partitionBy("component").orderBy("id")
-    canon = (
-        comp.join(d, comp.id == d.doc_id)
-        .select(
-            "component",
-            F.first_value("id").over(wc).alias("canonical_id"),
-            F.row_number().over(wrn).alias("_rn"),
-        )
-        .where(F.col("_rn") == 1)
-        .select("component", "canonical_id")
+    canon = canonical_per_cluster(comp, quality, quality_col="_quality").select(
+        "component", "canonical_id"
     )
     kept = (
         filt.join(comp, filt.doc_id == comp.id, "left")
@@ -1902,23 +1886,7 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("component", "doc_id").alias("split_key"),
         )
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("split_key").cast("string").cast("binary")), 1, 4),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
-    return kept.select(
-        "doc_id",
-        "source",
-        "n_toks",
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "valid")
-        .otherwise("test")
-        .alias("split"),
-    )
+    return kept.select("doc_id", "source", "n_toks", _hash_split("split_key"))
 
 
 _TOKPACK_SQL = """

@@ -2677,7 +2677,7 @@ def emb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from extract_permits_spark.plans._registry import _kcenter_cached
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sel, centers = _kcenter_cached(spark, emb, sf_dir, k=8)
+    sel, centers = _kcenter_cached(spark, emb, sf_dir)
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -2725,7 +2725,7 @@ def emb_kcenter_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from extract_permits_spark.plans._registry import _kcenter_batched_cached
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sel, centers = _kcenter_batched_cached(spark, emb, sf_dir, k=8, batch=4)
+    sel, centers = _kcenter_batched_cached(spark, emb, sf_dir)
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )

@@ -183,17 +183,40 @@ def write_pipeline_partitioned(
     validated.write.mode("overwrite").partitionBy("has_error").parquet(out_dir)
 
 
-def permits_from_tpch(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+# order-key shift between permits_from_tpch copies: above every fixture's
+# largest o_orderkey, so each copy contributes distinct permit numbers
+_KEY_STRIDE = 10**7
+
+
+def permits_from_tpch(
+    spark: SparkSession, sf_dir: str, copies: int = 1
+) -> tuple[DataFrame, DataFrame]:
     """Adapt orders+lineitem+customer fixtures into (permits_raw, universe).
 
     Orders play permits (o_orderkey → permit number, o_totalprice → cost);
     each order's lineitem part keys become its pipe-separated ``pin_list``
     (zero-padded to PIN width); customers play the parcel universe.
     Deterministic: every aggregation orders its inputs.
+
+    ``copies > 1`` scale-amplifies the input: the fact tables are unioned
+    ``copies`` times with order keys shifted by ``_KEY_STRIDE`` per copy —
+    a LAZY sf×copies-equivalent input (nothing written, nothing collected)
+    for benching the pipeline beyond the largest fixture. The universe
+    (dimension) side is unchanged, which is exactly the production shape
+    (fact grows, parcel universe doesn't).
     """
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     customer = load_table(spark, sf_dir, "customer")
+    amp_orders, amp_lineitem = orders, lineitem
+    for c in range(1, copies):
+        shift = F.lit(c * _KEY_STRIDE)
+        amp_orders = amp_orders.unionByName(
+            orders.withColumn("o_orderkey", F.col("o_orderkey") + shift)
+        )
+        amp_lineitem = amp_lineitem.unionByName(
+            lineitem.withColumn("l_orderkey", F.col("l_orderkey") + shift)
+        )
 
     # PIN-space modulus from the parquet FOOTER (pyarrow metadata) — an
     # O(footer-bytes) driver read instead of an eager Spark count() job on
@@ -205,38 +228,6 @@ def permits_from_tpch(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     n_cust = _pq.ParquetFile(
         _os.path.join(sf_dir, "customer.parquet")
     ).metadata.num_rows
-    return permits_from_frames(orders, lineitem, customer, n_cust)
-
-
-def amplified_permits_from_tpch(
-    spark: SparkSession, sf_dir: str, copies: int = 10, key_stride: int = 10**7
-) -> tuple[DataFrame, DataFrame]:
-    """Scale-amplified pipeline input: the fixture fact tables unioned
-    ``copies`` times with order keys shifted by ``key_stride`` per copy —
-    a LAZY sf×copies-equivalent input (nothing written, nothing
-    collected) for benching the pipeline beyond the largest fixture.
-    Every copy contributes distinct permit numbers; the universe
-    (dimension) side is unchanged, which is exactly the production shape
-    (fact grows, parcel universe doesn't)."""
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    customer = load_table(spark, sf_dir, "customer")
-    n_cust = _pq.ParquetFile(
-        _os.path.join(sf_dir, "customer.parquet")
-    ).metadata.num_rows
-
-    def shifted(df: DataFrame, key: str, c: int) -> DataFrame:
-        return df.withColumn(key, F.col(key) + F.lit(c * key_stride))
-
-    amp_orders = orders
-    amp_lineitem = lineitem
-    for c in range(1, copies):
-        amp_orders = amp_orders.unionByName(shifted(orders, "o_orderkey", c))
-        amp_lineitem = amp_lineitem.unionByName(shifted(lineitem, "l_orderkey", c))
     return permits_from_frames(amp_orders, amp_lineitem, customer, n_cust)
 
 

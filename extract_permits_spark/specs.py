@@ -297,16 +297,14 @@ def organize_columns(
     return df.select(*cols)
 
 
-def compile_validation(
-    specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
-) -> tuple[Column, Column]:
-    """E1+E2 compiler: (has_error predicate, errors message column).
+def compile_validation(specs: Sequence[ColumnSpec] = PERMIT_COLUMNS) -> Column:
+    """E1+E2 compiler: the ``errors`` message column, every failed rule's
+    message joined by ", " ('' when the row is valid).
 
-    ``has_error`` is derived as ``errors != ''`` rather than a second
-    disjunction of the same predicates — the reference keeps two rails in
-    sync by convention (chicago/permit_cleaning.py:117-124); deriving one
-    from the other makes E4 true by construction AND halves rule
-    evaluation (every validator otherwise runs twice per row)."""
+    operators/validate.with_validation derives ``has_error`` from the
+    staged column rather than from a second disjunction of the same
+    predicates — the reference keeps two rails in sync by convention
+    (chicago/permit_cleaning.py:117-124); deriving one from the other
+    makes E4 true by construction AND halves rule evaluation."""
     msgs = [s.error_message() for s in specs if s.rules]
-    errors = F.concat_ws(", ", *[F.nullif(m, F.lit("")) for m in msgs])
-    return errors != "", errors
+    return F.concat_ws(", ", *[F.nullif(m, F.lit("")) for m in msgs])

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -947,3 +948,67 @@ def test_scratch_free_keeps_curation_memos(spark):
     assert not any(persisted.containsKey(i) for i in shingle_ids)
     assert sorted(_registry._components_cached(spark, sf_dir).collect()) == want_comp
     assert sorted(_registry._jaccard_pairs_cached(spark, sf_dir).collect()) == want_pairs
+
+
+def test_memo_refuses_frame_reading_scratch_checkpoint(spark):
+    """A memoized frame that reads a registered scratch checkpoint would
+    fail at a distance once the scratch blocks are freed, so the insert
+    raises and nothing is memoized; checkpointing the frame itself is
+    the accepted remedy."""
+    from extract_permits_spark import session
+    from extract_permits_spark.plans import _registry
+
+    key = ("test_scratch_ref", id(spark), "memo-test")
+    scratch = spark.range(4).localCheckpoint(eager=True)
+    session.register_scratch_checkpoint(scratch)
+    try:
+        with pytest.raises(AssertionError, match="scratch checkpoint"):
+            _registry._memo(*key, lambda: scratch.select((F.col("id") * 2).alias("x")))
+        assert key not in _registry._MEMO
+        own = _registry._memo(
+            *key,
+            lambda: scratch.select((F.col("id") * 2).alias("x")).localCheckpoint(eager=True),
+        )
+        assert sorted(r["x"] for r in own.collect()) == [0, 2, 4, 6]
+    finally:
+        _registry.clear_frame_caches()
+        session.free_scratch_checkpoints()
+    assert key not in _registry._MEMO
+
+
+def test_clear_frame_caches_frees_frames_keeps_driver_values(spark):
+    """clear_frame_caches frees a frame memo's checkpoint blocks and drops
+    it, so its build runs again; a driver-value memo (a fit) is kept."""
+    from extract_permits_spark import session
+    from extract_permits_spark.plans import _registry
+
+    calls = {"frame": 0, "value": 0}
+
+    def frame():
+        calls["frame"] += 1
+        return spark.range(3).localCheckpoint(eager=True)
+
+    def value():
+        calls["value"] += 1
+        return [[0.5, 1.5]]
+
+    frame_key = ("test_frame", id(spark), "memo-test")
+    value_key = ("test_value", id(spark), "memo-test")
+    try:
+        df = _registry._memo(*frame_key, frame)
+        fit = _registry._memo(*value_key, value)
+        assert _registry._memo(*frame_key, frame) is df
+        rdd_ids = session._logical_rdd_ids(df)
+        persisted = spark.sparkContext._jsc.getPersistentRDDs()
+        assert rdd_ids and all(persisted.containsKey(i) for i in rdd_ids)
+
+        _registry.clear_frame_caches()
+        persisted = spark.sparkContext._jsc.getPersistentRDDs()
+        assert not any(persisted.containsKey(i) for i in rdd_ids)
+        assert frame_key not in _registry._MEMO
+        assert _registry._memo(*value_key, value) is fit
+        assert _registry._memo(*frame_key, frame).count() == 3
+        assert calls == {"frame": 2, "value": 1}
+    finally:
+        _registry._MEMO.pop(value_key, None)
+        _registry.clear_frame_caches()

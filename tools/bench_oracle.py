@@ -115,7 +115,7 @@ def main() -> None:
 
     # sf×10 equivalent of the flagship pipeline: re-point the fact views
     # at a UNION ALL of 10 key-shifted copies (mirror of Spark's
-    # amplified_permits_from_tpch) and run the same end-to-end upload SQL.
+    # permits_from_tpch(copies=10)) and run the same end-to-end upload SQL.
     # Warm-up + steady timed run since r14, mirroring bench.py's scale
     # protocol upgrade (_timed_scale).
     if "permit_pipeline_upload" in oracles:
