@@ -58,12 +58,12 @@ def _hash_split(key: str):
     return split.alias("split")
 
 
-# Deterministic driver-coordinated computations (the CC label fixpoint,
-# the Lloyd, PCA and k-center fits) run actions while BUILDING their
-# result, so a caller that constructs the same query twice — the
+# Deterministic driver-side computations (the connected-components
+# collect, the Lloyd, PCA and k-center fits) run actions while BUILDING
+# their result, so a caller that constructs the same query twice — the
 # correctness harness does, once for values and once for the schema —
-# pays the whole loop twice. Each is a pure function of (session,
-# fixture dir), memoized per process under (name, id(spark), sf_dir).
+# pays them twice. Each is a pure function of (session, fixture dir),
+# memoized per process under (name, id(spark), sf_dir).
 _MEMO: dict[tuple[str, int, str], object] = {}
 
 
@@ -229,8 +229,8 @@ def _collapsed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup components of the n-gram pair graph; self-contained by
-    construction (a projection over connected_components' own final
-    checkpoint), which _memo's insert guard pins."""
+    construction (connected_components returns a frame over driver-held
+    Arrow rows, with no checkpoint), which _memo's insert guard pins."""
     from extract_permits_spark.operators.graph import connected_components
 
     build = lambda: connected_components(_collapsed_edges(spark, sf_dir))  # noqa: E731
@@ -239,10 +239,10 @@ def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb_components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup components with exact-vector collapse — memoized
-    per (session, fixture) for the same reason as _components_cached: the
-    min-label fixpoint runs actions while building its result, and the
-    correctness harness constructs each query twice. The collapsed
-    construction (reps-only LSH pairs + twin star edges) yields exactly
+    per (session, fixture) for the same reason as _components_cached:
+    connected_components collects the edge list while building its
+    result, and the correctness harness constructs each query twice. The
+    collapsed construction (reps-only LSH pairs + twin star edges) yields exactly
     the full pair graph's components: an exact twin has the identical
     signature and identical cosine to every other vector as its rep, so
     all its edges are implied through the rep (pinned by

@@ -110,12 +110,16 @@ _CHECK_FIRST = [
     "emb_kcenter_batch",
     "emb_kcenter_coreset",
     "sample_hash_split",
-    # (c) the oldest r12-witnessed entries (ledger order) not already
+    # operators/graph.py — connected_components is one Arrow collect of
+    # the edge list and a numpy min-label pass on the driver (was a
+    # checkpointed Spark round loop); canonical_per_cluster lost id_col.
+    # The other consumers it flags are queued above.
+    "emb_neardup_components",
+    "mm_image_dedup_clusters",
+    # (c) the oldest r12-witnessed entry (ledger order) not already
     # queued above, filling to exactly 50; the rest of the r12 cohort
     # defers to r18 where the age bound will force it.
     "a12_winsorize",
-    "dedup_containment",
-    "dedup_exact_keep_first",
 ]
 
 # Base ref for this round's rotation audit (the r16 boundary commit,
@@ -178,9 +182,9 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
 # per-entry last-green-round table, and see tests/test_witness_age.py
 # for the enforced bound: every entry whose witness would age past 5
 # rounds at the upcoming driver round must sit in this window.
-# Deferred to r18: the 21 r12-witnessed entries past the (c) slots
-# above (ledger order from docs_quality_bins_approx) — at age 5 the
-# bound will force them into the r18 window.
+# Deferred to r18: the 26 r12-witnessed entries not queued above
+# (ledger order from dedup_containment) — at age 5 the bound will force
+# them into the r18 window.
 # The rotation rule is TRANSITIVE over helper imports and BODY-GRANULAR
 # within chunk modules: tools/rotation_audit.py <git-ref> lists every
 # registry entry whose own function body, same-chunk helper, or

@@ -215,8 +215,8 @@ def xlsx_review_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Duplicate-cluster resolution: near-dup pairs -> connected components ->
 # one canonical survivor per cluster (operators/graph.py). The pair list
-# is the oracle-checked n-gram Jaccard detector; the closure is iterative
-# min-label propagation (O(cluster diameter) shuffle rounds), checked
+# is the oracle-checked n-gram Jaccard detector; the closure is a
+# driver-side min-label pass over the collected pair list, checked
 # against a DuckDB recursive CTE computing the same min-reachable-id.
 # ---------------------------------------------------------------------------
 
@@ -311,9 +311,10 @@ _COMPONENT_EDGES_SQL = """
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive closure of the n-gram Jaccard near-dup pairs: every doc
     that appears in a pair, labeled with the minimum doc_id reachable
-    through the pair graph (the cluster key). Spark side is iterative
-    min-label propagation over DataFrames (operators/graph.py:44); the
-    oracle is a DuckDB recursive CTE over the same pair SQL."""
+    through the pair graph (the cluster key). Spark side is
+    operators/graph.py:connected_components (one Arrow collect of the
+    pair list, a numpy min-label pass); the oracle is a DuckDB recursive
+    CTE over the same pair SQL."""
     return _components_cached(spark, sf_dir).select("id", "component")
 
 
@@ -348,7 +349,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     docs_q = d.select("doc_id", F.length(F.coalesce("text", F.lit(""))).alias("_quality"))
     comps = _components_cached(spark, sf_dir)
-    return canonical_per_cluster(comps, docs_q, id_col="doc_id", quality_col="_quality")
+    return canonical_per_cluster(comps, docs_q, quality_col="_quality")
 
 
 

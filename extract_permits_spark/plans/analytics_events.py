@@ -1217,7 +1217,7 @@ def x7_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     between the fact table's min and max, left-join daily activity, flag
     silent days. The spine bounds are bounded driver scalars (two-value
     .first()); the recursion itself is O(days), never data-sized.
-    Complements the iterative-DataFrame loops (graph.py, vocab_bpe_train)
+    Complements the iterative-DataFrame loop of vocab_bpe_train
     with the declarative recursion form for small bounded expansions."""
     e = load_table(spark, sf_dir, "events")
     bounds = e.select(

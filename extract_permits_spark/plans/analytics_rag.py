@@ -3072,8 +3072,9 @@ def mm_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (singletons self-cluster, so the output is a complete keep-list:
     keep exactly the is_canonical rows). Marries the multimodal rail to
     the same closure operator the text near-dup families use
-    (operators/graph.py:connected_components — neighbor-min + pointer
-    jumping, O(log d) driver-coordinated rounds, edge-list-sized state).
+    (operators/graph.py:connected_components — one Arrow collect of the
+    pair list and a numpy min-label pass with pointer jumping on the
+    driver, bounded by its edge cap).
     The oracle replays hashes closed-form and the closure as a recursive
     min-label CTE — the same construction-proof pattern as
     emb_neardup_components, now on binary payloads."""

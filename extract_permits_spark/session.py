@@ -85,33 +85,19 @@ def free_local_checkpoint(df) -> None:
     ``spark.catalog.clearCache()`` only clears cache-manager entries —
     a LogicalRDD's blocks live until the JVM happens to GC the RDD
     object (ContextCleaner reference tracking), which under heap
-    pressure is exactly when they're most harmful: iterative loops that
-    checkpoint per round accumulate dead rounds' blocks and the
-    shrinking heap turns into full-GC tails (r13 probe: the third
-    settled curation run spiked 8 s → 26 s with zero code change).
-    Verified on pyspark 4.1: analyzed() is a LogicalRDD for a
-    checkpointed frame and unpersisting its RDD drops the blocks.
-    Descends through narrow unary wrappers (Project/Filter) so a frame
-    like connected_components' ``proposed.drop("_changed")`` — a
-    Project over the LogicalRDD — frees its blocks too (r13 ADVICE:
-    the top-node-only check silently no-op'ed on exactly the cached
-    frames clear_frame_caches exists to reclaim). Only Project/Filter
-    are walked: they cannot re-reference the child after the caller is
-    done with the frame, whereas descending through joins/aggregates
-    could free a checkpoint shared with a sibling plan. Silently
-    no-ops on non-checkpointed frames or API drift — this is an
+    pressure is exactly when they're most harmful: dead checkpoints
+    accumulate and the shrinking heap turns into full-GC tails (r13
+    probe: the third settled curation run spiked 8 s → 26 s with zero
+    code change). Verified on pyspark 4.1: analyzed() is a LogicalRDD
+    for a checkpointed frame and unpersisting its RDD drops the blocks.
+    Only the direct result of ``.localCheckpoint(...)`` is freed; any
+    other frame is a silent no-op, as is API drift — this is an
     allocator hint, never a correctness dependency.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
-        for _ in range(8):
-            name = plan.getClass().getSimpleName()
-            if name == "LogicalRDD":
-                plan.rdd().unpersist(False)
-                return
-            if name not in ("Project", "Filter"):
-                return
-            plan = plan.children().apply(0)
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
     except Exception:
         pass
 

@@ -1,8 +1,10 @@
 """Connected components + canonical-per-cluster (operators/graph.py)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from extract_permits_spark.operators import graph
 from extract_permits_spark.operators.graph import (
     canonical_per_cluster,
     connected_components,
@@ -30,10 +32,71 @@ def test_triangle_with_tail_and_reversed_edges(spark):
     assert got == {2: 2, 3: 2, 4: 2, 5: 2}
 
 
-def test_long_chain_hits_round_cap(spark):
-    chain = [(i, i + 1) for i in range(1, 60)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges(spark, chain), max_rounds=3)
+def test_long_chain_in_random_id_order_is_one_component(spark):
+    # 300 hops in random id order: one component, whatever the diameter
+    import random
+
+    order = list(range(1, 301))
+    random.Random(7).shuffle(order)
+    chain = list(zip(order, order[1:]))
+    got = {r.id: r.component for r in connected_components(_edges(spark, chain)).collect()}
+    assert got == {v: 1 for v in order}
+
+
+def _py_components(pairs):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+_INT64 = (-(2**63), -(2**63) + 1, 2**63 - 2, 2**63 - 1)
+
+
+@st.composite
+def _edge_lists(draw):
+    ids = st.one_of(st.integers(-3, 12), st.sampled_from(_INT64 + (100, 150)))
+    pairs = draw(st.lists(st.tuples(ids, ids), max_size=30))
+    if pairs:  # duplicate and reversed copies
+        again = draw(st.lists(st.tuples(st.sampled_from(pairs), st.booleans()), max_size=10))
+        pairs += [(b, a) if flip else (a, b) for (a, b), flip in again]
+    pairs += [(a, a) for a in draw(st.lists(ids, max_size=3))]
+    chain = draw(st.permutations(range(100, 100 + draw(st.integers(0, 80)))))
+    pairs += list(zip(chain, chain[1:]))
+    return draw(st.permutations(pairs))
+
+
+@settings(max_examples=25, deadline=None)
+@given(_edge_lists())
+def test_components_equal_python_union_find(spark, pairs):
+    """Duplicate, reversed and self-loop edges, int64-extreme ids, and a
+    chain in random id order (which may share ids 100/150 with the rest)."""
+    comp = connected_components(_edges(spark, pairs))
+    rows = comp.collect()
+    assert len(rows) == len({r.id for r in rows})
+    assert {r.id: r.component for r in rows} == _py_components(pairs)
+
+
+def test_edge_list_past_bound_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_MAX_EDGES", 3)
+    at_bound = _edges(spark, [(1, 2), (2, 3), (4, 5)])
+    assert connected_components(at_bound).count() == 5
+    with pytest.raises(ValueError, match="more than 3 edges"):
+        connected_components(_edges(spark, [(1, 2), (2, 3), (4, 5), (5, 6)]))
+
+
+def test_null_endpoint_raises(spark):
+    with pytest.raises(ValueError, match="null edge endpoint"):
+        connected_components(_edges(spark, [(1, 2), (None, 3)]))
 
 
 def test_canonical_picks_highest_quality_then_lowest_id(spark):
