@@ -37,9 +37,9 @@ ISO_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 DISPLAY_DATE_FMT = "M/d/yyyy"
 
 
-def parse_and_display_date(c: Column | str, in_fmt: str = ISO_TS_FMT) -> Column:
+def parse_and_display_date(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    return F.date_format(F.try_to_timestamp(c, F.lit(in_fmt)), DISPLAY_DATE_FMT)
+    return F.date_format(F.try_to_timestamp(c, F.lit(ISO_TS_FMT)), DISPLAY_DATE_FMT)
 
 
 # ---------------------------------------------------------------------------
@@ -115,15 +115,16 @@ APPLICANT_ABBREVIATIONS: dict[str, str] = {
 }
 
 
-def abbreviate(c: Column | str, mapping: Mapping[str, str] | None = None) -> Column:
+def abbreviate(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    mapping = mapping if mapping is not None else APPLICANT_ABBREVIATIONS
     # the reference applies these as regexes, but every pattern is a string
     # literal — literal replace() has identical semantics and skips regex
-    # machinery (~3× faster on the sf0.1 pipeline); a mapping containing
+    # machinery (~3× faster on the sf0.1 pipeline); an entry containing
     # regex metacharacters would need regexp_replace again
     return reduce(
-        lambda acc, kv: F.replace(acc, F.lit(kv[0]), F.lit(kv[1])), mapping.items(), c
+        lambda acc, kv: F.replace(acc, F.lit(kv[0]), F.lit(kv[1])),
+        APPLICANT_ABBREVIATIONS.items(),
+        c,
     )
 
 
@@ -214,9 +215,9 @@ def canonical_address_note(c: Column | str) -> Column:
     return F.concat(c, F.lit(",,CHICAGO, IL"))
 
 
-def canonical_description(c: Column | str, limit: int = 259) -> Column:
+def canonical_description(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    return F.substring(F.regexp_replace(c, SMARTFILE_STRIP_RE, ""), 1, limit)
+    return F.substring(F.regexp_replace(c, SMARTFILE_STRIP_RE, ""), 1, 259)
 
 
 # ---------------------------------------------------------------------------

@@ -60,12 +60,9 @@ ASSESSABLE_KEYWORDS: list[str] = [
 
 
 def tag_keywords(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "matched_keywords",
-    keywords: Sequence[str] = ASSESSABLE_KEYWORDS,
+    df: DataFrame, text_col: str, keywords: Sequence[str] = ASSESSABLE_KEYWORDS
 ) -> DataFrame:
-    """P9: ``out_col`` = comma-join of the keywords contained
+    """P9: ``matched_keywords`` = comma-join of the keywords contained
     (case-insensitive) in ``text_col``, in keyword-list order.
 
     Reference: chicago/permit_cleaning.py:810-816 — a per-row Python loop
@@ -82,6 +79,6 @@ def tag_keywords(
     ]
     return (
         df.withColumn("_kw_lowered", lowered)
-        .withColumn(out_col, F.concat_ws(", ", *parts))
+        .withColumn("matched_keywords", F.concat_ws(", ", *parts))
         .drop("_kw_lowered")
     )

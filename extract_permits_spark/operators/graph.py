@@ -83,13 +83,13 @@ def connected_components(edges: DataFrame) -> DataFrame:
 def canonical_per_cluster(
     components: DataFrame,
     docs: DataFrame,
-    quality_col: str | None = None,
+    quality_col: str,
 ) -> DataFrame:
     """One canonical survivor per duplicate cluster.
 
     Joins ``(id, component)`` back to ``docs`` and keeps, per component,
-    the row with the highest ``quality_col`` (ties and absent quality →
-    lowest ``doc_id``, so the choice is deterministic). Returns
+    the row with the highest ``quality_col`` (ties → lowest ``doc_id``,
+    so the choice is deterministic). Returns
     ``(component, canonical_id, cluster_size)``.
 
     One shuffle on ``component`` (the window); the docs join broadcasts
@@ -98,16 +98,10 @@ def canonical_per_cluster(
     """
     from pyspark.sql import Window
 
-    joined = components.join(
-        docs.select(F.col("doc_id").alias("id"), *([quality_col] if quality_col else [])),
-        "id",
+    joined = components.join(docs.select(F.col("doc_id").alias("id"), quality_col), "id")
+    w = Window.partitionBy("component").orderBy(
+        F.col(quality_col).desc(), F.col("id").asc()
     )
-    order = (
-        [F.col(quality_col).desc(), F.col("id").asc()]
-        if quality_col
-        else [F.col("id").asc()]
-    )
-    w = Window.partitionBy("component").orderBy(*order)
     return (
         joined.withColumn("_rn", F.row_number().over(w))
         .groupBy("component")

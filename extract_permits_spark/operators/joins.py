@@ -71,17 +71,15 @@ def semi_join_membership(
     universe: DataFrame,
     left_key: str,
     right_key: str,
-    flag_col: str | None = None,
+    flag_col: str,
 ) -> DataFrame:
-    """J6: set-membership check. With ``flag_col`` None → ``left_semi``
-    filter; otherwise keep all rows and add a boolean membership flag.
+    """J6: set-membership check: keep all rows and add the boolean
+    membership flag ``flag_col``.
 
     Reference: chicago/permit_cleaning.py:438,444-448 (Python set
     membership), chicago/legacy_permits/helper.py:146-148 (isin).
     """
     keys = F.broadcast(universe.select(F.col(right_key).alias("_k")).distinct())
-    if flag_col is None:
-        return df.join(keys, df[left_key] == F.col("_k"), "left_semi")
     joined = df.join(
         keys.withColumn("_present", F.lit(True)), df[left_key] == F.col("_k"), "left"
     )

@@ -10,31 +10,23 @@ partitioned by bucket), never two jobs.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from extract_permits_spark.specs import PERMIT_COLUMNS, ColumnSpec, compile_validation
+from extract_permits_spark.specs import compile_validation
 
 
-def with_validation(
-    df: DataFrame,
-    specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
-    extra_error: Column | None = None,
-) -> DataFrame:
+def with_validation(df: DataFrame, extra_error: Column) -> DataFrame:
     """E1+E2: add ``has_error`` boolean + ``errors`` message columns.
 
-    ``extra_error`` folds in non-registry predicates — e.g. PIN-universe
+    ``extra_error`` folds in the non-registry predicate, PIN-universe
     membership (J6), which the reference checks inside partition_permits
-    (chicago/permit_cleaning.py:427-452).
+    (chicago/permit_cleaning.py:427-452); a NULL counts as no error.
     """
     # stage the errors column first, then flag from it — each validator
     # evaluates once per row instead of twice (E4 holds by construction)
-    out = df.withColumn("errors", compile_validation(specs))
-    has_error = F.col("errors") != ""
-    if extra_error is not None:
-        has_error = has_error | F.coalesce(extra_error, F.lit(False))
+    out = df.withColumn("errors", compile_validation())
+    has_error = (F.col("errors") != "") | F.coalesce(extra_error, F.lit(False))
     return out.withColumn("has_error", has_error)
 
 

@@ -165,6 +165,17 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # The k-center memo getters' k and batch equalled their one caller's
 # values. The entries flagged by the earlier shared-shingle _registry
 # edit stay queued in (b).
+# So are the one-column-order edits: ColumnSpec lost col_idx (the
+# registry list was already in that order) and dtype (always string), and
+# every parameter, default and None state they removed held the one value
+# each caller used or was reached by no caller; excel_sink's alpha-stripped
+# flag-colour branch was never true. validated_permits' optimized plan is
+# unchanged at sf0.01 and sf0.001, with and without a warehouse frame.
+# session.free_local_checkpoint now frees only a direct localCheckpoint
+# result: a block release moves no entry's values or plan. The entries
+# that reach it through alias imports (vocab_bpe_train, vocab_bpe_encode,
+# stream_decontaminate_ingest, queued in (b) for the earlier session
+# edit) match their oracles at sf0.01.
 _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.clean",
     "extract_permits_spark.operators.dedup",
@@ -173,6 +184,7 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.validate",
     "extract_permits_spark.plans._registry",
     "extract_permits_spark.plans.permits",
+    "extract_permits_spark.session",
     "extract_permits_spark.sinks.excel_sink",
     "extract_permits_spark.specs",
 }

@@ -1752,6 +1752,10 @@ def s1_socrata_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
             return OrdersReader(schema, dict(self.options))
 
     spark.dataSource.register(OrdersSource)
+    # the reader implements pushFilters, which Spark refuses to plan while
+    # this conf is at its default (false); pin it like load_events pins
+    # the session time zone, so the entry runs in a plain session
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return (
         spark.read.format("socrata_orders")
         .option("schema_ddl", "permit_ string, issue_date string, reported_cost string")

@@ -33,7 +33,7 @@ from extract_permits_spark.operators.windows import (
 )
 from extract_permits_spark.specs import PERMIT_COLUMNS
 
-CANONICAL_COLUMNS = [s.name for s in PERMIT_COLUMNS]  # col_idx order
+CANONICAL_COLUMNS = [s.name for s in PERMIT_COLUMNS]  # registry order
 
 
 def expand_pins(df: DataFrame, pin_cols: list[str]) -> DataFrame:

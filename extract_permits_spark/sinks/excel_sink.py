@@ -69,15 +69,12 @@ FLAG_FILL_COLORS = {
 def fill_matches_flag(fill: object) -> bool:
     """True if a cell-fill descriptor from ``xlsx_io.read_xlsx`` is one of
     the reviewer flag colors (pin_cell_matches_flag,
-    format_reviewed_permits_for_upload.py:39-83): ARGB match, RGB-without-
-    alpha match, or theme+tint match with tint rounded to 6dp."""
+    format_reviewed_permits_for_upload.py:39-83): ARGB match, or
+    theme+tint match with tint rounded to 6dp."""
     if fill is None:
         return False
     if isinstance(fill, str):
-        val = fill.upper().lstrip("#")
-        if val in FLAG_FILL_COLORS:
-            return True
-        return len(val) == 8 and val[2:] in {c for c in FLAG_FILL_COLORS if isinstance(c, str)}
+        return fill.upper().lstrip("#") in FLAG_FILL_COLORS
     if isinstance(fill, tuple) and len(fill) == 3 and fill[0] == "theme":
         want = {
             (t[0], t[1], round(t[2], 6))
@@ -110,10 +107,9 @@ LINK_COLUMNS = frozenset({"cookviewer_link", "pin_link"})
 
 
 def presentation_frame(df: DataFrame, specs, *extra: Column) -> DataFrame:
-    """Project engine columns to presentation headers in col_idx order,
+    """Project engine columns to presentation headers in ``specs`` order,
     followed by ``extra`` — the data-side half of save_xlsx_file."""
-    ordered = sorted(specs, key=lambda s: s.col_idx)
-    return df.select(*[F.col(s.name).alias(s.header) for s in ordered], *extra)
+    return df.select(*[F.col(s.name).alias(s.header) for s in specs], *extra)
 
 
 def _collect(df: DataFrame) -> pa.Table:
@@ -162,7 +158,7 @@ def save_workbook(
     """
     review_mode = errors_col is not None
     # reference column layout puts Ready at col 1; engine-side the two
-    # status rails ride at the end so spec col_idx stays contiguous
+    # status rails ride at the end, after the spec columns in list order
     status = (
         [
             F.lit(bool(checked)).alias("Ready"),
@@ -174,9 +170,8 @@ def save_workbook(
     widths = None
     validation_specs: list[tuple[int, dict]] = []
     if specs is not None:
-        ordered = sorted(specs, key=lambda s: s.col_idx)
-        widths = [s.width for s in ordered] + ([10, 40] if review_mode else [])
-        validation_specs = [(i, s.validation) for i, s in enumerate(ordered) if s.validation]
+        widths = [s.width for s in specs] + ([10, 40] if review_mode else [])
+        validation_specs = [(i, s.validation) for i, s in enumerate(specs) if s.validation]
         df = presentation_frame(df, specs, *status)
     elif review_mode:
         df = df.select(*[c for c in df.columns if c != errors_col], *status)

@@ -4,7 +4,9 @@ The reference's ``PERMIT_COLUMNS`` dict-of-dicts
 (chicago/permit_cleaning.py:63-131 doc, :133-406 registry) carries, per
 output column: position, header, source-column name, warehouse name,
 validation rules (in *two* kept-in-sync rails: an Excel error formula and a
-Python validator, :117-124), and presentation metadata.
+Python validator, :117-124), and presentation metadata. Here the registry
+is a list, so its order is the column order: no position field, and no
+contiguity assert to keep one in step (the reference's :411-424).
 
 Here one ``ColumnSpec`` compiles to everything downstream:
 - the registry projection with renames (P1, ``organize_columns``),
@@ -23,12 +25,11 @@ codegen'd scan, not a Python loop.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # A rule is (error_message, predicate_builder); predicate True ⇒ INVALID.
 Rule = tuple[str, Callable[[Column], Column]]
@@ -36,11 +37,9 @@ Rule = tuple[str, Callable[[Column], Column]]
 
 @dataclass(frozen=True)
 class ColumnSpec:
-    col_idx: int
     name: str  # canonical engine name
     header: str  # presentation header (xlsx sink)
     src: str | None = None  # ingest column (city_name analog)
-    dtype: T.DataType = field(default_factory=T.StringType)
     rules: Sequence[Rule] = ()
     width: int | None = None  # sink metadata
     # S8 cell-edit guard for the review workbook, mirroring the reference's
@@ -98,15 +97,10 @@ def not_numeric_in_bounds(lo: int, hi: int) -> Callable[[Column], Column]:
     return rule
 
 
-def not_parseable_date(fmt: str | None = None) -> Callable[[Column], Column]:
+def not_parseable_date(fmt: str) -> Callable[[Column], Column]:
     # reference: issue-date validator chicago/permit_cleaning.py:275-278
     def rule(c: Column) -> Column:
-        parsed = (
-            F.try_to_timestamp(c.cast("string"), F.lit(fmt))
-            if fmt
-            else F.try_to_timestamp(c.cast("string"))
-        )
-        return c.isNotNull() & parsed.isNull()
+        return c.isNotNull() & F.try_to_timestamp(c.cast("string"), F.lit(fmt)).isNull()
 
     return rule
 
@@ -117,7 +111,6 @@ INT32_MAX = 2_147_483_647
 # PERMIT_COLUMNS, chicago/permit_cleaning.py:133-406).
 PERMIT_COLUMNS: list[ColumnSpec] = [
     ColumnSpec(
-        0,
         "pin",
         "PIN* [PARID]",
         src="solo_pin",
@@ -147,7 +140,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         },
     ),
     ColumnSpec(
-        1,
         "permit_number",
         "Local Permit No.* [USER28]",
         src="permit_",
@@ -158,7 +150,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=14,
     ),
     ColumnSpec(
-        2,
         "issue_date",
         "Issue Date* [PERMDT]",
         src="issue_date",
@@ -182,7 +173,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         },
     ),
     ColumnSpec(
-        3,
         "amount",
         "Amount* [AMOUNT]",
         src="reported_cost",
@@ -202,7 +192,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         },
     ),
     ColumnSpec(
-        4,
         "applicant_street_address",
         "Applicant Street Address* [ADDR1]",
         src="address",
@@ -222,7 +211,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         },
     ),
     ColumnSpec(
-        5,
         "city_state",
         "Applicant City, State, Zip* [ADDR3]",
         src="city_state",
@@ -230,7 +218,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         width=18,
     ),
     ColumnSpec(
-        6,
         "applicant",
         "Applicant* [USER21]",
         src="contact_1_name",
@@ -250,7 +237,6 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         },
     ),
     ColumnSpec(
-        7,
         "work_description",
         "Notes [NOTE1]",
         src="work_description",
@@ -270,34 +256,25 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
     ),
 ]
 
-# registry invariant: contiguous 0-based col_idx
-# (reference assert chicago/permit_cleaning.py:411-424)
-assert [s.col_idx for s in PERMIT_COLUMNS] == list(range(len(PERMIT_COLUMNS)))
-
-
-def organize_columns(
-    df: DataFrame,
-    specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
-    keep_extra: Sequence[str] = (),
-) -> DataFrame:
+def organize_columns(df: DataFrame, keep_extra: Sequence[str] = ()) -> DataFrame:
     """P1: keep only registry columns (renamed from src), add missing as
-    NULL, order by col_idx. Reference: organize_columns
+    string NULLs, in registry order. Reference: organize_columns
     chicago/permit_cleaning.py:643-665. ``keep_extra`` carries pass-through
     columns (e.g. the explode position tag) the registry doesn't own."""
     have = set(df.columns)
     cols = []
-    for s in sorted(specs, key=lambda s: s.col_idx):
+    for s in PERMIT_COLUMNS:
         if s.src and s.src in have:
             cols.append(F.col(s.src).alias(s.name))
         elif s.name in have:
             cols.append(F.col(s.name))
         else:
-            cols.append(F.lit(None).cast(s.dtype).alias(s.name))
+            cols.append(F.lit(None).cast("string").alias(s.name))
     cols += [F.col(c) for c in keep_extra if c in have]
     return df.select(*cols)
 
 
-def compile_validation(specs: Sequence[ColumnSpec] = PERMIT_COLUMNS) -> Column:
+def compile_validation() -> Column:
     """E1+E2 compiler: the ``errors`` message column, every failed rule's
     message joined by ", " ('' when the row is valid).
 
@@ -306,5 +283,5 @@ def compile_validation(specs: Sequence[ColumnSpec] = PERMIT_COLUMNS) -> Column:
     predicates — the reference keeps two rails in sync by convention
     (chicago/permit_cleaning.py:117-124); deriving one from the other
     makes E4 true by construction AND halves rule evaluation."""
-    msgs = [s.error_message() for s in specs if s.rules]
+    msgs = [s.error_message() for s in PERMIT_COLUMNS if s.rules]
     return F.concat_ws(", ", *[F.nullif(m, F.lit("")) for m in msgs])

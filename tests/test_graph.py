@@ -113,10 +113,10 @@ def test_canonical_picks_highest_quality_then_lowest_id(spark):
     assert out == {1: (2, 3), 10: (10, 2)}
 
 
-def test_canonical_without_quality_is_min_id(spark):
+def test_canonical_equal_quality_is_min_id(spark):
     comp = connected_components(_edges(spark, [(7, 5), (5, 9)]))
-    docs = spark.createDataFrame([(5,), (7,), (9,)], "doc_id long")
-    out = canonical_per_cluster(comp, docs).collect()
+    docs = spark.createDataFrame([(5, 1), (7, 1), (9, 1)], "doc_id long, q long")
+    out = canonical_per_cluster(comp, docs, quality_col="q").collect()
     assert len(out) == 1
     assert (out[0].component, out[0].canonical_id, out[0].cluster_size) == (5, 5, 3)
 

@@ -4,6 +4,8 @@ broadcast, anti-join)."""
 
 from __future__ import annotations
 
+import os
+
 from extract_permits_spark.plans import analytics
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -925,3 +927,64 @@ def test_permit_chain_plan_shape(spark):
         assert executed.count("BroadcastHashJoin") >= 2, label
         got = sum(1 for ln in executed.splitlines() if exchange.match(ln))
         assert got == n_exchanges, (label, got)
+
+
+_GOLDEN_PLAN = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "golden", "validated_permits_plan.txt"
+)
+
+
+def _validated_permits_plan_text(spark) -> str:
+    """The optimized plan of ``validated_permits`` over the fixtures, with
+    and without a warehouse frame, exprIds stripped and the common
+    subexpression aliases (``_common_expr_<n>``, numbered by a global
+    counter) renumbered in order of first use."""
+    import re
+    from decimal import Decimal
+
+    from extract_permits_spark.plans.permits import (
+        permits_from_tpch,
+        validated_permits,
+    )
+    from extract_permits_spark.sources.readers import IASWORLD_PERMIT_SCHEMA
+
+    raw, uni = permits_from_tpch(spark, SF_DIR)
+    existing = spark.createDataFrame(
+        [("00000000000001", "1996-01-02 00:00:00.000", Decimal("1.00"),
+          "1 N,,CHICAGO, IL", "O", "100000001", "x")],
+        IASWORLD_PERMIT_SCHEMA,
+    )
+    out = []
+    for label, ex in (("no-existing", None), ("existing", existing)):
+        plan = validated_permits(raw, uni, ex)._jdf.queryExecution().optimizedPlan()
+        out += [f"== {label} ==", re.sub(r"#\d+L?", "", plan.toString())]
+    ids: dict[str, str] = {}
+    return re.sub(
+        r"_common_expr_\d+",
+        lambda m: ids.setdefault(m.group(), f"_common_expr_{len(ids)}"),
+        "\n".join(out) + "\n",
+    )
+
+
+def test_validated_permits_optimized_plan_golden(spark):
+    """The whole optimized plan of the §3.1 chain, not just its staging
+    counts: a refactor of the permit chain (specs, operators/{clean,
+    dedup,enrich,joins,validate}.py, plans/permits.py) that claims to
+    keep the plan must leave this text unchanged. The shuffle partition
+    count is pinned here because the plan's repartition reads it. On a
+    deliberate plan change, regenerate the golden from
+    ``_validated_permits_plan_text`` and say why in the commit."""
+    import difflib
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        got = _validated_permits_plan_text(spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    want = open(_GOLDEN_PLAN).read()
+    if got != want:
+        diff = "".join(difflib.unified_diff(
+            want.splitlines(True), got.splitlines(True), "golden", "current", n=1
+        ))
+        raise AssertionError(f"validated_permits plan moved:\n{diff[:6000]}")

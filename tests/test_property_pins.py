@@ -113,3 +113,78 @@ def test_group_cumsum_weight_types_match_window_model(spark, rows):
     for k, (ci, cd) in want.items():
         assert got_i[k] == ci, (k, got_i[k], ci)
         assert got_d[k] == cd, (k, got_d[k], cd)
+
+
+def _iso(dt) -> str:
+    # ISO_TS_FMT (yyyy-MM-dd'T'HH:mm:ss.SSSSSS), year zero-padded to 4
+    return (
+        f"{dt.year:04d}-{dt.month:02d}-{dt.day:02d}T"
+        f"{dt.hour:02d}:{dt.minute:02d}:{dt.second:02d}.{dt.microsecond:06d}"
+    )
+
+
+_ISO_SHAPE = re.compile(r"\d{4,}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6}")
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(st.datetimes(), min_size=1, max_size=40),
+    st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=9999),
+            st.integers(min_value=0, max_value=99),
+            st.integers(min_value=0, max_value=99),
+        ),
+        max_size=20,
+    ),
+    st.lists(
+        st.one_of(
+            st.none(), st.text(max_size=30).filter(lambda s: not _ISO_SHAPE.fullmatch(s))
+        ),
+        max_size=20,
+    ),
+)
+def test_date_rules_agree(spark, stamps, fields, texts):
+    """P3 (parse_and_display_date), E1's issue-date rule and P13's
+    canonical_permdt are three spellings of one date: any timestamp in
+    ISO_TS_FMT displays as a string E1 accepts and P13 maps back to the
+    same day at midnight; month/day fields that form no real date, and
+    any text not in ISO_TS_FMT, display as NULL."""
+    from datetime import datetime
+
+    from extract_permits_spark.operators.clean import (
+        canonical_permdt,
+        parse_and_display_date,
+    )
+    from extract_permits_spark.specs import PERMIT_COLUMNS
+
+    def real(y, m, d):
+        try:
+            return datetime(y, m, d)
+        except ValueError:
+            return None
+
+    cases = [(_iso(t), t) for t in stamps]
+    cases += [
+        (f"{y:04d}-{m:02d}-{d:02d}T00:00:00.000000", real(y, m, d)) for y, m, d in fields
+    ]
+    cases += [(s, None) for s in texts]
+    rule = next(s for s in PERMIT_COLUMNS if s.name == "issue_date").error_message()
+    df = spark.createDataFrame([(s,) for s, _ in cases], "raw string")
+    got = (
+        df.select(parse_and_display_date("raw").alias("issue_date"))
+        .select(
+            "issue_date",
+            rule.alias("errors"),
+            canonical_permdt("issue_date").alias("permdt"),
+        )
+        .collect()
+    )
+    for (raw, want), row in zip(cases, got):
+        if want is None:
+            assert row["issue_date"] is None, repr(raw)
+            continue
+        assert row["issue_date"] == f"{want.month}/{want.day}/{want.year:04d}", repr(raw)
+        assert row["errors"] == "", (raw, row["errors"])
+        day = f"{want.year:04d}-{want.month:02d}-{want.day:02d}"
+        assert row["permdt"] == f"{day} 00:00:00.000", repr(raw)

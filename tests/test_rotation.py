@@ -166,6 +166,21 @@ def test_module_docstring_edit_flags_no_entry(tmp_path, monkeypatch):
     assert constant == {"demo_clip": ["extract_permits_spark.functions.demo"]}
 
 
+def test_alias_import_reaches_the_imported_def(tmp_path, monkeypatch):
+    """`from X import f as g` walks f in X, not g: an entry that calls an
+    alias-imported helper is flagged when that helper's body changes."""
+    consumer = _DEMO_CONSUMER.replace(
+        "import clip\n", "import clip as _clip\n"
+    ).replace("return clip(5)", "return _clip(5)")
+    files = {"functions/demo.py": _DEMO_HELPER, "plans/analytics_demo.py": consumer}
+    flagged = _demo_flags(
+        tmp_path, monkeypatch,
+        lambda src: src.replace("return min(x, LIMIT)", "return max(x, LIMIT)"),
+        files, "functions/demo.py",
+    )
+    assert flagged == {"demo_clip": ["extract_permits_spark.functions.demo"]}
+
+
 def test_chunk_granularity_drops_untouched_entries(tmp_path, monkeypatch):
     """The r14 body-granular rule: an edit inside one chunk entry must
     not flag the chunk's unrelated entries (the pre-r14 behavior flagged

@@ -233,3 +233,19 @@ def test_s1_socrata_pull_reads_through_data_source(spark):
     )
     got = sorted(tuple(r) for r in df.collect())
     assert got and got == sorted(tuple(r) for r in want.collect())
+
+
+def test_s1_socrata_pull_runs_in_a_plain_session(spark):
+    """Python filter pushdown is off by default, and Spark refuses to plan
+    a reader that implements pushFilters without it: the entry sets the
+    conf itself, so a session built without it still runs the pull."""
+    from conftest import SF_DIR
+    from extract_permits_spark.plans.analytics_core import s1_socrata_pull
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert s1_socrata_pull(spark, SF_DIR).count() > 0
+    finally:
+        spark.conf.set(key, prev)

@@ -71,6 +71,8 @@ def test_read_socrata_distributed_pull(spark):
         {"permit_": "B", "issue_date": "2023-05-01T00:00:00.000", "pin_list": None},
         {"permit_": "C", "issue_date": "2024-01-01T00:00:00.000", "pin_list": "3"},
     ]
+    # the reader implements pushFilters: Spark plans it only with this set
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SocrataDataSource)
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "recs.jsonl")

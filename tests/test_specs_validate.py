@@ -34,11 +34,11 @@ GOOD = (
 
 
 def test_registry_invariants():
-    assert [s.col_idx for s in specs.PERMIT_COLUMNS] == list(
-        range(len(specs.PERMIT_COLUMNS))
-    )
+    # list order is the column order; names and headers address columns
     names = [s.name for s in specs.PERMIT_COLUMNS]
     assert len(set(names)) == len(names)
+    headers = [s.header for s in specs.PERMIT_COLUMNS]
+    assert len(set(headers)) == len(headers)
 
 
 def test_organize_columns_renames_fills_orders(spark):
@@ -56,7 +56,9 @@ def test_good_row_passes_bad_rows_partition(spark):
     bad_amount = GOOD[:3] + ("0",) + GOOD[4:]  # below lower bound
     bad_pin = ("123",) + GOOD[1:]
     df = _permits(spark, [GOOD, bad_amount, bad_pin])
-    upload, review = validate.partition_valid(validate.with_validation(df))
+    upload, review = validate.partition_valid(
+        validate.with_validation(df, extra_error=F.lit(False))
+    )
     assert upload.count() == 1
     rev = {r["pin"]: r["errors"] for r in review.collect()}
     assert "Amount must be at least 1" in rev["12081000060000"]
@@ -91,7 +93,11 @@ def test_e4_property_has_error_iff_messages(spark):
     rng = random.Random(42)
     rows = [_random_row(rng) for _ in range(300)]
     df = _permits(spark, rows)
-    out = validate.with_validation(df).select("has_error", "errors").collect()
+    out = (
+        validate.with_validation(df, extra_error=F.lit(False))
+        .select("has_error", "errors")
+        .collect()
+    )
     for r in out:
         assert r["has_error"] == (r["errors"] != ""), r
 

@@ -86,10 +86,10 @@ def test_fill_round_trip_and_flag_semantics(tmp_xlsx):
 
 
 def test_flag_color_equivalences():
-    """RGB-without-alpha and theme-tint forms (reference pin_cell_matches_flag
-    handles both, format_reviewed_permits_for_upload.py:39-83)."""
-    # the reference matches full ARGB strings only (its alpha-stripped
-    # fallback compares 6 chars against 8-char set entries — never true)
+    """ARGB and theme-tint forms (reference pin_cell_matches_flag,
+    format_reviewed_permits_for_upload.py:39-83)."""
+    # full ARGB strings only: the reference's alpha-stripped fallback
+    # compares 6 chars against 8-char set entries, so it is never true
     assert not fill_matches_flag("FFFF00")
     assert not fill_matches_flag("AAFFFF00")
     assert fill_matches_flag("#FFFFC000")  # leading # stripped like the ref
@@ -159,10 +159,10 @@ def test_save_workbook_round_trip(spark):
 
 
 def test_save_workbook_with_specs(spark):
-    """Specs drive header renames, col_idx order, and widths."""
+    """Specs drive header renames, in list order, and widths."""
     from extract_permits_spark.specs import PERMIT_COLUMNS
 
-    cols = [s for s in sorted(PERMIT_COLUMNS, key=lambda s: s.col_idx)[:3]]
+    cols = PERMIT_COLUMNS[:3]
     df = spark.createDataFrame(
         [tuple(f"v{i}" for i in range(len(cols)))],
         ", ".join(f"{s.name} string" for s in reversed(cols)),
@@ -208,14 +208,12 @@ def test_reviewed_workbook_ingest(spark):
 def test_presentation_frame_order(spark):
     from extract_permits_spark.specs import PERMIT_COLUMNS
 
-    names = [s.name for s in sorted(PERMIT_COLUMNS, key=lambda s: s.col_idx)]
+    names = [s.name for s in PERMIT_COLUMNS]
     df = spark.createDataFrame(
         [tuple("x" for _ in names)], ", ".join(f"{n} string" for n in reversed(names))
     )
     out = presentation_frame(df, PERMIT_COLUMNS)
-    assert out.columns == [
-        s.header for s in sorted(PERMIT_COLUMNS, key=lambda s: s.col_idx)
-    ]
+    assert out.columns == [s.header for s in PERMIT_COLUMNS]
 
 
 def test_freeze_rows_and_cols_pane(tmp_xlsx):

@@ -83,6 +83,7 @@ class ModInfo:
         tree = ast.parse(open(path).read())
         self.alias_mod: dict[str, str] = {}      # local name -> module it IS
         self.fromname_mod: dict[str, str] = {}   # local name -> module it came FROM
+        self.fromname_sym: dict[str, str] = {}   # local name -> its name in that module
         self.registered: dict[str, str] = {}     # registry entry -> function name
         self.symbol_names: dict[str, set[str]] = {}  # top-level def -> names used
         for node in ast.walk(tree):
@@ -98,6 +99,7 @@ class ModInfo:
                         self.alias_mod[nm] = cand  # `from pkg import mod`
                     else:
                         self.fromname_mod[nm] = node.module
+                        self.fromname_sym[nm] = a.name  # `import f as g` walks f
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 names: set[str] = set()
@@ -256,12 +258,12 @@ def affected_entries(ref: str, exempt: set[str] | frozenset = frozenset()):
             if n in mi.alias_mod:
                 reach |= _attr_expand(mi.alias_mod[n])
             elif n in mi.fromname_mod:
-                src = mi.fromname_mod[n]
+                src, name = mi.fromname_mod[n], mi.fromname_sym[n]
                 if depth < _SYMBOL_DEPTH:
-                    reach |= symbol_reach(src, n, depth + 1, seen, attrib)
+                    reach |= symbol_reach(src, name, depth + 1, seen, attrib)
                 else:
                     if attrib is not None:
-                        attrib.add((src, n))
+                        attrib.add((src, name))
                         for cm in expand(src) - {src}:
                             attrib.add((cm, "*"))
                     reach |= expand(src)
