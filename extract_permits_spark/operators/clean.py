@@ -10,7 +10,7 @@ it reproduces (path:line into /root/reference).
 from __future__ import annotations
 
 from functools import reduce
-from typing import Mapping, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,8 +45,8 @@ def parse_and_display_date(c: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 # P4 — PIN normalize, main path: strip '-', 10-digit → +'0000', NA → ''.
 # Reference: format_pin, chicago/permit_cleaning.py:615-630.
-# Split in two so plans/permits.clean_permits can stage the stripped form
-# as a column (it feeds three branches of the final expression).
+# P4 is ``pad_stripped_pin(strip_pin(c))``; clean_permits stages the
+# stripped form as a column (it feeds three branches of the padding).
 # ---------------------------------------------------------------------------
 
 
@@ -61,10 +61,6 @@ def pad_stripped_pin(stripped: Column | str) -> Column:
         stripped
     )
     return F.coalesce(padded, F.lit(""))
-
-
-def format_pin(c: Column | str) -> Column:
-    return pad_stripped_pin(strip_pin(c))
 
 
 # ---------------------------------------------------------------------------
@@ -160,8 +156,8 @@ def cookviewer_link(addr: Column | str) -> Column:
     return F.when(addr.isNotNull() & (addr != ""), formula).otherwise(F.lit(""))
 
 
-# P11 split in two like P4: clean_permits stages the digits-only form,
-# which feeds both the length test and the formula.
+# P11 is ``pin_link_from_digits(pin, pin_digits(pin))``; clean_permits
+# stages the digits-only form, which feeds the length test and the formula.
 def pin_digits(pin: Column | str) -> Column:
     pin = F.col(pin) if isinstance(pin, str) else pin
     return F.regexp_replace(pin, r"\D", "")
@@ -178,10 +174,6 @@ def pin_link_from_digits(pin: Column | str, digits: Column | str) -> Column:
         .when(F.length(digits) == 14, formula)
         .otherwise(pin)
     )
-
-
-def pin_detail_link(pin: Column | str) -> Column:
-    return pin_link_from_digits(pin, pin_digits(pin))
 
 
 # ---------------------------------------------------------------------------
@@ -221,22 +213,16 @@ def canonical_description(c: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# P15 — ensure-columns / schema conformance: add missing as typed NULLs and
-# project in canonical order. Reference: chicago/legacy_permits/helper.R:85-90,
-# chicago/permit_cleaning.py:661-664.
+# P15 — ensure-columns / schema conformance: add missing as string NULLs
+# and project in canonical order. Reference:
+# chicago/legacy_permits/helper.R:85-90, chicago/permit_cleaning.py:661-664.
 # ---------------------------------------------------------------------------
 
 
-def ensure_columns(
-    df: DataFrame, order: Sequence[str], types: Mapping[str, str] | None = None
-) -> DataFrame:
-    types = types or {}
+def ensure_columns(df: DataFrame, order: Sequence[str]) -> DataFrame:
     have = set(df.columns)
     return df.select(
-        *[
-            F.col(c) if c in have else F.lit(None).cast(types.get(c, "string")).alias(c)
-            for c in order
-        ]
+        *[F.col(c) if c in have else F.lit(None).cast("string").alias(c) for c in order]
     )
 
 
@@ -248,8 +234,8 @@ def ensure_columns(
 ZERO_PIN = "00000000000000"
 
 
-def drop_blocklisted_pins(df: DataFrame, pin_col: str = "pin") -> DataFrame:
-    return df.where(F.col(pin_col) != ZERO_PIN)
+def drop_blocklisted_pins(df: DataFrame) -> DataFrame:
+    return df.where(F.col("pin") != ZERO_PIN)
 
 
 # Excel serial date decode (origin 1899-12-30).

@@ -80,16 +80,10 @@ def connected_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def canonical_per_cluster(
-    components: DataFrame,
-    docs: DataFrame,
-    quality_col: str,
-) -> DataFrame:
-    """One canonical survivor per duplicate cluster.
-
-    Joins ``(id, component)`` back to ``docs`` and keeps, per component,
-    the row with the highest ``quality_col`` (ties → lowest ``doc_id``,
-    so the choice is deterministic). Returns
+def canonical_per_cluster(components: DataFrame, docs: DataFrame) -> DataFrame:
+    """One canonical survivor per duplicate cluster: joined to ``docs``
+    (``doc_id``, ``text``), the member with the longest text survives (a
+    NULL text counts as empty), ties to the lowest ``doc_id``. Returns
     ``(component, canonical_id, cluster_size)``.
 
     One shuffle on ``component`` (the window); the docs join broadcasts
@@ -98,9 +92,10 @@ def canonical_per_cluster(
     """
     from pyspark.sql import Window
 
-    joined = components.join(docs.select(F.col("doc_id").alias("id"), quality_col), "id")
+    quality = F.length(F.coalesce("text", F.lit(""))).alias("_quality")
+    joined = components.join(docs.select(F.col("doc_id").alias("id"), quality), "id")
     w = Window.partitionBy("component").orderBy(
-        F.col(quality_col).desc(), F.col("id").asc()
+        F.col("_quality").desc(), F.col("id").asc()
     )
     return (
         joined.withColumn("_rn", F.row_number().over(w))

@@ -58,7 +58,7 @@ def legacy_flag_columns(
     note_col: str = "work_description",
     name_col: str = "applicant",
     in_universe_col: str | None = "in_universe",
-    dup_col: str | None = "is_duplicate",
+    dup_col: str = "is_duplicate",
 ) -> DataFrame:
     """E3: legacy path's boolean flag columns + conjunction → valid_row.
 
@@ -95,8 +95,7 @@ def legacy_flag_columns(
     }
     if in_universe_col is not None:
         flags["valid_universe"] = F.coalesce(c(in_universe_col), F.lit(False))
-    if dup_col is not None:
-        flags["valid_not_duplicate"] = ~F.coalesce(c(dup_col), F.lit(False))
+    flags["valid_not_duplicate"] = ~F.coalesce(c(dup_col), F.lit(False))
     out = df
     for name, expr in flags.items():
         out = out.withColumn(name, expr)

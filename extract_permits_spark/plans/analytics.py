@@ -176,11 +176,16 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # that reach it through alias imports (vocab_bpe_train, vocab_bpe_encode,
 # stream_decontaminate_ingest, queued in (b) for the earlier session
 # edit) match their oracles at sf0.01.
+# operators/reshape lost four options, each the one value every caller
+# used; x1_explode_pipe_list, x3_unpivot and permit_pipeline_* keep their
+# optimized plans (tools/registry_plans.py at sf0.001: all entries equal
+# the parent commit's) and match their oracles at sf0.01.
 _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.clean",
     "extract_permits_spark.operators.dedup",
     "extract_permits_spark.operators.enrich",
     "extract_permits_spark.operators.joins",
+    "extract_permits_spark.operators.reshape",
     "extract_permits_spark.operators.validate",
     "extract_permits_spark.plans._registry",
     "extract_permits_spark.plans.permits",

@@ -347,9 +347,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from extract_permits_spark.operators.graph import canonical_per_cluster
 
     d = load_table(spark, sf_dir, "documents")
-    docs_q = d.select("doc_id", F.length(F.coalesce("text", F.lit(""))).alias("_quality"))
-    comps = _components_cached(spark, sf_dir)
-    return canonical_per_cluster(comps, docs_q, quality_col="_quality")
+    return canonical_per_cluster(_components_cached(spark, sf_dir), d)
 
 
 

@@ -1869,12 +1869,7 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     filt = docs_pretrain_filter(spark, sf_dir).select("doc_id", "source", "n_toks")
     comp = _components_cached(spark, sf_dir).select("id", "component")
-    quality = d.select(
-        "doc_id", F.length(F.coalesce("text", F.lit(""))).alias("_quality")
-    )
-    canon = canonical_per_cluster(comp, quality, quality_col="_quality").select(
-        "component", "canonical_id"
-    )
+    canon = canonical_per_cluster(comp, d).select("component", "canonical_id")
     kept = (
         filt.join(comp, filt.doc_id == comp.id, "left")
         .join(canon, "component", "left")

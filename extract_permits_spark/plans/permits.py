@@ -63,7 +63,7 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
     byte-based partition coalescing misjudges cost: the pre-explode rows
     are narrow (a few MB at sf0.1), so AQE coalesces the upstream shuffle
     to ONE partition — and then the regexp-heavy cleaning, the ~4× PIN
-    explode, the 37-branch keyword tag, validation, and the sink all run
+    explode, the 38-branch keyword tag, validation, and the sink all run
     on a single core (measured 7.5s → 2.5s at sf0.1/local[32] from this
     repartition alone). The explicit partition count is deliberate:
     ``repartition(col)`` without a count is itself subject to AQE
@@ -97,7 +97,7 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
         "cookviewer_link", cookviewer_link("property_address")  # P10
     )
     exploded = explode_multi_value(pre, "pin_list", out_col="solo_pin")  # X1+X2
-    # P4 staged: the stripped form feeds three branches of format_pin —
+    # P4 staged: the stripped form feeds three branches of pad_stripped_pin —
     # materialize it once instead of three regexp_replace evaluations per
     # row (Catalyst doesn't CSE across branches; see SCALE.md)
     formatted = (
@@ -122,7 +122,7 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
         .drop("_digits")
     )
     # P9 is applied LAST in run_pipeline (after validation): any projection
-    # added ON TOP of the 37-branch keyword expression makes Catalyst's
+    # added ON TOP of the 38-branch keyword expression makes Catalyst's
     # CollapseProject re-inline its staged subexpressions — measured +11 s
     # at sf0.1. Nothing downstream reads matched_keywords, so it goes on
     # top of the final frame instead.
@@ -147,8 +147,8 @@ def validated_permits(
         flag_col="in_universe",
     )
     validated = with_validation(flagged, extra_error=~F.col("in_universe"))  # E1+E2
-    # P9 last: no projection may sit above the 37-branch keyword expression
-    # or CollapseProject re-inlines its staged lower() 37× (see clean_permits)
+    # P9 last: no projection may sit above the 38-branch keyword expression
+    # or CollapseProject re-inlines its staged lower() 38× (see clean_permits)
     return tag_keywords(validated, "work_description")
 
 

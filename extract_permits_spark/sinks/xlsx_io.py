@@ -88,7 +88,6 @@ class DataValidation:
     formula2: str | None = None
     operator: str | None = None  # between | greaterThanOrEqual | ...
     allow_blank: bool = True
-    show_error: bool = True
     error_style: str = "stop"  # stop | warning | information
     error_title: str | None = None
     error_message: str | None = None
@@ -431,8 +430,7 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
                 attrs.append(f'operator="{dv.operator}"')
             if dv.allow_blank:
                 attrs.append('allowBlank="1"')
-            if dv.show_error:
-                attrs.append('showErrorMessage="1"')
+            attrs.append('showErrorMessage="1"')
             if dv.error_style != "stop":  # stop is the schema default
                 attrs.append(f'errorStyle="{dv.error_style}"')
             if dv.error_title:

@@ -5,15 +5,15 @@ sources/socrata.py): register once, then
 
     spark.dataSource.register(SocrataDataSource)
     spark.read.format("socrata")
-         .option("date_col", "issue_date")
          .option("start_date", "1900-01-01").option("end_date", "3000-01-01")
          .load()
          .where("issue_date >= '2023-01-01'")   # ← pushed into the fetch
 
-``pushFilters`` narrows the date window from Catalyst's filters (the SoQL
-``$where`` the reference hand-builds, chicago/permit_cleaning.py:539-554),
-``partitions()`` splits the window into one fetch per task, and each task
-pulls only its slice. Partitions are window-sized
+``pushFilters`` narrows the date window from Catalyst's filters on the
+``DATE_COL`` (``issue_date``) column (the SoQL ``$where`` the reference
+hand-builds, chicago/permit_cleaning.py:539-554), ``partitions()``
+splits the window into one fetch per task, and each task pulls only its
+slice. Partitions are window-sized
 (``socrata.partition_date_range``): a window of up to 31 days — the
 reference's monthly pull — is one partition and one fetch, and longer
 ranges split into month-or-longer windows, at most ``num_partitions``. The
@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from extract_permits_spark.sources.readers import PERMITS_RAW_SCHEMA
 from extract_permits_spark.sources.socrata import partition_date_range
 
+DATE_COL = "issue_date"
 _DECODER = json.JSONDecoder()
 _WS = re.compile(r"[ \t\n\r]*")
 
@@ -89,7 +90,6 @@ class DateWindow(InputPartition):
 class SocrataReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
         self.schema_ = schema
-        self.date_col = options.get("date_col", "issue_date")
         self.start = options.get("start_date", "1900-01-01")
         self.end = options.get("end_date", "3000-01-01")
         self.num_partitions = int(options.get("num_partitions", "8"))
@@ -101,15 +101,11 @@ class SocrataReader(DataSourceReader):
         accept, and Spark evaluates the filters exactly post-scan."""
         for f in filters:
             col = f.attribute[0] if hasattr(f, "attribute") else None
-            if col == self.date_col and isinstance(
-                f, (GreaterThan, GreaterThanOrEqual)
-            ):
+            if col == DATE_COL and isinstance(f, (GreaterThan, GreaterThanOrEqual)):
                 self.start = max(self.start, str(f.value)[:10])
-            elif col == self.date_col and isinstance(
-                f, (LessThan, LessThanOrEqual)
-            ):
+            elif col == DATE_COL and isinstance(f, (LessThan, LessThanOrEqual)):
                 self.end = min(self.end, str(f.value)[:10])
-            elif col == self.date_col and isinstance(f, EqualTo):
+            elif col == DATE_COL and isinstance(f, EqualTo):
                 self.start = self.end = str(f.value)[:10]
             yield f
 
@@ -123,7 +119,7 @@ class SocrataReader(DataSourceReader):
         names = [f.name for f in self.schema_.fields]
         for line in self._fetch(partition.start, partition.end):
             rec = json.loads(line)
-            d = rec.get(self.date_col)
+            d = rec.get(DATE_COL)
             # same SoQL date-prefix semantics as the window split
             if not isinstance(d, str) or not (partition.start <= d[:10] <= partition.end):
                 continue

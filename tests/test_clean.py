@@ -31,7 +31,8 @@ def test_assemble_address_preserves_empty_parts(spark):
 
 
 def test_format_pin_cases(spark):
-    f = clean.format_pin("p")
+    # the reference's format_pin is the two staged P4 pieces composed
+    f = clean.pad_stripped_pin(clean.strip_pin("p"))
     assert _one(spark, f, p="12-08-100-006-0000") == "12081000060000"
     assert _one(spark, f, p="1208100006") == "12081000060000"
     assert _one(spark, f, p=None) == ""
@@ -80,7 +81,8 @@ def test_excel_serial_to_date(spark):
 
 
 def test_pin_detail_link_cases(spark):
-    f = clean.pin_detail_link("p")
+    # the reference's make_pin_hyperlink is the two staged P11 pieces composed
+    f = clean.pin_link_from_digits("p", clean.pin_digits("p"))
     assert _one(spark, f, p=None) == "NO PIN FOUND"
     assert _one(spark, f, p="12-08-100-006-0000").startswith("=HYPERLINK")
     assert _one(spark, f, p="123, 456") == "123, 456"  # pass-through

@@ -99,24 +99,32 @@ def test_null_endpoint_raises(spark):
         connected_components(_edges(spark, [(1, 2), (None, 3)]))
 
 
-def test_canonical_picks_highest_quality_then_lowest_id(spark):
-    comp = connected_components(_edges(spark, [(1, 2), (2, 3), (10, 11)]))
-    docs = spark.createDataFrame(
-        [(1, 5), (2, 9), (3, 9), (10, 1), (11, 1)], "doc_id long, q long"
+def _texts(spark, lengths):
+    """``(doc_id, text)`` docs whose text lengths are ``lengths[doc_id]``;
+    a ``None`` length is a NULL text."""
+    return spark.createDataFrame(
+        [(i, None if n is None else "x" * n) for i, n in lengths.items()],
+        "doc_id long, text string",
     )
+
+
+def test_canonical_picks_highest_quality_then_lowest_id(spark):
+    comp = connected_components(_edges(spark, [(1, 2), (2, 3), (10, 11), (20, 21)]))
+    docs = _texts(spark, {1: 5, 2: 9, 3: 9, 10: 1, 11: 1, 20: None, 21: 1})
     out = {
         r.component: (r.canonical_id, r.cluster_size)
-        for r in canonical_per_cluster(comp, docs, quality_col="q").collect()
+        for r in canonical_per_cluster(comp, docs).collect()
     }
-    # cluster {1,2,3}: quality tie 9 between 2 and 3 -> lowest id 2
+    # cluster {1,2,3}: length tie 9 between 2 and 3 -> lowest id 2
     # cluster {10,11}: tie -> 10
-    assert out == {1: (2, 3), 10: (10, 2)}
+    # cluster {20,21}: a NULL text counts as empty, never beating 21's text
+    assert out == {1: (2, 3), 10: (10, 2), 20: (21, 2)}
 
 
 def test_canonical_equal_quality_is_min_id(spark):
     comp = connected_components(_edges(spark, [(7, 5), (5, 9)]))
-    docs = spark.createDataFrame([(5, 1), (7, 1), (9, 1)], "doc_id long, q long")
-    out = canonical_per_cluster(comp, docs, quality_col="q").collect()
+    docs = _texts(spark, {5: 1, 7: 1, 9: 1})
+    out = canonical_per_cluster(comp, docs).collect()
     assert len(out) == 1
     assert (out[0].component, out[0].canonical_id, out[0].cluster_size) == (5, 5, 3)
 

@@ -12,7 +12,11 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
-from extract_permits_spark.operators.clean import format_pin, normalize_pin_legacy
+from extract_permits_spark.operators.clean import (
+    normalize_pin_legacy,
+    pad_stripped_pin,
+    strip_pin,
+)
 
 PIN_CHARS = st.text(alphabet="0123456789-abcZ ½", min_size=0, max_size=20)
 
@@ -44,7 +48,8 @@ def model_main(s: str | None) -> str:
 def test_pin_normalizers_match_python_model(spark, pins):
     df = spark.createDataFrame([(p,) for p in pins], "p string")
     got = df.select(
-        normalize_pin_legacy("p").alias("legacy"), format_pin("p").alias("main")
+        normalize_pin_legacy("p").alias("legacy"),
+        pad_stripped_pin(strip_pin("p")).alias("main"),
     ).collect()
     for s, row in zip(pins, got):
         assert row["legacy"] == model_legacy(s), repr(s)

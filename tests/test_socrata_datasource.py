@@ -7,9 +7,11 @@ import os
 import tempfile
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
 from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, IsNotNull, LessThan
 
+from extract_permits_spark.sources.readers import PERMITS_RAW_SCHEMA
 from extract_permits_spark.sources.socrata_datasource import (
     DateWindow,
     SocrataDataSource,
@@ -198,6 +200,79 @@ def test_non_string_json_values_match_spark_json_read(spark, tmp_path):
     assert sorted(got.collect()) == sorted(want.collect())
     flags = {r["permit_"]: r["flag"] for r in got.collect()}
     assert flags == {"A": "true", "B": "false", "C": "yes"}
+
+
+# JSON value texts, spelled the way a response may spell them: the
+# reader must hand each non-string value over exactly as written
+WS = st.sampled_from(["", " ", "  ", "\t", " \t "])
+JSON_STRINGS = st.builds(json.dumps, st.text(max_size=12), ensure_ascii=st.booleans())
+JSON_NUMBERS = st.one_of(
+    st.sampled_from(
+        ["1.50", "1e5", "-0.0", "-0", "0.000", "1E+2", "1.0e-10", "2.50E-3",
+         "12345678901234567890", "-98765432109876543210"]
+    ),
+    st.integers(-(10**25), 10**25).map(str),
+    st.floats(allow_nan=False, allow_infinity=False).map(repr),
+)
+JSON_SCALARS = st.one_of(
+    JSON_STRINGS, JSON_NUMBERS, st.sampled_from(["true", "false", "null"])
+)
+
+
+def _json_array(items, ws):
+    return "[" + ws[0] + ",".join(f"{ws[1]}{v}{ws[2]}" for v in items) + ws[3] + "]"
+
+
+def _json_object(fields, ws):
+    body = ",".join(f"{ws[1]}{json.dumps(k)}{ws[2]}:{ws[3]}{v}" for k, v in fields.items())
+    return "{" + ws[0] + body + ws[1] + "}"
+
+
+JSON_VALUES = st.recursive(
+    JSON_SCALARS,
+    lambda inner: st.one_of(
+        st.builds(_json_array, st.lists(inner, max_size=3), st.lists(WS, min_size=4, max_size=4)),
+        st.builds(
+            _json_object,
+            st.dictionaries(st.text(max_size=4), inner, max_size=3),
+            st.lists(WS, min_size=4, max_size=4),
+        ),
+    ),
+    max_leaves=6,
+)
+# every schema field but the date, plus one the schema does not hold
+OPTIONAL_FIELDS = [n for n in PERMITS_RAW_SCHEMA.fieldNames() if n != "issue_date"] + ["extra"]
+
+
+@st.composite
+def json_records(draw):
+    fields = draw(st.dictionaries(st.sampled_from(OPTIONAL_FIELDS), JSON_VALUES))
+    day = draw(st.integers(1, 28))
+    fields["issue_date"] = json.dumps(f"2023-02-{day:02d}T05:00:00.000")
+    keys = draw(st.permutations(sorted(fields)))
+    return _json_object({k: fields[k] for k in keys}, draw(st.lists(WS, min_size=4, max_size=4)))
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(json_records(), min_size=1, max_size=8))
+def test_json_text_rule_matches_spark_json_read(spark, records):
+    """Over one JSON-lines response, the source's rows equal
+    ``spark.read.schema(PERMITS_RAW_SCHEMA).json``'s: strings decoded,
+    numbers, booleans, objects and arrays as their JSON text exactly as
+    written (whitespace included), null and missing keys as null, fields
+    outside the schema dropped."""
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "response.jsonl")
+        with open(path, "w") as fh:
+            fh.write("\n".join(records) + "\n")
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        spark.dataSource.register(SocrataDataSource)
+        got = spark.read.format("socrata").option("fixture_path", path).load()
+        want = spark.read.schema(PERMITS_RAW_SCHEMA).json(path)
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        )
 
 
 def test_non_string_issue_date_is_outside_every_window(tmp_path):

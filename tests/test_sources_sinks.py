@@ -97,6 +97,60 @@ def test_default_fetch_is_stubbed():
         list(reader.read(reader.partitions()[0]))
 
 
+def test_empty_month_writes_empty_workbooks(spark, tmp_path):
+    """A month whose Socrata response holds no records runs the whole
+    chain and writes both workbooks the monthly run writes: the spec
+    headers plus Ready and Errors, no data rows, and so no traffic
+    lights or validations (those cover the data range only)."""
+    from decimal import Decimal
+
+    from extract_permits_spark.plans.permits import run_pipeline
+    from extract_permits_spark.sinks.xlsx_io import read_xlsx
+    from extract_permits_spark.sources.readers import (
+        IASWORLD_PERMIT_SCHEMA,
+        PIN_UNIVERSE_SCHEMA,
+    )
+    from extract_permits_spark.specs import PERMIT_COLUMNS
+
+    response = tmp_path / "empty.jsonl"
+    response.write_text("")
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(SocrataDataSource)
+    raw = (
+        spark.read.format("socrata")
+        .option("fixture_path", str(response))
+        .option("start_date", "2023-01-01")
+        .option("end_date", "2023-01-31")
+        .load()
+    )
+    universe = spark.createDataFrame(
+        [("12081000060000", "1208100006", "1 MAIN ST", "2023", "City")], PIN_UNIVERSE_SCHEMA
+    )
+    existing = spark.createDataFrame(
+        [("00000000000001", "1996-01-02 00:00:00.000", Decimal("1.00"),
+          "1 N,,CHICAGO, IL", "O", "100000001", "x")], IASWORLD_PERMIT_SCHEMA)
+    upload, review = run_pipeline(raw, universe, existing=existing, cache=True)
+    up_path, rev_path = str(tmp_path / "upload.xlsx"), str(tmp_path / "review.xlsx")
+    excel_sink.save_workbook(
+        upload.withColumn("errors", F.lit("")), up_path,
+        specs=PERMIT_COLUMNS, errors_col="errors", checked=True,
+    )
+    excel_sink.save_workbook(
+        review, rev_path, specs=PERMIT_COLUMNS, errors_col="errors",
+        pin_universe=universe.select("pin"),
+    )
+    headers = [s.header for s in PERMIT_COLUMNS] + ["Ready", "Errors"]
+    assert len(headers) == 10
+    for path in (up_path, rev_path):
+        sheet = read_xlsx(path, "Permits")
+        assert sheet.header == headers
+        assert sheet.rows == []
+        assert sheet.cond_formats == [] and sheet.validations == []
+    assert read_xlsx(rev_path, "Universe of Valid PINs").rows == [
+        ["12081000060000", "12-08-100-006-0000"]
+    ]
+
+
 def test_split_write_and_batches(spark):
     df = spark.createDataFrame(
         [(i, i % 3 == 0) for i in range(20)], "k long, has_error boolean"

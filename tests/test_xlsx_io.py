@@ -11,9 +11,11 @@ from datetime import date, datetime
 
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from extract_permits_spark.sinks.excel_sink import (
     FLAG_FILL_COLORS,
+    LINK_COLUMNS,
     fill_matches_flag,
     flagged_rows_from_frame,
     presentation_frame,
@@ -515,3 +517,49 @@ def test_save_workbook_nullable_int_stays_integer(spark):
         with zipfile.ZipFile(p) as zf:
             xml = zf.read("xl/worksheets/sheet1.xml").decode()
     assert '<c r="A2"><v>1500</v></c>' in xml
+
+
+# XML-legal text with the characters the formula rule turns on
+CELL_TEXT = st.text(alphabet=list("ab<>&=(\"' \t\n") + ["\xa0", "é", "　"], max_size=8)
+FORMULA_LIKE = st.one_of(
+    CELL_TEXT,
+    st.builds(lambda t: f'=HYPERLINK("https://x/{t}", "{t}")', CELL_TEXT),
+    st.builds(lambda t: "=" + t + "(", CELL_TEXT),
+    st.sampled_from(["=no paren", "(=late", "=(", "=", ""]),
+)
+FORMULA_RULE_COLUMNS = ["cookviewer_link", "pin_link", "work_description", "applicant"]
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.lists(
+        st.tuples(*[st.one_of(st.none(), FORMULA_LIKE)] * len(FORMULA_RULE_COLUMNS)),
+        min_size=1,
+        max_size=6,
+    )
+)
+def test_save_workbook_formula_cells_only_in_link_columns(spark, rows):
+    """A text that starts with '=' and holds '(' is written as a formula
+    cell (without the '=') in the link columns only; the same text in any
+    other column, and every other text anywhere, reads back as the same
+    string."""
+    import xml.etree.ElementTree as ET
+
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in FORMULA_RULE_COLUMNS))
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "formulas.xlsx")
+        save_workbook(df, p)
+        got = read_xlsx(p)
+        with zipfile.ZipFile(p) as zf:
+            ws = ET.fromstring(zf.read("xl/worksheets/sheet1.xml"))
+    ns = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+    formulas = {c.get("r"): c.find(f"{ns}f") for c in ws.iter(f"{ns}c")}
+    assert got.header == FORMULA_RULE_COLUMNS
+    for ri, row in enumerate(rows):
+        for ci, (name, text) in enumerate(zip(FORMULA_RULE_COLUMNS, row)):
+            f = formulas.get(f"{'ABCD'[ci]}{ri + 2}")
+            if name in LINK_COLUMNS and text and text.startswith("=") and "(" in text:
+                assert f is not None and (f.text or "") == text[1:], (name, text)
+            else:
+                assert f is None, (name, text)
+                assert got.rows[ri][ci] == text, (name, text)
