@@ -86,22 +86,14 @@ def canonical_per_cluster(components: DataFrame, docs: DataFrame) -> DataFrame:
     NULL text counts as empty), ties to the lowest ``doc_id``. Returns
     ``(component, canonical_id, cluster_size)``.
 
-    One shuffle on ``component`` (the window); the docs join broadcasts
-    when the clustered subset is small, which it is by construction —
-    only documents that appeared in a near-dup pair are present.
+    One shuffle on ``component`` (the aggregate: ``min_by`` over the key
+    (-length, id) picks the survivor); the docs join broadcasts when the
+    clustered subset is small, which it is by construction — only
+    documents that appeared in a near-dup pair are present.
     """
-    from pyspark.sql import Window
-
     quality = F.length(F.coalesce("text", F.lit(""))).alias("_quality")
     joined = components.join(docs.select(F.col("doc_id").alias("id"), quality), "id")
-    w = Window.partitionBy("component").orderBy(
-        F.col("_quality").desc(), F.col("id").asc()
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .groupBy("component")
-        .agg(
-            F.min(F.when(F.col("_rn") == 1, F.col("id"))).alias("canonical_id"),
-            F.count(F.lit(1)).alias("cluster_size"),
-        )
+    return joined.groupBy("component").agg(
+        F.min_by("id", F.struct(-F.col("_quality"), F.col("id"))).alias("canonical_id"),
+        F.count(F.lit(1)).alias("cluster_size"),
     )

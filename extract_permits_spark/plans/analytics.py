@@ -41,9 +41,8 @@ _CHECK_FIRST = [
     # of them in, as the r16 NOTE predicted; (b) the entries changed
     # since the r16 boundary (rotation_audit output against
     # _AUDIT_BASE minus _AUDIT_HYGIENE_MODULES, pinned by
-    # tests/test_rotation.py); (c) the oldest r12-witnessed entries
-    # (ledger order), filling the window to exactly 50. Witness ages
-    # are computed, not hand-tallied: python tools/witness_ledger.py.
+    # tests/test_rotation.py). Witness ages are computed, not
+    # hand-tallied: python tools/witness_ledger.py.
     # (a) the r11 cohort — oldest witnesses in the registry, all 32
     "ev_cube",
     "ev_dau_wau",
@@ -93,10 +92,6 @@ _CHECK_FIRST = [
     "graph_pagerank",
     "llm_corpus_curation",
     "sample_leakage_safe_split",
-    # session.py — the SPARK_GRAFT_CODEGEN_MAXFIELDS and
-    # SPARK_GRAFT_DF_DEBUGGING env overrides became their defaults
-    # (the permit-chain consolidation)
-    "stream_decontaminate_ingest",
     # plans/analytics_core.py — reads through a function-local
     # SocrataReader subclass instead of an RDD of fetches;
     # partition_date_range sizes windows to at least a month (this
@@ -116,10 +111,11 @@ _CHECK_FIRST = [
     # The other consumers it flags are queued above.
     "emb_neardup_components",
     "mm_image_dedup_clusters",
-    # (c) the oldest r12-witnessed entry (ledger order) not already
-    # queued above, filling to exactly 50; the rest of the r12 cohort
-    # defers to r18 where the age bound will force it.
-    "a12_winsorize",
+    # specs.py, plans/permits.py — E1 is one concat_ws over every rule's
+    # message, and P9 tags once per permit, below the multi-PIN explode
+    # (both optimized plans move; the rows are identical)
+    "permit_pipeline_upload",
+    "permit_pipeline_review",
 ]
 
 # Base ref for this round's rotation audit (the r16 boundary commit,
@@ -136,23 +132,23 @@ _CHECK_FIRST = [
 _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # Permit-chain consolidation (one definition per rule; dead twins, unset
 # parameters and the second/third upload-review split removed). Every
-# registry entry these edits flag — j1_preagg_join, j2_anti_join,
-# j6_semi_flag, p9_keyword_tag, permit_pipeline_upload/review,
-# xlsx_review_roundtrip — keeps a byte-identical optimized plan
-# (exprIds stripped) and identical rows at sf0.001 against the parent
-# commit, and validated_permits' plan is identical at sf0.01 with and
-# without a warehouse frame. The removed join hints/parameters each equalled the value
-# every caller used. excel_sink's behaviour change (formula cells only
-# for link columns; the universe sheet rendered by hyphenated_pin)
-# reaches no entry: xlsx_review_roundtrip imports only the unchanged
-# read_reviewed_workbook.
-# The single-shape xlsx sink edits are value-neutral as well: specs'
-# ColumnSpec.fmt and .warehouse_name were read nowhere, validate's
-# legacy_flag_columns(filled_cols=) was passed by no caller, and the
-# validation dicts (specs, excel_sink.READY_VALIDATION) now hold the
-# <dataValidation> fields the deleted dialect compiler produced from
-# them. The entries these edits flag — e3_legacy_flags,
-# permit_pipeline_upload/review, xlsx_review_roundtrip — keep an
+# registry entry the operator edits flag — j1_preagg_join, j2_anti_join,
+# j6_semi_flag, p9_keyword_tag, xlsx_review_roundtrip — keeps a
+# byte-identical optimized plan (exprIds stripped) and identical rows at
+# sf0.001 against the parent commit. The removed join hints/parameters
+# each equalled the value every caller used. excel_sink's behaviour change
+# (formula cells only for link columns; the universe sheet rendered by
+# hyphenated_pin) reaches no entry: xlsx_review_roundtrip imports only the
+# unchanged read_reviewed_workbook.
+# specs.py and plans/permits.py are not exempt: the flat E1 message list
+# and the per-permit keyword tag move validated_permits' optimized plan
+# (its rows are unchanged), so the two entries that reach them,
+# permit_pipeline_upload/review, are queued in (b).
+# The single-shape xlsx sink edits are value-neutral as well: validate's
+# legacy_flag_columns(filled_cols=) was passed by no caller, and
+# excel_sink.READY_VALIDATION now holds the <dataValidation> fields the
+# deleted dialect compiler produced from it. The entries these edits
+# flag — e3_legacy_flags, xlsx_review_roundtrip — keep an
 # identical optimized plan (exprIds stripped, sf0.001) and match their
 # oracles at sf0.01, and the upload and review workbooks of four
 # perfbench months (seed 7) are cmp-equal to the parent commit's.
@@ -165,17 +161,16 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # The k-center memo getters' k and batch equalled their one caller's
 # values. The entries flagged by the earlier shared-shingle _registry
 # edit stay queued in (b).
-# So are the one-column-order edits: ColumnSpec lost col_idx (the
-# registry list was already in that order) and dtype (always string), and
-# every parameter, default and None state they removed held the one value
-# each caller used or was reached by no caller; excel_sink's alpha-stripped
-# flag-colour branch was never true. validated_permits' optimized plan is
-# unchanged at sf0.01 and sf0.001, with and without a warehouse frame.
-# session.free_local_checkpoint now frees only a direct localCheckpoint
-# result: a block release moves no entry's values or plan. The entries
-# that reach it through alias imports (vocab_bpe_train, vocab_bpe_encode,
-# stream_decontaminate_ingest, queued in (b) for the earlier session
-# edit) match their oracles at sf0.01.
+# So are excel_sink's one-column-order edits: every parameter, default and
+# None state they removed held the one value each caller used or was
+# reached by no caller, and its alpha-stripped flag-colour branch was
+# never true.
+# session.py: the SPARK_GRAFT_CODEGEN_MAXFIELDS and SPARK_GRAFT_DF_DEBUGGING
+# env overrides became the values they defaulted to, and
+# free_local_checkpoint now frees only a direct localCheckpoint result: a
+# block release moves no entry's values or plan. The entries that reach it
+# through alias imports (vocab_bpe_train, vocab_bpe_encode,
+# stream_decontaminate_ingest) match their oracles at sf0.01.
 # operators/reshape lost four options, each the one value every caller
 # used; x1_explode_pipe_list, x3_unpivot and permit_pipeline_* keep their
 # optimized plans (tools/registry_plans.py at sf0.001: all entries equal
@@ -188,10 +183,8 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.reshape",
     "extract_permits_spark.operators.validate",
     "extract_permits_spark.plans._registry",
-    "extract_permits_spark.plans.permits",
     "extract_permits_spark.session",
     "extract_permits_spark.sinks.excel_sink",
-    "extract_permits_spark.specs",
 }
 
 # r17 rotation NOTE: witness-age arithmetic is computed, not
@@ -199,8 +192,8 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
 # per-entry last-green-round table, and see tests/test_witness_age.py
 # for the enforced bound: every entry whose witness would age past 5
 # rounds at the upcoming driver round must sit in this window.
-# Deferred to r18: the 26 r12-witnessed entries not queued above
-# (ledger order from dedup_containment) — at age 5 the bound will force
+# Deferred to r18: the 27 r12-witnessed entries not queued above
+# (ledger order from a12_winsorize) — at age 5 the bound will force
 # them into the r18 window.
 # The rotation rule is TRANSITIVE over helper imports and BODY-GRANULAR
 # within chunk modules: tools/rotation_audit.py <git-ref> lists every

@@ -1792,8 +1792,9 @@ _PIPE_PIN14 = (
     "lpad(CAST(l_partkey % (SELECT COUNT(*) FROM customer) AS VARCHAR), 14, '0')"
 )
 
-# Per-column error messages in spec order (specs.PERMIT_COLUMNS rules);
-# each mirrors ColumnSpec.error_message's concat_ws-of-fired-rules shape.
+# Per-column error messages in spec order (specs.PERMIT_COLUMNS rules),
+# each the concat_ws of its fired rules; joined with nullif, they give what
+# specs.compile_validation's one concat_ws over every rule gives.
 _PIPE_AMT_V = "TRY_CAST(CAST(amount AS VARCHAR) AS DOUBLE)"
 _PIPE_COL_MSGS = [
     """concat_ws(', ',

@@ -45,16 +45,17 @@ from extract_permits_spark import specs
 
 
 def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
-    """Steps P12→P2/P3/P7/P8→A2/J1→P10/P17→X1/X2→P4→P1→P11 as one plan.
+    """Steps P12→P2/P3/P7/P8→A2/J1→P10/P17→P9→X1/X2→P4→P1→P11 as one plan.
 
     Staging (r5-VERDICT ask #6): every permit-level expression — the
     regexp-heavy address assembly, date parse/display, applicant
-    abbreviation, amount rounding, and the suggested-PINs broadcast probe
-    — is computed BEFORE the multi-PIN explode. The Generate node is a
-    CollapseProject barrier, so Catalyst cannot re-inline these below-
-    explode expressions into the post-explode projections: each evaluates
-    once per PERMIT, and the explode fan-out (~4 PINs/permit in the
-    fixtures) copies attribute values instead of re-running regexps.
+    abbreviation, amount rounding, the suggested-PINs broadcast probe and
+    the 38-branch keyword tag — is computed BEFORE the multi-PIN explode.
+    The Generate node is a CollapseProject barrier, so Catalyst cannot
+    re-inline these below-explode expressions into the post-explode
+    projections: each evaluates once per PERMIT, and the explode fan-out
+    (~4 PINs/permit in the fixtures) copies attribute values instead of
+    re-running regexps or the keyword chain.
     Only the genuinely per-PIN steps (P4 format, P1 registry projection,
     P11 pin link, validation) run on the exploded grain.
 
@@ -96,6 +97,7 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
     pre = pre.withColumn("property_address", F.col("address")).withColumn(  # P17
         "cookviewer_link", cookviewer_link("property_address")  # P10
     )
+    pre = tag_keywords(pre, "work_description")  # P9
     exploded = explode_multi_value(pre, "pin_list", out_col="solo_pin")  # X1+X2
     # P4 staged: the stripped form feeds three branches of pad_stripped_pin —
     # materialize it once instead of three regexp_replace evaluations per
@@ -112,6 +114,7 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
             "suggested_pins",
             "property_address",
             "cookviewer_link",
+            "matched_keywords",
         ],
     )
     # P11 staged: digits-only form used by both the length test and the
@@ -121,11 +124,6 @@ def clean_permits(permits_raw: DataFrame, universe: DataFrame) -> DataFrame:
         .withColumn("pin_link", pin_link_from_digits("pin", "_digits"))
         .drop("_digits")
     )
-    # P9 is applied LAST in run_pipeline (after validation): any projection
-    # added ON TOP of the 38-branch keyword expression makes Catalyst's
-    # CollapseProject re-inline its staged subexpressions — measured +11 s
-    # at sf0.1. Nothing downstream reads matched_keywords, so it goes on
-    # top of the final frame instead.
     return enriched
 
 
@@ -134,8 +132,8 @@ def validated_permits(
     universe: DataFrame,
     existing: DataFrame | None = None,
 ) -> DataFrame:
-    """Full §3.1 chain up to (and including) validation + keyword tagging —
-    the single validated parent both output partitions derive from."""
+    """Full §3.1 chain up to (and including) validation — the single
+    validated parent both output partitions derive from."""
     cleaned = clean_permits(permits_raw, universe)
     if existing is not None:
         cleaned = deduplicate_permits(cleaned, existing)  # P13+J2
@@ -146,10 +144,7 @@ def validated_permits(
         right_key="pin",
         flag_col="in_universe",
     )
-    validated = with_validation(flagged, extra_error=~F.col("in_universe"))  # E1+E2
-    # P9 last: no projection may sit above the 38-branch keyword expression
-    # or CollapseProject re-inlines its staged lower() 38× (see clean_permits)
-    return tag_keywords(validated, "work_description")
+    return with_validation(flagged, extra_error=~F.col("in_universe"))  # E1+E2
 
 
 def run_pipeline(

@@ -88,7 +88,6 @@ class DataValidation:
     formula2: str | None = None
     operator: str | None = None  # between | greaterThanOrEqual | ...
     allow_blank: bool = True
-    error_style: str = "stop"  # stop | warning | information
     error_title: str | None = None
     error_message: str | None = None
 
@@ -272,7 +271,32 @@ def _arrow_parts(a: pa.Array, formula: bool = False) -> list[_Part]:
     ]
 
 
+# ECMA-376 ST_Xstring (§22.9.2.19): a character XML 1.0 forbids, or that a
+# parser rewrites (CR reads back as LF), is written as _xHHHH_, and an
+# underscore that would read back as an escape's start (a literal _xHHHH_,
+# or _xHHHH before a character escaped here) as _x005F_. The class text
+# reads the same in Python's re and in Arrow's RE2.
+_XML_UNSAFE = "\\x00-\\x08\\x0b-\\x1f\ufffe\uffff"
+_XSTRING_ESCAPE = re.compile(rf"[{_XML_UNSAFE}]|_(?=x[0-9A-Fa-f]{{4}}[_{_XML_UNSAFE}])")
+_XSTRING_HIT = rf"[{_XML_UNSAFE}]|_x[0-9A-Fa-f]{{4}}_"  # a superset, for Arrow
+_XSTRING_CODE = re.compile(r"_x([0-9A-Fa-f]{4})_")
+
+
+def _unxstring(text: str) -> str:
+    """Decode ST_Xstring escapes in one left-to-right pass."""
+    return _XSTRING_CODE.sub(lambda m: chr(int(m.group(1), 16)), text) if "_x" in text else text
+
+
 def _escape(a: pa.Array) -> pa.Array:
+    """XML-escape text; the cells that need ST_Xstring escapes take them
+    one by one in Python, every other cell passes through as it is."""
+    hit = pc.fill_null(pc.match_substring_regex(a, _XSTRING_HIT), False)
+    if pc.any(hit).as_py():
+        escaped = [
+            _XSTRING_ESCAPE.sub(lambda m: f"_x{ord(m.group()):04X}_", v)
+            for v in a.filter(hit).to_pylist()
+        ]
+        a = pc.replace_with_mask(a, hit, pa.array(escaped, a.type))
     for ch, ent in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
         a = pc.replace_substring(a, ch, ent)
     return a
@@ -431,8 +455,6 @@ def _sheet_xml(sheet: SheetSpec, styles: _Styles) -> str:
             if dv.allow_blank:
                 attrs.append('allowBlank="1"')
             attrs.append('showErrorMessage="1"')
-            if dv.error_style != "stop":  # stop is the schema default
-                attrs.append(f'errorStyle="{dv.error_style}"')
             if dv.error_title:
                 attrs.append(f"errorTitle={quoteattr(dv.error_title)}")
             if dv.error_message:
@@ -624,7 +646,7 @@ def read_xlsx(path: str, sheet_name: str | None = None) -> ReadSheet:
         if "xl/sharedStrings.xml" in zf.namelist():
             sst = ET.fromstring(zf.read("xl/sharedStrings.xml"))
             for si in sst.findall(_q("si")):
-                shared.append("".join(t.text or "" for t in si.iter(_q("t"))))
+                shared.append(_unxstring("".join(t.text or "" for t in si.iter(_q("t")))))
 
         xf_fills: list[object] = []
         xf_dates: list[bool] = []
@@ -656,7 +678,7 @@ def read_xlsx(path: str, sheet_name: str | None = None) -> ReadSheet:
             if t == "inlineStr":
                 is_el = c.find(_q("is"))
                 values[ci] = (
-                    "".join(tt.text or "" for tt in is_el.iter(_q("t")))
+                    _unxstring("".join(tt.text or "" for tt in is_el.iter(_q("t"))))
                     if is_el is not None
                     else None
                 )

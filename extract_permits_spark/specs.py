@@ -10,10 +10,10 @@ contiguity assert to keep one in step (the reference's :411-424).
 
 Here one ``ColumnSpec`` compiles to everything downstream:
 - the registry projection with renames (P1, ``organize_columns``),
-- a ``Column`` error message (E2) and, derived from it, the validation
-  predicate (E1) — a *single* rail, so the reference's dual-rail sync
-  contract (E4) becomes a non-issue by construction; a property test
-  still asserts predicate ⇔ message-nullity,
+- the ``errors`` message column (E1+E2), one message per failed rule,
+  from which the validation flag derives — a *single* rail, so the
+  reference's dual-rail sync contract (E4) becomes a non-issue by
+  construction,
 - the presentation headers, widths and cell validations of the xlsx sink.
 
 The warehouse names are not restated here: the warehouse mapping is
@@ -51,15 +51,6 @@ class ColumnSpec:
     # no leading "="; sinks/excel_sink.save_workbook fills {COL}/
     # {ERRORS_COL} with column letters (:1070-1077) and the sqref.
     validation: dict | None = None
-
-    def error_message(self) -> Column:
-        """E2: per-column error string — concat_ws skips NULLs exactly like
-        the reference's TEXTJOIN(…, TRUE, …) formula
-        (chicago/permit_cleaning.py:897-908)."""
-        parts = [
-            F.when(pred(F.col(self.name)), F.lit(msg)) for msg, pred in self.rules
-        ]
-        return F.concat_ws(", ", *parts) if parts else F.lit("")
 
 
 # --- rule builders (each mirrors a reference validator; True ⇒ invalid) ----
@@ -276,12 +267,17 @@ def organize_columns(df: DataFrame, keep_extra: Sequence[str] = ()) -> DataFrame
 
 def compile_validation() -> Column:
     """E1+E2 compiler: the ``errors`` message column, every failed rule's
-    message joined by ", " ('' when the row is valid).
+    message joined by ", " in registry then rule order ('' when the row is
+    valid). ``concat_ws`` skips the NULL of a rule that holds, exactly like
+    the reference's TEXTJOIN(", ", TRUE, …) formula
+    (chicago/permit_cleaning.py:897-908).
 
     operators/validate.with_validation derives ``has_error`` from the
     staged column rather than from a second disjunction of the same
     predicates — the reference keeps two rails in sync by convention
     (chicago/permit_cleaning.py:117-124); deriving one from the other
     makes E4 true by construction AND halves rule evaluation."""
-    msgs = [s.error_message() for s in PERMIT_COLUMNS if s.rules]
-    return F.concat_ws(", ", *[F.nullif(m, F.lit("")) for m in msgs])
+    fired = [
+        F.when(pred(F.col(s.name)), F.lit(msg)) for s in PERMIT_COLUMNS for msg, pred in s.rules
+    ]
+    return F.concat_ws(", ", *fired)

@@ -892,8 +892,8 @@ def test_distributed_rank_counts_branch_reuses_range_exchange(spark):
 def test_permit_chain_plan_shape(spark):
     """The §3.1 chain's staging, as ``validated_permits`` builds it over
     the fixtures, with and without a warehouse frame to dedup against:
-    one explode; P9's lowered text staged once for all keyword branches;
-    P4's stripped PIN and P11's digits each computed by ONE
+    one explode; P9's lowered text staged once for all keyword branches,
+    below the explode's Generate (once per permit, not per PIN); P4's stripped PIN and P11's digits each computed by ONE
     regexp_replace (not once per branch that reads them); both
     universe-side joins broadcast; and a fixed exchange count. Each
     staged piece is defined once, in operators/clean.py and
@@ -921,6 +921,13 @@ def test_permit_chain_plan_shape(spark):
         label = "existing" if ex is not None else "no existing"
         assert len(re.findall(r"\bGenerate ", optimized)) == 1, label
         assert optimized.count("lower(") == 1, label
+        lines = optimized.splitlines()
+        gen = next(i for i, ln in enumerate(lines) if re.search(r"\bGenerate ", ln))
+        depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+        keyword = [i for i, ln in enumerate(lines) if "Contains(_kw_lowered" in ln]
+        assert keyword and all(
+            i > gen and depth(lines[i]) > depth(lines[gen]) for i in keyword
+        ), label
         assert len(re.findall(r"regexp_replace\(solo_pin#\d+, -, ", optimized)) == 1, label
         assert len(re.findall(r"regexp_replace\(\w+#\d+, \\D, ", optimized)) == 1, label
         assert optimized.count("rightHint=(strategy=broadcast)") == 2, label

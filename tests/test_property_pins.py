@@ -157,6 +157,8 @@ def test_date_rules_agree(spark, stamps, fields, texts):
     any text not in ISO_TS_FMT, display as NULL."""
     from datetime import datetime
 
+    from pyspark.sql import functions as F
+
     from extract_permits_spark.operators.clean import (
         canonical_permdt,
         parse_and_display_date,
@@ -174,7 +176,10 @@ def test_date_rules_agree(spark, stamps, fields, texts):
         (f"{y:04d}-{m:02d}-{d:02d}T00:00:00.000000", real(y, m, d)) for y, m, d in fields
     ]
     cases += [(s, None) for s in texts]
-    rule = next(s for s in PERMIT_COLUMNS if s.name == "issue_date").error_message()
+    spec = next(s for s in PERMIT_COLUMNS if s.name == "issue_date")
+    rule = F.concat_ws(
+        ", ", *[F.when(pred(F.col("issue_date")), F.lit(msg)) for msg, pred in spec.rules]
+    )
     df = spark.createDataFrame([(s,) for s, _ in cases], "raw string")
     got = (
         df.select(parse_and_display_date("raw").alias("issue_date"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from extract_permits_spark import specs
@@ -100,6 +101,47 @@ def test_e4_property_has_error_iff_messages(spark):
     )
     for r in out:
         assert r["has_error"] == (r["errors"] != ""), r
+
+
+def _per_column_errors():
+    """The earlier E1 composition, kept as the reference: each column's
+    fired messages joined, blanks dropped by nullif, then joined again."""
+    per_column = [
+        F.concat_ws(", ", *[F.when(pred(F.col(s.name)), F.lit(m)) for m, pred in s.rules])
+        for s in specs.PERMIT_COLUMNS
+        if s.rules
+    ]
+    return F.concat_ws(", ", *[F.nullif(m, F.lit("")) for m in per_column])
+
+
+_CELL = st.one_of(
+    st.none(),
+    st.sampled_from(
+        ["", "  ", "\t", "12081000060000", "1208-10-000", "123", "１２3", "100012345",
+         "7/5/2023", "2/30/2023", "2023-07-05", "13/1/2023", "1500", "0", "-5",
+         "2147483648", "1e3", "NaN", "xyz"]
+    ),
+    st.text(max_size=12),
+    st.integers(min_value=39, max_value=2002).map(lambda n: "x" * n),
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.tuples(*[_CELL] * 8), min_size=1, max_size=40))
+def test_flat_errors_equal_per_column_composition(spark, rows):
+    """compile_validation's one concat_ws over every rule gives the same
+    ``errors`` as the per-column concat_ws/nullif composition, on rows with
+    nulls, blanks, over-length text and bad digits, dates and amounts."""
+    got = (
+        _permits(spark, rows)
+        .select(
+            specs.compile_validation().alias("flat"),
+            _per_column_errors().alias("per_column"),
+        )
+        .collect()
+    )
+    for row, r in zip(rows, got):
+        assert r["flat"] == r["per_column"], row
 
 
 def test_legacy_flags_conjunction(spark):

@@ -242,6 +242,31 @@ def test_freeze_rows_and_cols_pane(tmp_xlsx):
     assert 'state="frozen"' in xml
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.text(), st.lists(st.text(), min_size=1, max_size=4))
+def test_text_cells_round_trip_any_string(head, texts):
+    """Every string reads back unchanged, in the header and in data cells,
+    control characters, U+FFFE/U+FFFF, CR and literal _xHHHH_ runs
+    included (ECMA-376 ST_Xstring escapes); a formula cell holding the same
+    text stays well-formed XML."""
+    import xml.etree.ElementTree as ET
+
+    from extract_permits_spark.sinks.xlsx_io import _unxstring
+
+    formulas = ["=" + t + "(" for t in texts]
+    rows = pa.table({"t": texts, "f": formulas})
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "text.xlsx")
+        write_xlsx(p, [SheetSpec("S", [head, "f"], rows, formula_cols=frozenset({1}))])
+        got = read_xlsx(p, "S")
+        with zipfile.ZipFile(p) as zf:
+            ws = ET.fromstring(zf.read("xl/worksheets/sheet1.xml"))
+    ns = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+    assert got.header == [head, "f"]
+    assert [r[0] for r in got.rows] == texts
+    assert [_unxstring(f.text or "") for f in ws.iter(f"{ns}f")] == [t[1:] for t in formulas]
+
+
 def test_reader_error_cells_and_missing_r(tmp_xlsx):
     """r2-ADVICE: externally-produced workbooks (the real S6 input) may
     contain t="e" error cells and cells without the optional r attribute —
@@ -314,7 +339,6 @@ def test_cond_format_and_validation_codec_round_trip(tmp_xlsx):
                         "custom",
                         formula1='$A2=""',
                         allow_blank=False,
-                        error_style="warning",
                     ),
                 ],
             )
@@ -345,7 +369,7 @@ def test_cond_format_and_validation_codec_round_trip(tmp_xlsx):
             "formula1": '$A2=""',
             "formula2": None,
             "allow_blank": False,
-            "error_style": "warning",
+            "error_style": "stop",
             "error_title": None,
             "error_message": None,
         },

@@ -35,20 +35,26 @@ class _Formula(str):
     """Oracle-side marker: a link-column cell the sink writes as a formula."""
 
 
+def _xstring(text: str) -> str:
+    """ST_Xstring escapes (``_xHHHH_``), applied to one cell's text."""
+    return xlsx_io._XSTRING_ESCAPE.sub(lambda m: f"_x{ord(m.group()):04X}_", text)
+
+
 def _oracle_cell(ref: str, value: object, style: int) -> str:
     s = f' s="{style}"' if style else ""
     if value is None:
         return f'<c r="{ref}"{s}/>'
     if isinstance(value, _Formula):
-        return f'<c r="{ref}"{s}><f>{escape(str(value))}</f></c>'
+        return f'<c r="{ref}"{s}><f>{escape(_xstring(str(value)))}</f></c>'
     if isinstance(value, bool):
         return f'<c r="{ref}"{s} t="b"><v>{1 if value else 0}</v></c>'
     if isinstance(value, (datetime, date)):
         return f'<c r="{ref}"{s}><v>{to_serial(value)}</v></c>'
     if isinstance(value, (int, float)):
         return f'<c r="{ref}"{s}><v>{value}</v></c>'
-    text = escape(str(value))
-    space = ' xml:space="preserve"' if text != text.strip() else ""
+    raw = str(value)
+    text = escape(_xstring(raw))
+    space = ' xml:space="preserve"' if raw != raw.strip() else ""
     return f'<c r="{ref}"{s} t="inlineStr"><is><t{space}>{text}</t></is></c>'
 
 
@@ -92,7 +98,9 @@ def _link_cell(v):
 
 
 TEXT = st.text(
-    alphabet=st.sampled_from(list("ab<>&=(\"' \t\n") + ["\xa0", "　", "\x1c", " ", "é"]),
+    alphabet=st.sampled_from(
+        list("ab<>&=(\"' \t\n\r_x0F") + ["\xa0", "　", "\x1c", "\x0b", "\ufffe", " ", "é"]
+    ),
     max_size=8,
 )
 LINK = st.one_of(
