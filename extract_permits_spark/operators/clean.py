@@ -82,6 +82,20 @@ def normalize_pin_legacy(c: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# P6 — universe PIN key: zero-pad to 14, a longer value kept whole (lpad
+# alone would truncate it into some other parcel's PIN). One rule for J6's
+# membership key and the review workbook's universe sheet, whose COUNTIF
+# guard checks the same membership. Reference: chicago/permit_cleaning.py:
+# 438,444-448 (J6 set membership), :1127-1131 (universe sheet).
+# ---------------------------------------------------------------------------
+
+
+def universe_pin(c: Column | str) -> Column:
+    pin = (F.col(c) if isinstance(c, str) else c).cast("string")
+    return F.when(F.length(pin) < 14, F.lpad(pin, 14, "0")).otherwise(pin)
+
+
+# ---------------------------------------------------------------------------
 # P7 — dictionary regex abbreviation (folded regexp_replace chain).
 # Reference: shorten_applicant_names, chicago/permit_cleaning.py:668-689.
 # The mapping is applied in dict order, each as a regex over the running

@@ -24,9 +24,9 @@ from extract_permits_spark.operators.joins import anti_join_existing
 
 # canonical key column names follow the warehouse (iasworld.permit) side;
 # the permit frame already has an ``amount`` column, so that key joins
-# under ``amount_c``
+# under ``amount_key``
 KEYS = ["parid", "permdt", "amount", "note2", "user21", "user28", "user43"]
-JOIN_KEYS = ["amount_c" if k == "amount" else k for k in KEYS]
+JOIN_KEYS = ["amount_key" if k == "amount" else k for k in KEYS]
 
 
 def canonicalize_for_dedup(df: DataFrame) -> DataFrame:
@@ -48,7 +48,7 @@ def deduplicate_permits(permits: DataFrame, existing: DataFrame) -> DataFrame:
     ``existing`` carries the warehouse column names (KEYS); ``permits`` is
     canonicalized first.
     """
-    keyed = canonicalize_for_dedup(permits).withColumnRenamed("amount_key", "amount_c")
+    keyed = canonicalize_for_dedup(permits)
     probe = existing.select(
         *[
             F.col(k).cast("decimal(38,2)").alias(j) if k != j else F.col(k)

@@ -175,6 +175,14 @@ _AUDIT_BASE = "74fe6f18bead307f0a38add524aa284c5b721fd2"
 # used; x1_explode_pipe_list, x3_unpivot and permit_pipeline_* keep their
 # optimized plans (tools/registry_plans.py at sf0.001: all entries equal
 # the parent commit's) and match their oracles at sf0.01.
+# The one review-workbook contract is value-neutral too: excel_sink lost
+# a layout no caller reached (specs/errors_col unset), and xlsx_review_
+# roundtrip imports only the unchanged read_reviewed_workbook. clean's new
+# universe_pin (the universe sheet's rule, moved from excel_sink) and
+# dedup's amount_key probe name (in place of the amount_c rename) reach
+# only validated_permits: at sf0.001 every registry plan but permit_
+# pipeline_upload/_review (queued in (b)) equals the parent commit's, and
+# its rows at sf0.01 are identical with and without a warehouse frame.
 _AUDIT_HYGIENE_MODULES: set[str] = {
     "extract_permits_spark.operators.clean",
     "extract_permits_spark.operators.dedup",

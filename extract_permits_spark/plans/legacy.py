@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from extract_permits_spark.operators.clean import (
+    DISPLAY_DATE_FMT,
     drop_blocklisted_pins,
     ensure_columns,
     excel_serial_to_date,
@@ -66,7 +67,7 @@ def run_legacy_pipeline(
     if serial_dates:
         df = df.withColumn(
             "issue_date",
-            F.date_format(excel_serial_to_date("issue_date"), "M/d/yyyy"),
+            F.date_format(excel_serial_to_date("issue_date"), DISPLAY_DATE_FMT),
         )
     df = crosswalk_override(  # J3
         df, crosswalk, key="pin", crosswalk_key="original_pin", override_col="meta_pin"

@@ -31,6 +31,7 @@ from extract_permits_spark.operators.clean import (
     pin_link_from_digits,
     round_amount,
     strip_pin,
+    universe_pin,
 )
 from extract_permits_spark.operators.dedup import deduplicate_permits
 from extract_permits_spark.operators.enrich import tag_keywords
@@ -139,7 +140,7 @@ def validated_permits(
         cleaned = deduplicate_permits(cleaned, existing)  # P13+J2
     flagged = semi_join_membership(  # J6
         cleaned,
-        universe.select(F.lpad("pin", 14, "0").alias("pin")),
+        universe.select(universe_pin("pin").alias("pin")),
         left_key="pin",
         right_key="pin",
         flag_col="in_universe",

@@ -25,6 +25,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from extract_permits_spark.operators.clean import universe_pin
 from extract_permits_spark.sinks.xlsx_io import (
     CondFormat,
     DataValidation,
@@ -127,83 +128,51 @@ def _collect(df: DataFrame) -> pa.Table:
 def save_workbook(
     df: DataFrame,
     path: str,
-    specs=None,
+    specs,
+    errors_col: str,
     pin_universe: DataFrame | None = None,
-    errors_col: str | None = None,
     checked: bool = False,
 ) -> None:
-    """S8: render a (small, already review-sized) DataFrame to a formatted
-    xlsx on the driver — bold frozen header (header ROW frozen too,
-    matching the reference's freeze_panes(1, FREEZE_COLS)), per-spec
-    column widths,
-    autofilter, protected sheet, plus the 'Universe of Valid PINs' sheet
-    with zero-padded + hyphenated PINs (save_xlsx_file,
-    chicago/permit_cleaning.py:911-1135). Both sheets are collected with
-    one Arrow pass each and rendered column by column (``xlsx_io``).
-    Cells of the engine-built link columns (LINK_COLUMNS, P10/P11) whose
-    value starts with '=' are written as formula cells, like the
-    reference's write_formula branch (:992-1001); every other string is
-    written as text.
-
-    Review-workbook extras (S8 presentation surface): pass ``errors_col``
-    (the E2 message column) to append 'Ready' + 'Errors' presentation
-    columns and emit the reference's status traffic lights
-    (TRAFFIC_LIGHT_RULES, ref :1027-1053) plus per-column data validations
-    from ``ColumnSpec.validation`` and the Ready-checkbox gate
-    (ref :149-157, :1055-1084), each over its column's data range with
-    {COL}/{ERRORS_COL} filled with column letters (ref :1070-1077). Every
-    row's checkbox gets ``checked`` (the reference's upload variant
-    pre-checks all rows and then SKIPS the checkbox validation so Excel
-    won't reset it on open, ref :1061-1065).
+    """S8: render a (small, already review-sized) DataFrame to the
+    reference's review workbook on the driver (save_xlsx_file,
+    chicago/permit_cleaning.py:911-1135), collected with one Arrow pass
+    per sheet and rendered column by column (``xlsx_io``). 'Permits' holds
+    the ``specs`` columns (headers, widths) in list order, then 'Ready'
+    (every box ``checked``) and 'Errors' (``errors_col``, the E2 messages);
+    bold header, frozen header row and three columns, autofilter,
+    protection. A spec whose engine name is in LINK_COLUMNS (P10/P11)
+    writes a value starting with '=' as a formula cell (write_formula,
+    :992-1001); every other string is text. Over the data rows: the
+    traffic lights (:1027-1053), each spec's ``validation`` and the
+    Ready-checkbox gate (:149-157, :1055-1084), {COL}/{ERRORS_COL} filled
+    with column letters (:1070-1077); the pre-checked upload variant skips
+    the gate so Excel won't reset it on open (:1061-1065). ``pin_universe``
+    adds the 'Universe of Valid PINs' sheet, keyed by ``clean.universe_pin``
+    and hyphenated (:1127-1131); without it the PIN validation that reads
+    that sheet is left out.
     """
-    review_mode = errors_col is not None
     # reference column layout puts Ready at col 1; engine-side the two
     # status rails ride at the end, after the spec columns in list order
-    status = (
-        [
-            F.lit(bool(checked)).alias("Ready"),
-            F.coalesce(F.col(errors_col).cast("string"), F.lit("")).alias("Errors"),
-        ]
-        if review_mode
-        else []
+    ready, errors = _col_letter(len(specs)), _col_letter(len(specs) + 1)
+    messages = F.coalesce(F.col(errors_col).cast("string"), F.lit(""))
+    table = _collect(
+        presentation_frame(df, specs, F.lit(checked).alias("Ready"), messages.alias("Errors"))
     )
-    widths = None
-    validation_specs: list[tuple[int, dict]] = []
-    if specs is not None:
-        widths = [s.width for s in specs] + ([10, 40] if review_mode else [])
-        validation_specs = [(i, s.validation) for i, s in enumerate(specs) if s.validation]
-        df = presentation_frame(df, specs, *status)
-    elif review_mode:
-        df = df.select(*[c for c in df.columns if c != errors_col], *status)
-    header = list(df.columns)
-    table = _collect(df)
     n_rows = table.num_rows
-
     cond_formats: list[CondFormat] = []
     validations: list[DataValidation] = []
-    if review_mode and n_rows:  # reference gates on n_data_rows > 0 (:1028)
-        errors_letter = _col_letter(header.index("Errors"))
-        ready_letter = _col_letter(header.index("Ready"))
-        data_range = f"A2:{_col_letter(len(header) - 1)}{n_rows + 1}"
+    if n_rows:  # reference gates on n_data_rows > 0 (:1028)
         cond_formats = [
-            CondFormat(
-                data_range,
-                formula.format(ERRORS_COL=errors_letter, READY_COL=ready_letter),
-                color,
-            )
-            for formula, color in TRAFFIC_LIGHT_RULES
+            CondFormat(f"A2:{errors}{n_rows + 1}", f.format(ERRORS_COL=errors, READY_COL=ready), c)
+            for f, c in TRAFFIC_LIGHT_RULES
         ]
-        if not checked:
-            # upload variant skips the checkbox gate (ref :1061-1065)
-            validation_specs.append((header.index("Ready"), READY_VALIDATION))
-        for ci, v in validation_specs:
-            # the PIN universe COUNTIF references the universe sheet; only
-            # emit it when that sheet is being written
+        guards = [(i, s.validation) for i, s in enumerate(specs) if s.validation]
+        for ci, v in guards + ([] if checked else [(len(specs), READY_VALIDATION)]):
             if pin_universe is None and "Universe of Valid PINs" in v.get("formula1", ""):
                 continue
             col = _col_letter(ci)
             formulas = {
-                k: v[k].format(COL=col, ERRORS_COL=errors_letter)
+                k: v[k].format(COL=col, ERRORS_COL=errors)
                 for k in ("formula1", "formula2")
                 if k in v
             }
@@ -212,23 +181,20 @@ def save_workbook(
     sheets = [
         SheetSpec(
             name="Permits",
-            header=header,
+            header=table.column_names,
             rows=table,
-            col_widths=widths,
-            freeze_cols=min(3, len(header)),
+            col_widths=[s.width for s in specs] + [10, 40],
+            freeze_cols=3,
             freeze_rows=1,
             autofilter=True,
             protect=True,
             cond_formats=cond_formats,
             validations=validations,
-            formula_cols=frozenset(i for i, h in enumerate(header) if h in LINK_COLUMNS),
+            formula_cols=frozenset(i for i, s in enumerate(specs) if s.name in LINK_COLUMNS),
         )
     ]
     if pin_universe is not None:
-        # zero-pad to 14; a longer value is kept whole, never truncated
-        pin = F.col(pin_universe.columns[0]).cast("string")
-        padded = F.when(F.length(pin) < 14, F.lpad(pin, 14, "0")).otherwise(pin)
-        universe = pin_universe.select(padded.alias("pin")).select(
+        universe = pin_universe.select(universe_pin(pin_universe.columns[0]).alias("pin")).select(
             "pin", hyphenated_pin("pin").alias("pin_hyphenated")
         )
         sheets.append(

@@ -31,6 +31,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from extract_permits_spark.operators.clean import DISPLAY_DATE_FMT
+
 # A rule is (error_message, predicate_builder); predicate True ⇒ INVALID.
 Rule = tuple[str, Callable[[Column], Column]]
 
@@ -39,7 +41,7 @@ Rule = tuple[str, Callable[[Column], Column]]
 class ColumnSpec:
     name: str  # canonical engine name
     header: str  # presentation header (xlsx sink)
-    src: str | None = None  # ingest column (city_name analog)
+    src: str  # ingest column (city_name analog)
     rules: Sequence[Rule] = ()
     width: int | None = None  # sink metadata
     # S8 cell-edit guard for the review workbook, mirroring the reference's
@@ -146,9 +148,9 @@ PERMIT_COLUMNS: list[ColumnSpec] = [
         src="issue_date",
         rules=[
             ("Missing issue date", required),
-            # display format m/d/Y — the reference validates the displayed
+            # P3's display format — the reference validates the displayed
             # date string (chicago/permit_cleaning.py:275-278)
-            ("Issue date is not a valid date", not_parseable_date("M/d/yyyy")),
+            ("Issue date is not a valid date", not_parseable_date(DISPLAY_DATE_FMT)),
         ],
         width=12,
         # reference :279-289 — Excel-side date floor
@@ -255,7 +257,7 @@ def organize_columns(df: DataFrame, keep_extra: Sequence[str] = ()) -> DataFrame
     have = set(df.columns)
     cols = []
     for s in PERMIT_COLUMNS:
-        if s.src and s.src in have:
+        if s.src in have:
             cols.append(F.col(s.src).alias(s.name))
         elif s.name in have:
             cols.append(F.col(s.name))

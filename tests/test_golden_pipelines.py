@@ -134,6 +134,42 @@ def test_golden_dedup_removes_seeded_overlap(spark, permits_raw, universe):
     assert sorted(r["permit_number"] for r in remaining) == ["100000002", "100000003"]
 
 
+def test_universe_pin_longer_than_14_is_kept_whole(spark, permits_raw, tmp_path):
+    """J6 and the workbook's universe sheet key the universe by one rule:
+    zero-pad to 14, keep a longer PIN whole. A 15-character universe PIN
+    whose first 14 characters are a permit's PIN is not that PIN, so the
+    permit row stays out of upload (lpad would truncate the universe PIN
+    into a match), and the universe sheet, which the PIN cell's COUNTIF
+    guard reads, shows it whole."""
+    from extract_permits_spark.plans.permits import validated_permits
+    from extract_permits_spark.sinks.excel_sink import save_workbook
+    from extract_permits_spark.sinks.xlsx_io import read_xlsx
+    from extract_permits_spark.specs import PERMIT_COLUMNS
+
+    universe = spark.createDataFrame(
+        [("120810000600001", "1208100006", "123 N MAIN ST", "2023", "City"),
+         ("12081000070000", "1208100007", "123 N MAIN ST", "2023", "City"),
+         ("81000070000", "0008100007", "1 ELM ST", "2023", "City")],
+        PIN_UNIVERSE_SCHEMA,
+    )
+    rows = validated_permits(permits_raw, universe).where(
+        F.col("permit_number") == "100000001"
+    )
+    assert {r["pin"]: r["in_universe"] for r in rows.collect()} == {
+        "12081000060000": False,
+        "12081000070000": True,
+    }
+    path = str(tmp_path / "review.xlsx")
+    save_workbook(
+        rows, path, specs=PERMIT_COLUMNS, errors_col="errors", pin_universe=universe.select("pin")
+    )
+    assert sorted(read_xlsx(path, "Universe of Valid PINs").rows) == [
+        ["00081000070000", "00-08-100-007-0000"],
+        ["120810000600001", "12-08-100-006-0000"],
+        ["12081000070000", "12-08-100-007-0000"],
+    ]
+
+
 LEGACY_ROWS = [
     # pin, PIN2, permit_number, issue_date (excel serial), amount, addr, name, note
     ("12-08-100-006-0000", "1208100007", "100012345", "45112", "1500",

@@ -889,6 +889,26 @@ def test_distributed_rank_counts_branch_reuses_range_exchange(spark):
         assert any("rangepartitioning" in ln for ln in reused), (name, plan)
 
 
+def _warehouse_frame(spark, raw, uni):
+    """An ``iasworld_permit`` frame that holds the fixture's first 20
+    permits (order keys 0-19), keyed as ``canonicalize_for_dedup`` keys
+    their cleaned rows, so the dedup anti-join removes those permits.
+    Collected into a local frame, so its plan is one ``LogicalRDD``."""
+    from pyspark.sql import functions as F
+
+    from extract_permits_spark.operators.dedup import canonicalize_for_dedup
+    from extract_permits_spark.plans.permits import clean_permits
+    from extract_permits_spark.sources.readers import IASWORLD_PERMIT_SCHEMA
+
+    keyed = canonicalize_for_dedup(
+        clean_permits(raw, uni).where(F.col("permit_number") < "100000020")
+    ).select(
+        "parid", "permdt", F.col("amount_key").alias("amount"),
+        "note2", "user21", "user28", "user43",
+    )
+    return spark.createDataFrame(keyed.collect(), IASWORLD_PERMIT_SCHEMA)
+
+
 def test_permit_chain_plan_shape(spark):
     """The §3.1 chain's staging, as ``validated_permits`` builds it over
     the fixtures, with and without a warehouse frame to dedup against:
@@ -899,20 +919,14 @@ def test_permit_chain_plan_shape(spark):
     staged piece is defined once, in operators/clean.py and
     operators/enrich.py — this pins that composing them keeps the plan."""
     import re
-    from decimal import Decimal
 
     from extract_permits_spark.plans.permits import (
         permits_from_tpch,
         validated_permits,
     )
-    from extract_permits_spark.sources.readers import IASWORLD_PERMIT_SCHEMA
 
     raw, uni = permits_from_tpch(spark, SF_DIR)
-    existing = spark.createDataFrame(
-        [("00000000000001", "1996-01-02 00:00:00.000", Decimal("1.00"),
-          "1 N,,CHICAGO, IL", "O", "100000001", "x")],
-        IASWORLD_PERMIT_SCHEMA,
-    )
+    existing = _warehouse_frame(spark, raw, uni)
     exchange = re.compile(r"^[\s:|+-]*(Exchange|BroadcastExchange|ReusedExchange)\b")
     for ex, n_exchanges in ((None, 7), (existing, 9)):
         qe = validated_permits(raw, uni, ex)._jdf.queryExecution()
@@ -947,20 +961,14 @@ def _validated_permits_plan_text(spark) -> str:
     subexpression aliases (``_common_expr_<n>``, numbered by a global
     counter) renumbered in order of first use."""
     import re
-    from decimal import Decimal
 
     from extract_permits_spark.plans.permits import (
         permits_from_tpch,
         validated_permits,
     )
-    from extract_permits_spark.sources.readers import IASWORLD_PERMIT_SCHEMA
 
     raw, uni = permits_from_tpch(spark, SF_DIR)
-    existing = spark.createDataFrame(
-        [("00000000000001", "1996-01-02 00:00:00.000", Decimal("1.00"),
-          "1 N,,CHICAGO, IL", "O", "100000001", "x")],
-        IASWORLD_PERMIT_SCHEMA,
-    )
+    existing = _warehouse_frame(spark, raw, uni)
     out = []
     for label, ex in (("no-existing", None), ("existing", existing)):
         plan = validated_permits(raw, uni, ex)._jdf.queryExecution().optimizedPlan()

@@ -199,13 +199,20 @@ def test_excel_render_real(spark):
     import tempfile
     import zipfile
 
+    from extract_permits_spark.sinks.xlsx_io import read_xlsx
+    from extract_permits_spark.specs import ColumnSpec
+
     df = spark.createDataFrame([("12081000060000", "HOUSE")], "pin string, work string")
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "out.xlsx")
-        excel_sink.save_workbook(df, p)
+        excel_sink.save_workbook(
+            df.withColumn("errors", F.lit("")), p,
+            specs=[ColumnSpec(c, c, src=c) for c in df.columns], errors_col="errors",
+        )
         with zipfile.ZipFile(p) as zf:
             assert zf.testzip() is None
             assert "xl/workbook.xml" in zf.namelist()
+        assert read_xlsx(p, "Permits").header == ["pin", "work", "Ready", "Errors"]
 
 
 def test_flag_filters(spark):

@@ -12,6 +12,7 @@ from datetime import date, datetime
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from extract_permits_spark.sinks.excel_sink import (
     FLAG_FILL_COLORS,
@@ -30,6 +31,12 @@ from extract_permits_spark.sinks.xlsx_io import (
     to_serial,
     write_xlsx,
 )
+from extract_permits_spark.specs import ColumnSpec
+
+
+def plain_specs(df):
+    """One spec per column, header = engine name = source column."""
+    return [ColumnSpec(c, c, src=c) for c in df.columns]
 
 
 @pytest.fixture()
@@ -150,11 +157,16 @@ def test_save_workbook_round_trip(spark):
     uni = spark.createDataFrame([("12081000060000",), ("1",)], "pin string")
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "review.xlsx")
-        save_workbook(df, p, pin_universe=uni)
+        save_workbook(
+            df.withColumn("errors", F.lit(None).cast("string")), p,
+            specs=plain_specs(df), errors_col="errors", pin_universe=uni,
+        )
         got = read_xlsx(p, "Permits")
-        assert got.header == ["pin", "work", "amount", "issue_date"]
-        assert got.rows[0] == ["12081000060000", "GARAGE <&> REPAIR", 1500, "2024-01-02"]
-        assert got.rows[1] == ["00000000000001", None, None, None]
+        assert got.header == ["pin", "work", "amount", "issue_date", "Ready", "Errors"]
+        assert got.rows[0] == [
+            "12081000060000", "GARAGE <&> REPAIR", 1500, "2024-01-02", False, ""
+        ]
+        assert got.rows[1] == ["00000000000001", None, None, None, False, ""]
         pins = read_xlsx(p, "Universe of Valid PINs")
         assert pins.rows[0] == ["12081000060000", "12-08-100-006-0000"]
         assert pins.rows[1] == ["00000000000001", "00-00-000-000-0001"]
@@ -166,14 +178,20 @@ def test_save_workbook_with_specs(spark):
 
     cols = PERMIT_COLUMNS[:3]
     df = spark.createDataFrame(
-        [tuple(f"v{i}" for i in range(len(cols)))],
-        ", ".join(f"{s.name} string" for s in reversed(cols)),
+        [tuple(f"v{i}" for i in range(len(cols) + 1))],
+        ", ".join(f"{s.name} string" for s in reversed(cols)) + ", errors string",
     )
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "o.xlsx")
-        save_workbook(df, p, specs=cols)
+        save_workbook(df, p, specs=cols, errors_col="errors")
         got = read_xlsx(p, "Permits")
-        assert got.header == [s.header for s in cols]
+        with zipfile.ZipFile(p) as zf:
+            xml = zf.read("xl/worksheets/sheet1.xml").decode()
+        assert got.header == [s.header for s in cols] + ["Ready", "Errors"]
+        assert got.rows == [["v2", "v1", "v0", False, "v3"]]
+    widths = [s.width for s in cols] + [10, 40]
+    for i, w in enumerate(widths, start=1):
+        assert f'<col min="{i}" max="{i}" width="{w}" customWidth="1"/>' in xml
 
 
 def test_reviewed_workbook_ingest(spark):
@@ -499,17 +517,43 @@ def test_save_workbook_link_column_writes_formula(spark):
     df = spark.createDataFrame([("12081000060000", link)], "pin string, pin_link string")
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "links.xlsx")
-        save_workbook(df, p)
+        save_workbook(
+            df.withColumn("errors", F.lit("")), p, specs=plain_specs(df), errors_col="errors"
+        )
+        got = read_xlsx(p, "Permits")
         with zipfile.ZipFile(p) as zf:
             xml = zf.read("xl/worksheets/sheet1.xml").decode()
-    assert '<f>HYPERLINK("https://www.cookcountyassessor.com/pin/' in xml
+    assert got.header == ["pin", "pin_link", "Ready", "Errors"]
+    assert '<c r="B2"><f>HYPERLINK("https://www.cookcountyassessor.com/pin/' in xml
+
+
+def test_save_workbook_formula_cells_follow_the_engine_name(spark):
+    """Formula cells follow a spec's engine name, not its header: a
+    ``pin_link`` column shown as "PIN Link" still renders its HYPERLINK
+    as a formula cell, and a text column headed "pin_link" does not."""
+    link = '=HYPERLINK("https://www.cookcountyassessor.com/pin/12081000060000", "12081000060000")'
+    df = spark.createDataFrame(
+        [(link, link, "")], "pin_link string, work_description string, errors string"
+    )
+    specs = [
+        ColumnSpec("pin_link", "PIN Link", src="pin_link"),
+        ColumnSpec("work_description", "pin_link", src="work_description"),
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "links.xlsx")
+        save_workbook(df, p, specs=specs, errors_col="errors")
+        got = read_xlsx(p, "Permits")
+        with zipfile.ZipFile(p) as zf:
+            xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    assert got.header == ["PIN Link", "pin_link", "Ready", "Errors"]
+    assert f'<c r="A2"><f>{link[1:]}</f>' in xml
+    assert got.rows[0][1] == link
+    assert xml.count("<f>") == 1
 
 
 def test_save_workbook_timestamps_keep_session_wall_time(spark):
     """Arrow collects timestamps as UTC instants; the sink writes the
     session's wall-clock time, the serial of the value the session shows."""
-    from pyspark.sql import functions as F
-
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
     try:
@@ -519,7 +563,10 @@ def test_save_workbook_timestamps_keep_session_wall_time(spark):
         shown = df.toPandas()
         with tempfile.TemporaryDirectory() as d:
             p = os.path.join(d, "ts.xlsx")
-            save_workbook(df, p)
+            save_workbook(
+                df.withColumn("errors", F.lit("")), p, specs=plain_specs(df), errors_col="errors"
+            )
+            header = read_xlsx(p, "Permits").header
             with zipfile.ZipFile(p) as zf:
                 xml = zf.read("xl/worksheets/sheet1.xml").decode()
     finally:
@@ -527,8 +574,9 @@ def test_save_workbook_timestamps_keep_session_wall_time(spark):
     assert shown["ts"][0] == datetime(2024, 3, 10, 1, 30)
     want_ts = to_serial(datetime(2024, 3, 10, 1, 30))
     want_d = to_serial(date(2024, 3, 10))
+    assert header == ["ts", "d", "Ready", "Errors"]
     assert f"<v>{want_ts}</v>" in xml and f"<v>{want_d}</v>" in xml
-    assert '<row r="3"></row>' in xml  # the null row stays empty
+    assert '<c r="A3"' not in xml and '<c r="B3"' not in xml  # the nulls stay empty
 
 
 def test_save_workbook_nullable_int_stays_integer(spark):
@@ -537,9 +585,13 @@ def test_save_workbook_nullable_int_stays_integer(spark):
     df = spark.createDataFrame([(1500,), (None,)], "amount int")
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "ints.xlsx")
-        save_workbook(df, p)
+        save_workbook(
+            df.withColumn("errors", F.lit("")), p, specs=plain_specs(df), errors_col="errors"
+        )
+        header = read_xlsx(p, "Permits").header
         with zipfile.ZipFile(p) as zf:
             xml = zf.read("xl/worksheets/sheet1.xml").decode()
+    assert header == ["amount", "Ready", "Errors"]
     assert '<c r="A2"><v>1500</v></c>' in xml
 
 
@@ -572,13 +624,15 @@ def test_save_workbook_formula_cells_only_in_link_columns(spark, rows):
     df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in FORMULA_RULE_COLUMNS))
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "formulas.xlsx")
-        save_workbook(df, p)
+        save_workbook(
+            df.withColumn("errors", F.lit("")), p, specs=plain_specs(df), errors_col="errors"
+        )
         got = read_xlsx(p)
         with zipfile.ZipFile(p) as zf:
             ws = ET.fromstring(zf.read("xl/worksheets/sheet1.xml"))
     ns = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
     formulas = {c.get("r"): c.find(f"{ns}f") for c in ws.iter(f"{ns}c")}
-    assert got.header == FORMULA_RULE_COLUMNS
+    assert got.header == FORMULA_RULE_COLUMNS + ["Ready", "Errors"]
     for ri, row in enumerate(rows):
         for ci, (name, text) in enumerate(zip(FORMULA_RULE_COLUMNS, row)):
             f = formulas.get(f"{'ABCD'[ci]}{ri + 2}")
